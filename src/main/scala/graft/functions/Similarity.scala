@@ -211,6 +211,22 @@ object Similarity {
   // per row and divides dot by the product — recomputing norms per pair
   // would double the hot-loop work)
 
+  /** [[dot]]'s fold over driver-side values: left to right over the
+    * shorter array, null elements skipped — DotProductDouble's loop, so a
+    * value computed here equals the column's to the bit. */
+  def dotOf(a: Array[java.lang.Double], b: Array[java.lang.Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var sum = 0.0
+    var i = 0
+    while (i < n) {
+      val x = a(i)
+      val y = b(i)
+      if (x != null && y != null) sum += x * y
+      i += 1
+    }
+    sum
+  }
+
   /** Number of random hyperplanes for the sign-LSH ANN index. Few planes →
     * coarse buckets; 4 gives 16 buckets (tuned for the testdata's ~random
     * embeddings — production corpora with real cluster structure use 8-16). */

@@ -92,10 +92,12 @@ object Sketches {
   /** Flajolet–Martin distinct-count estimate as a mergeable Aggregator.
     * Buffer = max trailing-zero rank seen; merge = max; finish = 2^max.
     * Zero input rows → 2^0 = 1 (the reference never hits this: empty batches
-    * are short-circuited, flajolent_stream.py:65-67). */
+    * are short-circuited, flajolent_stream.py:65-67). Null items (the text
+    * of a malformed line) are skipped, as SQL aggregates skip nulls. */
   class FmAggregator extends Aggregator[String, Int, Long] {
     def zero: Int = 0
-    def reduce(b: Int, s: String): Int = math.max(b, fmTrailingZeros(s))
+    def reduce(b: Int, s: String): Int =
+      if (s == null) b else math.max(b, fmTrailingZeros(s))
     def merge(a: Int, b: Int): Int = math.max(a, b)
     // clamp: rank ≥ 63 (p ≈ 2⁻⁶⁴ per distinct value) would make the Java
     // shift wrap (1L << 64 == 1); cap the estimate instead of wrapping

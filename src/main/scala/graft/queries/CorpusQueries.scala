@@ -1492,9 +1492,9 @@ object CorpusQueries {
     * vocabulary-side — a pair explode (fan-out = word length), one
     * partial+final pair count, a 1-row min_by argmax broadcast back, and
     * a map-only replace — with localCheckpoint pinning the vocab plan
-    * constant across rounds (the dedupComponents/kmeans iteration
-    * doctrine). The DuckDB oracle unrolls all [[BpeMerges]] rounds as
-    * CTEs and must reproduce every merge and count exactly. */
+    * constant across rounds (the dedupComponents iteration doctrine).
+    * The DuckDB oracle unrolls all [[BpeMerges]] rounds as CTEs and must
+    * reproduce every merge and count exactly. */
   def bpeTrain(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     bpeLoop(spark, dir)._1

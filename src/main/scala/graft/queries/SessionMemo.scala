@@ -22,7 +22,8 @@ import org.apache.spark.sql.SparkSession
   * (name, size, mtime) — so regenerating a tier mid-session forces a fresh
   * fit instead of serving a stale one. Values are expected to be
   * localCheckpoint'ed DataFrames (executor-resident blocks, constant-size
-  * plans), so a memo hit costs a block read, not a recomputation.
+  * plans) or driver-local frames, so a memo hit costs a block read or
+  * nothing, not a recomputation.
   */
 private[graft] object SessionMemo {
   private val memo = TrieMap[(String, String), AnyRef]()

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.functions.{Similarity, Text}
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftSqlBridge, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -262,12 +262,16 @@ object SimilarityQueries {
     * into dedup groups (keep the representative, drop the rest). Iterative
     * min-label propagation to fixpoint: each round is one distributed
     * join + aggregate (the Pregel shape); rounds = graph diameter, and
-    * near-dup clusters are near-cliques, so 2–3 rounds in practice. The
-    * driver loop holds only the convergence counter — labels never leave
-    * executors; `localCheckpoint` truncates lineage per round so plans
-    * stay constant-size at any iteration count. Emits (doc_id, component,
-    * is_keeper); singleton docs (no near-dup) are not emitted. Oracle:
-    * DuckDB recursive CTE over the same pair graph.
+    * near-dup clusters are near-cliques, so 2–3 rounds in practice. Each
+    * round is ONE action: its `localCheckpoint` carries the node's old
+    * label through the aggregate as `min(old)` next to the new `min(cand)`,
+    * and an observed `count_if(comp < old)` on that same job is the
+    * convergence test — no separate join + count per round. Labels never
+    * leave executors; the checkpoint truncates lineage so plans stay
+    * constant-size at any iteration count, and the superseded round's
+    * blocks are dropped as soon as the next round is materialized. Emits
+    * (doc_id, component, is_keeper); singleton docs (no near-dup) are not
+    * emitted. Oracle: DuckDB recursive CTE over the same pair graph.
     *
     * Session-memoized (content-addressed, the bucketed-table doctrine at
     * RelationalQueries.bucketedOrdersCustomer): five registered queries
@@ -282,29 +286,56 @@ object SimilarityQueries {
   def dedupComponents(spark: SparkSession, dir: String): DataFrame =
     SessionMemo.cached(spark,
       "components:" + SessionMemo.tableTag(dir, "documents"))(
-      computeComponents(spark, dir).localCheckpoint())
+      computeComponents(spark, dir))
 
   private def computeComponents(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val pairs = minhashDedup(spark, dir).select($"doc_a", $"doc_b")
     val edges = pairs.union(pairs.select($"doc_b", $"doc_a"))
       .toDF("src", "dst").localCheckpoint()
-    var labels = edges.select($"src".as("node")).distinct()
-      .withColumn("comp", $"node").localCheckpoint()
-    var changed = 1L
-    while (changed > 0) {
-      val neighborMin = edges.join(labels, $"src" === $"node")
-        .select($"dst".as("node"), $"comp")
-      val next = labels.unionByName(neighborMin)
-        .groupBy($"node").agg(min($"comp").as("comp")).localCheckpoint()
-      changed = next.join(labels.withColumnRenamed("comp", "old"), "node")
-        .filter($"comp" < $"old").count()
-      labels = next
-    }
-    labels
+    val (labels, _) = minLabels(edges)
+    val out = labels
       .select($"node".as("doc_id"), $"comp".as("component"),
         ($"node" === $"comp").as("is_keeper"))
       .orderBy($"doc_id")
+      .localCheckpoint()
+    GraftSqlBridge.dropCheckpoint(labels)
+    GraftSqlBridge.dropCheckpoint(edges)
+    out
+  }
+
+  /** Min-label propagation to fixpoint over a symmetric (src, dst) edge
+    * frame — the loop behind [[dedupComponents]]. Returns the
+    * localCheckpoint'ed (node, comp) labels and, per round, the number of
+    * nodes whose label fell (the last entry is 0). A round aggregates
+    * (node, cand, old) rows: `self` carries each node's current label as
+    * both cand and old, `msgs` its neighbours' labels as cand. Round 1
+    * reads the edge list directly — every node starts labeled by itself,
+    * so its messages are the neighbour ids. */
+  private[graft] def minLabels(edges: DataFrame): (DataFrame, Vector[Long]) = {
+    import edges.sparkSession.implicits._
+    var self = edges.select($"src".as("node"), $"src".as("cand"), $"src".as("old"))
+    var msgs = edges.select($"dst".as("node"), $"src".as("cand"))
+    var labels: DataFrame = null
+    val rounds = Vector.newBuilder[Long]
+    var changed = 1L
+    while (changed > 0) {
+      val seen = Observation("min_labels")
+      val next = self.unionByName(msgs, allowMissingColumns = true)
+        .groupBy($"node").agg(min($"cand").as("comp"), min($"old").as("old"))
+        .observe(seen, count_if($"comp" < $"old").as("changed"))
+        .select($"node", $"comp")
+        .localCheckpoint()
+      changed = seen.get("changed").asInstanceOf[Long]
+      rounds += changed
+      // the superseded round's blocks: the new checkpoint no longer reads them
+      if (labels != null) GraftSqlBridge.dropCheckpoint(labels)
+      labels = next
+      self = labels.select($"node", $"comp".as("cand"), $"comp".as("old"))
+      msgs = edges.join(labels, $"src" === $"node")
+        .select($"dst".as("node"), $"comp".as("cand"))
+    }
+    (labels, rounds.result())
   }
 
   /** The deduplicated corpus — the pipeline's end product: every document
@@ -700,71 +731,119 @@ object SimilarityQueries {
     *
     * Init = the k lowest-vec_id vectors (the former fixed seeds, so results
     * are deterministic with no runtime RNG); each round assigns every
-    * vector to its nearest centroid by cosine (argmax, tie → lowest cid —
-    * one crossJoin against a broadcast k-row frame, exactly the assignment
-    * join the querying operators already run) and recomputes per-cell means
-    * as a posexplode → (cid, dim) partial+final aggregate. The
-    * dedupComponents iteration shape: driver holds only the loop counter,
-    * vectors never leave executors, `localCheckpoint` keeps the k-row
-    * centroid plan constant-size across rounds. Cells that lose all
-    * members keep their previous centroid. Means are rounded to 6 dp so
-    * centroid bits — and therefore downstream IVF assignment — do not
-    * depend on partition fold order (fold-order noise on a cell mean is
-    * ~1e-15, nine orders below the rounding grid), which also makes the
+    * vector to its nearest centroid by cosine (argmax, tie → lowest cid)
+    * and recomputes per-cell means as a posexplode → (cid, dim) partial+
+    * final aggregate. The k centroids are k rows, so they live on the
+    * driver between rounds: a round is one Spark action — the assignment
+    * is a row-local [[nearestCentroid]] over the driver-held centroids
+    * (no n×k crossJoin, no argmax shuffle) feeding the mean aggregate,
+    * whose k·dim rows are collected to build the next centroids. Vectors
+    * never leave executors, and no round needs a checkpoint. Cells that
+    * lose all members keep their previous centroid. Means are rounded to
+    * 6 dp so centroid bits — and therefore downstream IVF assignment — do
+    * not depend on partition fold order (fold-order noise on a cell mean
+    * is ~1e-15, nine orders below the rounding grid), which also makes the
     * whole iteration SQL-expressible: q_kmeans_centroids carries a DuckDB
-    * oracle with the two Lloyd rounds unrolled as CTEs. */
+    * oracle with the two Lloyd rounds unrolled as CTEs.
+    *
+    * Returns a k-row (cid, cv, cn) local frame: consumers broadcast it
+    * with no job. */
   private[graft] def kmeansCentroids(emb: DataFrame, k: Int, iters: Int): DataFrame = {
-    import emb.sparkSession.implicits._
+    val spark = emb.sparkSession
+    import spark.implicits._
+    val ansi = spark.conf.get("spark.sql.ansi.enabled").toBoolean
     var cents = emb.filter($"vec_id" < k)
-      .select($"vec_id".as("cid"), $"v".as("cv"),
-        Similarity.l2norm($"v").as("cn"))
-      .localCheckpoint()
-    // own norm column (one map-only pass) so the assignment expression has
-    // a single dot product per row — norms are never recomputed per pair
+      .select($"vec_id".cast("long"), $"v").collect()
+      .map(r => Centroid(r.getLong(0), boxed(r.getSeq[java.lang.Double](1))))
+      .sortBy(_.cid)
+    // own norm column (one map-only pass) so each centroid costs a single
+    // dot product per row — vector norms are never recomputed per pair
     val base = emb.select($"vec_id", $"v")
       .withColumn("vn", Similarity.l2norm($"v"))
-    // argmax as a partial+final max_by aggregate (VERDICT r4 #4): the n×k
-    // assignment reduces map-side to one row per vec_id instead of
-    // shuffling all n×k scored rows into a per-vec window sort. Ordering
-    // key struct(ccos, -cid) is total (cids distinct), so the result is
-    // deterministic and identical to the old row_number()=1 plan:
-    // max ccos, tie → lowest cid.
-    for (_ <- 0 until iters) {
-      val assigned = base.crossJoin(broadcast(cents))
-        .withColumn("ccos", Similarity.dot($"v", $"cv") / ($"vn" * $"cn"))
-        .groupBy($"vec_id")
-        .agg(max_by(struct($"cid", $"v"), struct($"ccos", -$"cid")).as("best"))
-        .select($"best.cid".as("cid"), $"best.v".as("v"))
-      val means = assigned
+    for (_ <- 0 until iters if cents.nonEmpty) {
+      val means = base
+        .select(nearestCentroid(cents, ansi)($"v", $"vn").as("cid"), $"v")
         .select($"cid", posexplode($"v").as(Seq("dim", "x")))
         .groupBy($"cid", $"dim").agg(round(avg($"x"), 6).as("m"))
-        .groupBy($"cid")
-        .agg(transform(array_sort(collect_list(struct($"dim", $"m"))),
-          s => s.getField("m")).as("cv"))
-      val prev = cents
-      cents = cents.as("old")
-        .join(means.as("nw"), Seq("cid"), "left")
-        .select($"cid", coalesce($"nw.cv", $"old.cv").as("cv"))
-        .withColumn("cn", Similarity.l2norm($"cv"))
-        .localCheckpoint()
-      // superseded Lloyd round (VERDICT r12 #5 cold-pass hygiene): the new
-      // eager checkpoint no longer reads these blocks
-      org.apache.spark.sql.GraftSqlBridge.dropCheckpoint(prev)
+        .collect()
+        .groupBy(_.getLong(0))
+        .map { case (cid, rows) =>
+          cid -> rows.sortBy(_.getInt(1))
+            .map(r => if (r.isNullAt(2)) null else java.lang.Double.valueOf(r.getDouble(2)))
+        }
+      cents = cents.map(c => means.get(c.cid).fold(c)(cv => Centroid(c.cid, cv)))
     }
-    cents
+    centroidFrame(spark, cents.toSeq)
   }
+
+  /** Driver-held centroids as a (cid, cv, cn) local frame. */
+  private[graft] def centroidFrame(spark: SparkSession, cents: Seq[Centroid]): DataFrame = {
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("cid", "long").add("cv", "array<double>").add("cn", "double")
+    spark.createDataFrame(java.util.Arrays.asList(cents.map(c =>
+      org.apache.spark.sql.Row(c.cid, Option(c.cv).map(_.toSeq).orNull, c.cn)): _*), schema)
+  }
+
+  private def boxed(v: scala.collection.Seq[java.lang.Double]): Array[java.lang.Double] =
+    if (v == null) null else v.toArray
+
+  /** One driver-held Lloyd centroid. `cv` and its norm `cn` keep the SQL
+    * nulls of the columns they stand for (a null seed vector, a null mean
+    * element), and `cn` is [[Similarity.l2norm]]'s value: the square root
+    * of [[Similarity.dotOf]] — the same fold — of `cv` with itself. */
+  private[graft] final case class Centroid(cid: Long, cv: Array[java.lang.Double]) {
+    val cn: java.lang.Double =
+      if (cv == null) null else math.sqrt(Similarity.dotOf(cv, cv))
+  }
+
+  /** Row-local nearest centroid by cosine: the exact argmax of
+    * `max_by(cid, struct(dot(v, cv) / (vn * cn), -cid))` over a crossJoin
+    * against `cents`, without the join. Cosines follow `dot_product_d`'s
+    * fold ([[Similarity.dotOf]]) and SQL division (a null operand gives
+    * null; a zero divisor gives null, or fails under ANSI mode as the
+    * Spark `/` does); the order is SQL's: highest cosine wins, NaN above
+    * every number, -0.0 equal to 0.0, null below everything, ties → lowest
+    * cid. The centroids travel in the UDF's closure, not in generated code.
+    * `cents` must be sorted by cid and non-empty. */
+  private[graft] def nearestCentroid(cents: Array[Centroid], ansi: Boolean)
+      : org.apache.spark.sql.expressions.UserDefinedFunction =
+    udf { (v: Seq[java.lang.Double], vn: java.lang.Double) =>
+      val x = boxed(v)
+      def cosine(c: Centroid): java.lang.Double =
+        if (x == null || c.cv == null || vn == null) null
+        else {
+          val d = vn * c.cn
+          if (d == 0.0) {
+            if (ansi) throw new ArithmeticException(
+              "[DIVIDE_BY_ZERO] Division by zero in the nearest-centroid cosine.")
+            null
+          } else Similarity.dotOf(x, c.cv) / d
+        }
+      var best = cents(0).cid
+      var bestCos = cosine(cents(0))
+      var i = 1
+      while (i < cents.length) {
+        val cos = cosine(cents(i))
+        val above = cos != null && (bestCos == null ||
+          org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+            .compareDoubles(cos, bestCos) > 0)
+        if (above) { best = cents(i).cid; bestCos = cos }
+        i += 1
+      }
+      best
+    }
 
   /** Lloyd rounds for the IVF/dedup coarse quantizers: 2 is the sweet spot
     * — the first round does most of the inertia drop, and each round costs
-    * one n×k assignment join at query time scale. */
+    * one n×k assignment pass at query time scale. */
   val KmeansIters = 2
 
   /** The session's fitted cosine quantizer over the standard embedding
     * catalog — [[SessionMemo]]-cached: q_kmeans_centroids, IVF-flat,
     * SemDeDup and the exact metric join all consume the SAME k=16 fit, and
     * without the memo each pays the Lloyd rounds again for bit-identical
-    * centroids ([[kmeansCentroids]] ends every round in a localCheckpoint,
-    * so the cached frame is already executor-materialized). */
+    * centroids ([[kmeansCentroids]] returns a driver-local frame, so the
+    * cached fit costs its consumers no job). */
   private def fittedCentroids(spark: SparkSession, dir: String, k: Int)
       : DataFrame =
     SessionMemo.cached(spark,

@@ -35,6 +35,13 @@ class SketchSpec extends AnyFunSuite {
     }
   }
 
+  test("FM aggregator skips null items (a malformed line's text)") {
+    val fm = new Sketches.FmAggregator
+    val withNulls = List(null, "hello", null, "world").foldLeft(fm.zero)(fm.reduce)
+    assert(withNulls == List("hello", "world").foldLeft(fm.zero)(fm.reduce))
+    assert(fm.finish(fm.reduce(fm.zero, null)) == 1L) // all-null: the empty estimate
+  }
+
   test("CMS estimate >= true count and merge is associative/commutative") {
     val agg = new Sketches.CmsAggregator()
     val rnd = new scala.util.Random(7)

@@ -225,6 +225,27 @@ class StreamingSpec extends SparkSpec {
     assert(fmEst.get >= 1L)
   }
 
+  test("fm job commits a batch holding a malformed line: its null text is " +
+    "skipped, as the md5(NULL) oracle skips it") {
+    implicit val ctx = sql.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft_fm").toString
+    val in = MemoryStream[String]
+    val rows = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val est = new java.util.concurrent.atomic.AtomicLong(-1L)
+    in.addData(tweetJson("hello", "2024-01-01 00:00:00", "x"),
+      "{malformed line",
+      tweetJson("world", "2024-01-01 00:00:01", "x"))
+    val q = graft.streaming.TrendJobs.fmJob(in.toDF(), s"$tmp/cp",
+      (b, _) => rows.set(b.count()),
+      (m, _) => est.set(m.collect()(0).getLong(0)))
+    q.awaitTermination()
+    assert(q.exception.isEmpty)
+    assert(q.lastProgress.batchId == 0L)
+    assert(rows.get == 3L, "the raw sink keeps the malformed row")
+    val fm = new Sketches.FmAggregator
+    assert(est.get == fm.finish(Seq("hello", "world").foldLeft(fm.zero)(fm.reduce)))
+  }
+
   test("checkpointed parquet sink: restart does not duplicate rows") {
     implicit val ctx = sql.sqlContext
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString
