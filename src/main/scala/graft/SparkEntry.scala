@@ -340,7 +340,7 @@ object SparkEntry {
        """ + kmeansCteBody("(SELECT k FROM semk)")
 
   /** Shared WITH-prefix of the PQ oracle family — the DuckDB replay of
-    * [[graft.queries.SimilarityQueries.kmeansL2]]: the embedding frame,
+    * [[graft.queries.SimilarityQueries.pqFit]]: the embedding frame,
     * all four sub-codebook fits (two L2 Lloyd rounds each from
     * lowest-vec_id seeds; argmin-d² assignment with tie → lowest cid;
     * 6-dp mean grid; empty cells keep their previous centroid) and the

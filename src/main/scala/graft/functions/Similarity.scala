@@ -207,9 +207,13 @@ object Similarity {
   def dot(a: Column, b: Column): Column = graft.expressions.ArrayOps.dotProduct(a, b)
 
   def l2norm(a: Column): Column = sqrt(dot(a, a))
-  // (no cosine(a,b) helper on purpose: every query precomputes norms once
-  // per row and divides dot by the product — recomputing norms per pair
-  // would double the hot-loop work)
+
+  /** Cosine of `a` and `b` from their precomputed norms `na` and `nb`
+    * (norms are computed once per row, never per pair). A zero norm makes
+    * the cosine null, under ANSI mode too, so an all-zero embedding ranks
+    * as a null cosine instead of failing the query. */
+  def cosine(a: Column, b: Column, na: Column, nb: Column): Column =
+    dot(a, b) / nullif(na * nb, lit(0.0))
 
   /** [[dot]]'s fold over driver-side values: left to right over the
     * shorter array, null elements skipped — DotProductDouble's loop, so a

@@ -607,7 +607,7 @@ object SimilarityQueries {
     val scored = emb.crossJoin(broadcast(queries))
       .filter($"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id".as("neighbor_id"),
-        round(Similarity.dot($"qv", $"v") / ($"qn" * $"nrm"), 6).as("cosine"))
+        round(Similarity.cosine($"qv", $"v", $"qn", $"nrm"), 6).as("cosine"))
     val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"neighbor_id")
     scored.withColumn("rank", row_number().over(w))
       .filter($"rank" <= 10)
@@ -650,7 +650,7 @@ object SimilarityQueries {
     val scored = emb.crossJoin(broadcast(queries))
       .filter($"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id".as("cid"), $"v", $"nrm",
-        round(Similarity.dot($"qv", $"v") / ($"qn" * $"nrm"), 6).as("cos"))
+        round(Similarity.cosine($"qv", $"v", $"qn", $"nrm"), 6).as("cos"))
     val wq = Window.partitionBy($"query_id").orderBy($"cos".desc, $"cid")
     val cand = scored.withColumn("rn", row_number().over(wq))
       .filter($"rn" <= MmrCandidates)
@@ -662,7 +662,7 @@ object SimilarityQueries {
         $"x.query_id" === $"y.query_id" && $"x.cid" =!= $"y.cid")
       .select($"x.query_id".as("query_id"), $"x.cid".as("a"),
         $"y.cid".as("b"),
-        round(Similarity.dot($"x.v", $"y.v") / ($"x.nrm" * $"y.nrm"), 6)
+        round(Similarity.cosine($"x.v", $"y.v", $"x.nrm", $"y.nrm"), 6)
           .as("pcos"))
       .localCheckpoint()
     val slim = cand.select($"query_id", $"cid", $"cos")
@@ -725,113 +725,169 @@ object SimilarityQueries {
       .orderBy($"query_id", $"rank")
   }
 
-  /** Lloyd iterations for the coarse quantizers: distributed k-means over a
-    * (vec_id, v) frame — VERDICT r2 #5, composing the [[labelCentroids]]
-    * building block into the ANN/dedup operators.
-    *
-    * Init = the k lowest-vec_id vectors (the former fixed seeds, so results
-    * are deterministic with no runtime RNG); each round assigns every
-    * vector to its nearest centroid by cosine (argmax, tie → lowest cid)
-    * and recomputes per-cell means as a posexplode → (cid, dim) partial+
-    * final aggregate. The k centroids are k rows, so they live on the
-    * driver between rounds: a round is one Spark action — the assignment
-    * is a row-local [[nearestCentroid]] over the driver-held centroids
-    * (no n×k crossJoin, no argmax shuffle) feeding the mean aggregate,
-    * whose k·dim rows are collected to build the next centroids. Vectors
-    * never leave executors, and no round needs a checkpoint. Cells that
-    * lose all members keep their previous centroid. Means are rounded to
-    * 6 dp so centroid bits — and therefore downstream IVF assignment — do
-    * not depend on partition fold order (fold-order noise on a cell mean
-    * is ~1e-15, nine orders below the rounding grid), which also makes the
-    * whole iteration SQL-expressible: q_kmeans_centroids carries a DuckDB
-    * oracle with the two Lloyd rounds unrolled as CTEs.
-    *
-    * Returns a k-row (cid, cv, cn) local frame: consumers broadcast it
-    * with no job. */
-  private[graft] def kmeansCentroids(emb: DataFrame, k: Int, iters: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val ansi = spark.conf.get("spark.sql.ansi.enabled").toBoolean
-    var cents = emb.filter($"vec_id" < k)
-      .select($"vec_id".cast("long"), $"v").collect()
-      .map(r => Centroid(r.getLong(0), boxed(r.getSeq[java.lang.Double](1))))
-      .sortBy(_.cid)
-    // own norm column (one map-only pass) so each centroid costs a single
-    // dot product per row — vector norms are never recomputed per pair
-    val base = emb.select($"vec_id", $"v")
-      .withColumn("vn", Similarity.l2norm($"v"))
-    for (_ <- 0 until iters if cents.nonEmpty) {
-      val means = base
-        .select(nearestCentroid(cents, ansi)($"v", $"vn").as("cid"), $"v")
-        .select($"cid", posexplode($"v").as(Seq("dim", "x")))
-        .groupBy($"cid", $"dim").agg(round(avg($"x"), 6).as("m"))
-        .collect()
-        .groupBy(_.getLong(0))
-        .map { case (cid, rows) =>
-          cid -> rows.sortBy(_.getInt(1))
-            .map(r => if (r.isNullAt(2)) null else java.lang.Double.valueOf(r.getDouble(2)))
-        }
-      cents = cents.map(c => means.get(c.cid).fold(c)(cv => Centroid(c.cid, cv)))
-    }
-    centroidFrame(spark, cents.toSeq)
+  /** Lloyd's distance for [[lloyd]]: a vector's score against one centroid
+    * and whether the highest or the lowest score wins. Scores fold with
+    * [[Similarity.dotOf]] — `dot_product_d`'s fold — so each one equals its
+    * Spark column to the bit; a null vector or centroid scores null. */
+  private[graft] sealed abstract class Metric(val higherWins: Boolean) {
+    /** The norm term of one side, computed once per vector and centroid. */
+    def norm(v: Array[java.lang.Double]): java.lang.Double
+    def score(x: Array[java.lang.Double], xn: java.lang.Double,
+              c: Array[java.lang.Double], cn: java.lang.Double): java.lang.Double
   }
 
-  /** Driver-held centroids as a (cid, cv, cn) local frame. */
-  private[graft] def centroidFrame(spark: SparkSession, cents: Seq[Centroid]): DataFrame = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("cid", "long").add("cv", "array<double>").add("cn", "double")
-    spark.createDataFrame(java.util.Arrays.asList(cents.map(c =>
-      org.apache.spark.sql.Row(c.cid, Option(c.cv).map(_.toSeq).orNull, c.cn)): _*), schema)
+  /** Cosine, highest wins: dot(v, c) / nullif(‖v‖·‖c‖, 0), the
+    * [[Similarity.cosine]] column, so a zero norm scores null. */
+  private[graft] case object Cosine extends Metric(higherWins = true) {
+    def norm(v: Array[java.lang.Double]): java.lang.Double =
+      if (v == null) null else math.sqrt(Similarity.dotOf(v, v))
+    def score(x: Array[java.lang.Double], xn: java.lang.Double,
+              c: Array[java.lang.Double], cn: java.lang.Double): java.lang.Double =
+      if (x == null || c == null) null
+      else {
+        val d = xn * cn
+        if (d == 0.0) null else Similarity.dotOf(x, c) / d
+      }
+  }
+
+  /** Squared L2, lowest wins: d² = (‖v‖² − 2·v·c) + ‖c‖² in exactly that
+    * operation order, the expression the PQ oracle evaluates. */
+  private[graft] case object SquaredL2 extends Metric(higherWins = false) {
+    def norm(v: Array[java.lang.Double]): java.lang.Double =
+      if (v == null) null else Similarity.dotOf(v, v)
+    def score(x: Array[java.lang.Double], xn: java.lang.Double,
+              c: Array[java.lang.Double], cn: java.lang.Double): java.lang.Double =
+      if (x == null || c == null) null
+      else (xn - 2.0 * Similarity.dotOf(x, c)) + cn
+  }
+
+  /** One driver-held Lloyd centroid. `cv` keeps the SQL nulls of the column
+    * it stands for (a null seed vector, a null mean element). */
+  private[graft] final case class Centroid(cid: Long, cv: Array[java.lang.Double])
+
+  /** A vector's nearest centroid and its score. */
+  private[graft] final case class Nearest(cid: Long, score: java.lang.Double)
+
+  /** A driver-held Lloyd fit: per key, its centroids sorted by cid. */
+  private[graft] final case class LloydFit(metric: Metric, cents: Map[Int, Array[Centroid]]) {
+    /** The fit as a local (key, cid, cv, norm) frame: consumers broadcast
+      * it with no job. */
+    def frame(spark: SparkSession): DataFrame = {
+      val schema = new org.apache.spark.sql.types.StructType()
+        .add("key", "int").add("cid", "long").add("cv", "array<double>")
+        .add("norm", "double")
+      spark.createDataFrame(java.util.Arrays.asList(
+        (for ((key, cs) <- cents.toSeq.sortBy(_._1); c <- cs.toSeq) yield
+          org.apache.spark.sql.Row(key, c.cid, Option(c.cv).map(_.toSeq).orNull,
+            metric.norm(c.cv))): _*), schema)
+    }
+
+    /** `(key, v) → (cid, score)`: see [[nearestCentroid]]. */
+    def nearest: org.apache.spark.sql.expressions.UserDefinedFunction =
+      nearestCentroid(metric, cents)
+  }
+
+  /** Lloyd iterations over a (key, vec_id, v) frame: one independent
+    * k-means per key, all keys fitted in the same rounds — the coarse
+    * quantizers fit one key, the PQ codebooks one key per subspace.
+    *
+    * Init = each key's k lowest-vec_id vectors (fixed seeds, so results
+    * are deterministic with no runtime RNG); each round assigns every
+    * vector to the best centroid of its key under `metric` (tie → lowest
+    * cid) and recomputes per-cell means as a posexplode → (key, cid, dim)
+    * partial+final aggregate. The centroids are key·k rows, so they live
+    * on the driver between rounds: a round is one Spark action — the
+    * assignment is the row-local [[nearestCentroid]] (no key·n·k crossJoin,
+    * no argmin shuffle) feeding the mean aggregate, whose key·k·dim rows
+    * are collected to build the next centroids. Vectors never leave
+    * executors, and no round needs a checkpoint. Cells that lose all
+    * members keep their previous centroid. Means are rounded to 6 dp so
+    * centroid bits — and therefore every downstream assignment and code —
+    * do not depend on partition fold order (fold-order noise on a cell
+    * mean is ~1e-15, nine orders below the rounding grid), which also
+    * makes the whole iteration SQL-expressible: the q_kmeans_centroids and
+    * PQ oracles replay the Lloyd rounds as unrolled DuckDB CTEs. */
+  private[graft] def lloyd(rows: DataFrame, k: Int, iters: Int, metric: Metric): LloydFit = {
+    import rows.sparkSession.implicits._
+    val seeds = rows.filter($"vec_id" < k)
+      .select($"key", $"vec_id".cast("long"), $"v").collect()
+      .groupBy(_.getInt(0))
+      .map { case (key, rs) =>
+        key -> rs.map(r => Centroid(r.getLong(1), boxed(r.getSeq[java.lang.Double](2))))
+          .sortBy(_.cid)
+      }
+    var fit = LloydFit(metric, seeds)
+    for (_ <- 0 until iters if seeds.nonEmpty) {
+      val means = rows
+        .select($"key", fit.nearest($"key", $"v").getField("cid").as("cid"), $"v")
+        .where($"cid".isNotNull) // a key without seeds has no cells
+        .select($"key", $"cid", posexplode($"v").as(Seq("dim", "x")))
+        .groupBy($"key", $"cid", $"dim").agg(round(avg($"x"), 6).as("m"))
+        .collect()
+        .groupBy(r => (r.getInt(0), r.getLong(1)))
+        .map { case (cell, rs) =>
+          cell -> rs.sortBy(_.getInt(2))
+            .map(r => if (r.isNullAt(3)) null else java.lang.Double.valueOf(r.getDouble(3)))
+        }
+      fit = fit.copy(cents = fit.cents.map { case (key, cs) =>
+        key -> cs.map(c => means.get((key, c.cid)).fold(c)(cv => Centroid(c.cid, cv)))
+      })
+    }
+    fit
+  }
+
+  /** The cosine coarse quantizer over a (vec_id, v) frame — VERDICT r2 #5,
+    * composing the [[labelCentroids]] building block into the ANN/dedup
+    * operators: a one-key [[lloyd]] fit returned as a k-row (cid, cv, cn)
+    * local frame. */
+  private[graft] def kmeansCentroids(emb: DataFrame, k: Int, iters: Int): DataFrame = {
+    import emb.sparkSession.implicits._
+    lloyd(emb.select(lit(0).as("key"), $"vec_id", $"v"), k, iters, Cosine)
+      .frame(emb.sparkSession).select($"cid", $"cv", $"norm".as("cn"))
   }
 
   private def boxed(v: scala.collection.Seq[java.lang.Double]): Array[java.lang.Double] =
     if (v == null) null else v.toArray
 
-  /** One driver-held Lloyd centroid. `cv` and its norm `cn` keep the SQL
-    * nulls of the columns they stand for (a null seed vector, a null mean
-    * element), and `cn` is [[Similarity.l2norm]]'s value: the square root
-    * of [[Similarity.dotOf]] — the same fold — of `cv` with itself. */
-  private[graft] final case class Centroid(cid: Long, cv: Array[java.lang.Double]) {
-    val cn: java.lang.Double =
-      if (cv == null) null else math.sqrt(Similarity.dotOf(cv, cv))
-  }
+  /** SQL's ascending order on nullable doubles: null first, NaN above
+    * every number, -0.0 equal to 0.0. */
+  private def sqlCompare(a: java.lang.Double, b: java.lang.Double): Int =
+    if (a == null) { if (b == null) 0 else -1 }
+    else if (b == null) 1
+    else org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(a, b)
 
-  /** Row-local nearest centroid by cosine: the exact argmax of
-    * `max_by(cid, struct(dot(v, cv) / (vn * cn), -cid))` over a crossJoin
-    * against `cents`, without the join. Cosines follow `dot_product_d`'s
-    * fold ([[Similarity.dotOf]]) and SQL division (a null operand gives
-    * null; a zero divisor gives null, or fails under ANSI mode as the
-    * Spark `/` does); the order is SQL's: highest cosine wins, NaN above
-    * every number, -0.0 equal to 0.0, null below everything, ties → lowest
-    * cid. The centroids travel in the UDF's closure, not in generated code.
-    * `cents` must be sorted by cid and non-empty. */
-  private[graft] def nearestCentroid(cents: Array[Centroid], ansi: Boolean)
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (v: Seq[java.lang.Double], vn: java.lang.Double) =>
-      val x = boxed(v)
-      def cosine(c: Centroid): java.lang.Double =
-        if (x == null || c.cv == null || vn == null) null
-        else {
-          val d = vn * c.cn
-          if (d == 0.0) {
-            if (ansi) throw new ArithmeticException(
-              "[DIVIDE_BY_ZERO] Division by zero in the nearest-centroid cosine.")
-            null
-          } else Similarity.dotOf(x, c.cv) / d
+  /** Row-local nearest centroid: `(key, v) → (cid, score)` over the
+    * centroids of the row's key, the exact result of the crossJoin argmax
+    * `max_by(cid, struct(score, -cid))` (a `higherWins` metric) or argmin
+    * `min_by(cid, struct(score, cid))` against `cents`, without the join.
+    * The order is SQL's struct order: NaN above every number, -0.0 equal to
+    * 0.0, null below everything — so a null cosine never wins and a null d²
+    * always does — and ties go to the lowest cid. A key with no centroids
+    * gives null. The centroids and their norms travel in the UDF's closure,
+    * not in generated code; each key's array must be sorted by cid. */
+  private[graft] def nearestCentroid(metric: Metric, cents: Map[Int, Array[Centroid]])
+      : org.apache.spark.sql.expressions.UserDefinedFunction = {
+    val normed = cents.map { case (key, cs) => key -> cs.map(c => (c, metric.norm(c.cv))) }
+    udf { (key: Int, v: Seq[java.lang.Double]) =>
+      normed.get(key).map { cs =>
+        val x = boxed(v)
+        val xn = metric.norm(x)
+        var best = cs(0)._1.cid
+        var bestScore = metric.score(x, xn, cs(0)._1.cv, cs(0)._2)
+        var i = 1
+        while (i < cs.length) {
+          val s = metric.score(x, xn, cs(i)._1.cv, cs(i)._2)
+          val order = sqlCompare(s, bestScore)
+          if (if (metric.higherWins) order > 0 else order < 0) {
+            best = cs(i)._1.cid
+            bestScore = s
+          }
+          i += 1
         }
-      var best = cents(0).cid
-      var bestCos = cosine(cents(0))
-      var i = 1
-      while (i < cents.length) {
-        val cos = cosine(cents(i))
-        val above = cos != null && (bestCos == null ||
-          org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-            .compareDoubles(cos, bestCos) > 0)
-        if (above) { best = cents(i).cid; bestCos = cos }
-        i += 1
-      }
-      best
+        Nearest(best, bestScore)
+      }.orNull
     }
+  }
 
   /** Lloyd rounds for the IVF/dedup coarse quantizers: 2 is the sweet spot
     * — the first round does most of the inertia drop, and each round costs
@@ -884,7 +940,7 @@ object SimilarityQueries {
     // assign every vector to its nearest centroid (argmax cosine, tie →
     // lowest cid) — max_by partial+final aggregate, not a window sort
     val assigned = emb.crossJoin(broadcast(centroids))
-      .withColumn("ccos", Similarity.dot($"v", $"cv") / ($"nrm" * $"cn"))
+      .withColumn("ccos", Similarity.cosine($"v", $"cv", $"nrm", $"cn"))
       .groupBy($"vec_id")
       .agg(max_by(struct($"cid", $"v", $"nrm"), struct($"ccos", -$"cid")).as("best"))
       .select($"vec_id", $"best.v".as("v"), $"best.nrm".as("nrm"), $"best.cid".as("cid"))
@@ -893,7 +949,7 @@ object SimilarityQueries {
     val scored = assigned.join(broadcast(queries),
         $"cid" === $"qcid" && $"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id".as("neighbor_id"),
-        round(Similarity.dot($"qv", $"v") / ($"qn" * $"nrm"), 6).as("cosine"))
+        round(Similarity.cosine($"qv", $"v", $"qn", $"nrm"), 6).as("cosine"))
     val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"neighbor_id")
     scored.withColumn("rank", row_number().over(w))
       .filter($"rank" <= 3)
@@ -923,7 +979,7 @@ object SimilarityQueries {
     val cents = fittedCentroids(spark, dir, DupCells)
     val assigned = emb.crossJoin(broadcast(cents))
       .withColumn("cdist",
-        unitDist(Similarity.dot($"v", $"cv") / ($"nrm" * $"cn")))
+        unitDist(Similarity.cosine($"v", $"cv", $"nrm", $"cn")))
       .groupBy($"vec_id")
       .agg(min_by(struct($"cid", $"v", $"nrm", $"cdist"),
         struct($"cdist", $"cid")).as("best"))
@@ -972,7 +1028,7 @@ object SimilarityQueries {
     val radii = assigned.groupBy($"cid").agg(max($"cdist").as("rad"))
     val centDist = cents.as("p").crossJoin(cents.as("q"))
       .select($"p.cid".as("ci"), $"q.cid".as("cj"),
-        unitDist(Similarity.dot($"p.cv", $"q.cv") / ($"p.cn" * $"q.cn")).as("cc"))
+        unitDist(Similarity.cosine($"p.cv", $"q.cv", $"p.cn", $"q.cn")).as("cc"))
     val cellPairs = centDist
       .join(radii.as("ri"), $"ci" === $"ri.cid")
       .join(radii.as("rj"), $"cj" === $"rj.cid")
@@ -996,7 +1052,7 @@ object SimilarityQueries {
       .join(build,
         $"cj" === $"b.cid" && salted("salt") === build("salt") &&
           $"a.vec_id" < $"b.vec_id")
-      .withColumn("cos", Similarity.dot($"a.v", $"b.v") / ($"a.nrm" * $"b.nrm"))
+      .withColumn("cos", Similarity.cosine($"a.v", $"b.v", $"a.nrm", $"b.nrm"))
       .filter($"cos" >= t)
       .select($"a.vec_id".as("vec_a"), $"b.vec_id".as("vec_b"),
         round($"cos", 6).as("cosine"))
@@ -1019,7 +1075,7 @@ object SimilarityQueries {
       .withColumn("nrm", Similarity.l2norm($"v"))
     emb.as("a").crossJoin(broadcast(emb.as("b")))
       .filter($"a.vec_id" < $"b.vec_id")
-      .withColumn("cos", Similarity.dot($"a.v", $"b.v") / ($"a.nrm" * $"b.nrm"))
+      .withColumn("cos", Similarity.cosine($"a.v", $"b.v", $"a.nrm", $"b.nrm"))
       .filter($"cos" >= EmbedDupThreshold)
       .select($"a.vec_id".as("vec_a"), $"b.vec_id".as("vec_b"),
         round($"cos", 6).as("cosine"))
@@ -1073,7 +1129,7 @@ object SimilarityQueries {
     val radii = assigned.groupBy($"cid").agg(max($"cdist").as("rad"))
     val centDist = cents.as("p").crossJoin(cents.as("q"))
       .select($"p.cid".as("ci"), $"q.cid".as("cj"),
-        unitDist(Similarity.dot($"p.cv", $"q.cv") / ($"p.cn" * $"q.cn")).as("cc"))
+        unitDist(Similarity.cosine($"p.cv", $"q.cv", $"p.cn", $"q.cn")).as("cc"))
     val cellPairs = centDist
       .join(radii.as("ri"), $"ci" === $"ri.cid")
       .join(radii.as("rj"), $"cj" === $"rj.cid")
@@ -1093,7 +1149,7 @@ object SimilarityQueries {
       .join(broadcast(cellPairs), $"b.cid" === $"cj")
       .join(broadcast(probes).as("a"),
         $"a.cid" === $"ci" && $"a.vec_id" =!= $"b.vec_id")
-      .withColumn("cos", Similarity.dot($"a.v", $"b.v") / ($"a.nrm" * $"b.nrm"))
+      .withColumn("cos", Similarity.cosine($"a.v", $"b.v", $"a.nrm", $"b.nrm"))
       .filter($"cos" >= t)
       // canonicalize: dot and norm products are bit-commutative, so the
       // (a,b)/(b,a) duplicates when BOTH endpoints are probes carry the
@@ -1149,7 +1205,7 @@ object SimilarityQueries {
     val scored = emb.join(broadcast(queries),
         $"bucket" === $"qbucket" && $"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id".as("neighbor_id"),
-        round(Similarity.dot($"qv", $"v") / ($"qn" * $"nrm"), 6).as("cosine"))
+        round(Similarity.cosine($"qv", $"v", $"qn", $"nrm"), 6).as("cosine"))
     val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"neighbor_id")
     scored.withColumn("rank", row_number().over(w))
       .filter($"rank" <= 3)
@@ -1199,7 +1255,7 @@ object SimilarityQueries {
     // cluster assignment (argmax cosine, tie → lowest cid) — max_by
     // partial+final aggregate, not a window sort
     val assigned = emb.crossJoin(broadcast(cents))
-      .withColumn("ccos", Similarity.dot($"v", $"cv") / ($"nrm" * $"cn"))
+      .withColumn("ccos", Similarity.cosine($"v", $"cv", $"nrm", $"cn"))
       .groupBy($"vec_id")
       .agg(max_by(struct($"cid", $"v", $"nrm"), struct($"ccos", -$"cid")).as("best"))
       .select($"vec_id", $"best.v".as("v"), $"best.nrm".as("nrm"), $"best.cid".as("cid"))
@@ -1213,7 +1269,7 @@ object SimilarityQueries {
       .join(build,
         $"a.cid" === $"b.cid" && probe("salt") === build("salt") &&
           $"a.vec_id" < $"b.vec_id")
-      .withColumn("cos", Similarity.dot($"a.v", $"b.v") / ($"a.nrm" * $"b.nrm"))
+      .withColumn("cos", Similarity.cosine($"a.v", $"b.v", $"a.nrm", $"b.nrm"))
       .filter($"cos" >= EmbedDupThreshold)
       .select($"a.cid".as("cluster"), $"a.vec_id".as("vec_a"),
         $"b.vec_id".as("vec_b"), round($"cos", 6).as("cosine"))
@@ -1299,7 +1355,7 @@ object SimilarityQueries {
     // hot-member frame AND the final split frame — recomputing the n×k
     // argmax crossJoin per consumer would triple the dominant scan
     val assigned = emb.crossJoin(broadcast(cents))
-      .withColumn("ccos", Similarity.dot($"v", $"cv") / ($"nrm" * $"cn"))
+      .withColumn("ccos", Similarity.cosine($"v", $"cv", $"nrm", $"cn"))
       .groupBy($"vec_id")
       .agg(max_by(struct($"cid", $"v", $"nrm"), struct($"ccos", -$"cid")).as("best"))
       .select($"vec_id", $"best.v".as("v"), $"best.nrm".as("nrm"), $"best.cid".as("cid"))
@@ -1323,7 +1379,7 @@ object SimilarityQueries {
     // member vectors never ride through this exchange
     val resub = hotM.join(broadcast(seeds), Seq("cid"))
       .select($"vec_id", $"sub",
-        (Similarity.dot($"v", $"sv") / ($"nrm" * $"sn")).as("scos"))
+        (Similarity.cosine($"v", $"sv", $"nrm", $"sn")).as("scos"))
       .groupBy($"vec_id")
       .agg(max_by($"sub", struct($"scos", -$"sub")).as("sub"))
     val split = assigned.join(resub, Seq("vec_id"), "left")
@@ -1370,7 +1426,7 @@ object SimilarityQueries {
         $"a.cid" === $"b.cid" && $"a.sub" === $"b.sub" &&
           probe("salt") === build("salt") && $"a.vec_id" =!= $"b.vec_id")
       .select($"a.vec_id".as("va"), $"b.vec_id".as("vb"),
-        round(Similarity.dot($"a.v", $"b.v") / ($"a.nrm" * $"b.nrm"), 6)
+        round(Similarity.cosine($"a.v", $"b.v", $"a.nrm", $"b.nrm"), 6)
           .as("cos"))
     // bounded top-k as a MERGEABLE aggregate, not a rank window: partial
     // aggregation prunes each map partition to RnnK rows per vector before
@@ -1428,7 +1484,7 @@ object SimilarityQueries {
     val cents = fittedCentroids(spark, dir, 16)
     val ab = emb.crossJoin(broadcast(cents))
       .withColumn("cdist", sqrt(greatest(lit(0.0), lit(2.0) - lit(2.0) *
-        (Similarity.dot($"v", $"cv") / ($"vn" * $"cn")))))
+        (Similarity.cosine($"v", $"cv", $"vn", $"cn")))))
       .groupBy($"vec_id")
       .agg(array_sort(collect_list(struct($"cdist", $"cid"))).as("ds"))
       .select($"vec_id",
@@ -1472,7 +1528,7 @@ object SimilarityQueries {
     val cents = fittedCentroids(spark, dir, 16)
     val assigned = emb.crossJoin(broadcast(cents))
       .withColumn("cdist", sqrt(greatest(lit(0.0), lit(2.0) - lit(2.0) *
-        (Similarity.dot($"v", $"cv") / ($"vn" * $"cn")))))
+        (Similarity.cosine($"v", $"cv", $"vn", $"cn")))))
       .groupBy($"vec_id")
       // rank UNROUNDED (the silhouette assignment semantics — min chord
       // IS max cosine), quantize only what enters the fold
@@ -1487,7 +1543,7 @@ object SimilarityQueries {
     val sep = cents.as("p").join(cents.as("q"), $"p.cid" =!= $"q.cid")
       .select($"p.cid".as("ci"), $"q.cid".as("cj"),
         round(sqrt(greatest(lit(0.0), lit(2.0) - lit(2.0) *
-          (Similarity.dot($"p.cv", $"q.cv") / ($"p.cn" * $"q.cn")))), 6)
+          (Similarity.cosine($"p.cv", $"q.cv", $"p.cn", $"q.cn")))), 6)
           .as("d"))
     val ratios = scatter.as("a")
       .join(scatter.as("b"), lit(true))
@@ -1523,93 +1579,50 @@ object SimilarityQueries {
   /** Centroids per sub-codebook (k*): 4-bit codes. */
   val PqK = 16
 
-  /** Squared-L2 Lloyd iterations over a (vec_id, v) frame — the PQ
-    * sub-codebook fitter. Same doctrine as the cosine [[kmeansCentroids]]
-    * (lowest-vec_id seeds, argmin assignment with tie → lowest cid as a
-    * min_by partial+final aggregate, 6-dp mean grid, empty cells keep the
-    * previous centroid, localCheckpoint keeps the k-row plan constant),
-    * but with the metric PQ requires: d² = (‖v‖² − 2·v·c) + ‖c‖², every
-    * term a sequential-fold dot both engines evaluate identically, so the
-    * whole fit replays bit-for-bit in the DuckDB oracle's unrolled CTEs.
-    * Returns (cid, cv, cn2). */
-  private[graft] def kmeansL2(sub: DataFrame, k: Int, iters: Int): DataFrame = {
-    import sub.sparkSession.implicits._
-    var cents = sub.filter($"vec_id" < k)
-      .select($"vec_id".as("cid"), $"v".as("cv"),
-        Similarity.dot($"v", $"v").as("cn2"))
+  /** `vecs` with one row per PQ subspace j: `sub` = j and `sv` =
+    * `slice(j)`, subspace j's slice of the vector. */
+  private def bySubspace(vecs: DataFrame, slice: Int => Column): DataFrame =
+    vecs.select(col("*"), explode(array((0 until PqSub).map(j =>
+        struct(lit(j).as("sub"), slice(j).as("sv"))): _*)).as("s"))
+      .select(col("*"), col("s.sub").as("sub"), col("s.sv").as("sv"))
+      .drop("s")
+
+  /** The contiguous split: subspace j is dims j·[[PqSubDim]] + 1 … (j+1)·PqSubDim. */
+  private def contiguous(v: Column): Int => Column =
+    j => slice(v, j * PqSubDim + 1, PqSubDim)
+
+  /** Product-quantize the vectors of `vecs` cut by `slice` (see
+    * [[bySubspace]]): the [[PqK]]-centroid squared-L2 codebooks of all
+    * [[PqSub]] subspaces come from ONE keyed [[lloyd]] fit (key = sub),
+    * and every slice's code is the fit's row-local argmin — no crossJoin,
+    * no argmin shuffle, and the vectors never shuffle. The per-vector cost
+    * is PqSub × PqK sub-dim dots. Returns (codebooks (sub, cid, cv, cn2) as
+    * a local frame, codes (vec_id, sub, code, d2)); the codes are
+    * checkpointed, because each caller's fit feeds several registered
+    * faces through the session memo. */
+  private def productQuantize(vecs: DataFrame, slice: Int => Column)
+      : (DataFrame, DataFrame) = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    val subs = bySubspace(vecs, slice)
+    val fit = lloyd(subs.select($"sub".as("key"), $"vec_id", $"sv".as("v")),
+      PqK, KmeansIters, SquaredL2)
+    val codebooks = fit.frame(spark)
+      .select($"key".as("sub"), $"cid", $"cv", $"norm".as("cn2"))
+    val codes = subs.select($"vec_id", $"sub", fit.nearest($"sub", $"sv").as("n"))
+      .select($"vec_id", $"sub", $"n.cid".as("code"), $"n.score".as("d2"))
       .localCheckpoint()
-    val base = sub.withColumn("vn2", Similarity.dot($"v", $"v"))
-    for (_ <- 0 until iters) {
-      val assigned = base.crossJoin(broadcast(cents))
-        .withColumn("d2",
-          ($"vn2" - lit(2.0) * Similarity.dot($"v", $"cv")) + $"cn2")
-        .groupBy($"vec_id")
-        .agg(min_by(struct($"cid", $"v"), struct($"d2", $"cid")).as("best"))
-        .select($"best.cid".as("cid"), $"best.v".as("v"))
-      val means = assigned
-        .select($"cid", posexplode($"v").as(Seq("dim", "x")))
-        .groupBy($"cid", $"dim").agg(round(avg($"x"), 6).as("m"))
-        .groupBy($"cid")
-        .agg(transform(array_sort(collect_list(struct($"dim", $"m"))),
-          s => s.getField("m")).as("cv"))
-      val prev = cents
-      cents = cents.as("old")
-        .join(means.as("nw"), Seq("cid"), "left")
-        .select($"cid", coalesce($"nw.cv", $"old.cv").as("cv"))
-        .withColumn("cn2", Similarity.dot($"cv", $"cv"))
-        .localCheckpoint()
-      // superseded Lloyd round (VERDICT r12 #5 cold-pass hygiene)
-      org.apache.spark.sql.GraftSqlBridge.dropCheckpoint(prev)
-    }
-    cents
+    (codebooks, codes)
   }
 
-  /** The four fitted sub-codebooks as one (sub, cid, cv, cn2) frame plus
-    * the full-catalog code assignment (vec_id, sub, code, d2): each
-    * subspace slices its 16 dims map-side, fits [[kmeansL2]], and assigns
-    * via a broadcast 16-row crossJoin + min_by argmin — the per-vector
-    * cost is 4 subspaces × 16 centroids of 16-dim dots, and no stage ever
-    * shuffles the vectors themselves. */
-  /** Run the independent per-subspace fits from a small driver thread
-    * pool (guide §2.6 — overlap independent jobs): each [[kmeansL2]]
-    * round is an eager checkpoint job over a 16-dim slice whose task
-    * count cannot fill the executor at query-time scale, and the 4
-    * subspaces share nothing — serial submission left the cluster idle
-    * for 3 of every 4 fit tails. FIFO scheduling back-fills; results are
-    * per-subspace and order is preserved by Future.sequence, so the
-    * unions (and therefore every registered face) are bit-identical. */
-  private def inParallel[T](xs: Seq[() => T]): Seq[T] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(Future.sequence(xs.map(f => Future(f()))), Duration.Inf)
-  }
-
-  private def pqFit(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+  /** The plain PQ fit: [[productQuantize]] over contiguous slices. */
+  private[graft] def pqFit(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     SessionMemo.cached(spark,
       "pqfit:" + SessionMemo.tableTag(dir, "embeddings")) {
       import spark.implicits._
       val emb = Tables.embeddings(spark, dir)
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      val perSub = inParallel((0 until PqSub).map { j => () =>
-        val sub = emb.select($"vec_id",
-          slice($"v", j * PqSubDim + 1, PqSubDim).as("v"))
-        val cb = kmeansL2(sub, PqK, KmeansIters)
-          .withColumn("sub", lit(j))
-        val codes = sub.withColumn("vn2", Similarity.dot($"v", $"v"))
-          .crossJoin(broadcast(cb.select($"cid", $"cv", $"cn2")))
-          .withColumn("d2",
-            ($"vn2" - lit(2.0) * Similarity.dot($"v", $"cv")) + $"cn2")
-          .groupBy($"vec_id")
-          .agg(min_by(struct($"cid", $"d2"), struct($"d2", $"cid")).as("best"))
-          .select($"vec_id", lit(j).as("sub"),
-            $"best.cid".as("code"), $"best.d2".as("d2"))
-        (cb, codes)
-      })
-      // three registered faces (codebooks, codes, ADC search) share this
-      // fit; checkpoint both halves so a memo hit reads blocks, not plans
-      (perSub.map(_._1).reduce(_ unionByName _).localCheckpoint(),
-        perSub.map(_._2).reduce(_ unionByName _).localCheckpoint())
+      productQuantize(emb, contiguous($"v"))
     }
 
   /** q_pq_codebooks — the fitted PQ codebooks as a (sub, cid, dim,
@@ -1637,55 +1650,37 @@ object SimilarityQueries {
   }
 
   /** IVFADC fit (Jégou et al. 2011 §IV — the residual composition FAISS
-    * ships as IVF16,PQ4): a COARSE 16-cell L2 k-means over the full
-    * 64-dim space partitions the catalog into inverted lists; each
-    * vector's RESIDUAL v − c(v) (what the coarse cell cannot explain) is
-    * then product-quantized by four per-subspace codebooks fitted on the
-    * residual distribution. Returns (cell assignment, residual
-    * codebooks, residual codes). Everything downstream of the fits is
-    * map-side: assignment and residuals are broadcast joins against the
-    * 16-row coarse frame, and the only shuffles are the per-vector
-    * min_by partials. */
+    * ships as IVF16,PQ4): a COARSE 16-cell squared-L2 [[lloyd]] fit over
+    * the full 64-dim space partitions the catalog into inverted lists;
+    * each vector's RESIDUAL v − c(v) (what the coarse cell cannot explain)
+    * is then product-quantized ([[productQuantize]]) by four per-subspace
+    * codebooks fitted on the residual distribution. Returns (coarse fit,
+    * cell assignment, residual codebooks, residual codes). Everything
+    * downstream of the fits is map-side: the cell is the fit's row-local
+    * argmin and the residual a broadcast join against the 16-row coarse
+    * frame. */
   private def ivfPqFit(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) =
+      : (LloydFit, DataFrame, DataFrame, DataFrame) =
     SessionMemo.cached(spark,
       "ivfpqfit:" + SessionMemo.tableTag(dir, "embeddings")) {
     import spark.implicits._
     val emb = Tables.embeddings(spark, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-    val coarse = kmeansL2(emb, PqK, KmeansIters)
-    val assigned = emb.withColumn("vn2", Similarity.dot($"v", $"v"))
-      .crossJoin(broadcast(coarse))
-      .withColumn("d2",
-        ($"vn2" - lit(2.0) * Similarity.dot($"v", $"cv")) + $"cn2")
-      .groupBy($"vec_id")
-      .agg(min_by(struct($"cid", $"v"), struct($"d2", $"cid")).as("best"))
-      .select($"vec_id", $"best.cid".as("ccid"), $"best.v".as("v"))
-    val resid = assigned
-      .join(broadcast(coarse.select($"cid".as("ccid"), $"cv")), Seq("ccid"))
-      .select($"vec_id", $"ccid",
-        zip_with($"v", $"cv", (a, b) => a - b).as("r"))
-      .localCheckpoint()
-    // the 4 residual sub-fits are independent — submit them from the
-    // driver pool so their checkpoint jobs interleave (guide §2.6)
-    val perSub = inParallel((0 until PqSub).map { j => () =>
-      val sub = resid.select($"vec_id",
-        slice($"r", j * PqSubDim + 1, PqSubDim).as("v"))
-      val cb = kmeansL2(sub, PqK, KmeansIters).withColumn("sub", lit(j))
-      val codes = sub.withColumn("vn2", Similarity.dot($"v", $"v"))
-        .crossJoin(broadcast(cb.select($"cid", $"cv", $"cn2")))
-        .withColumn("d2",
-          ($"vn2" - lit(2.0) * Similarity.dot($"v", $"cv")) + $"cn2")
-        .groupBy($"vec_id")
-        .agg(min_by(struct($"cid", $"d2"), struct($"d2", $"cid")).as("best"))
-        .select($"vec_id", lit(j).as("sub"), $"best.cid".as("code"))
-      (cb, codes)
-    })
-    // two registered faces (codes, ADC search) share this fit; the coarse
-    // frame and resid are already checkpointed, so materialize the unions
-    (coarse, resid.select($"vec_id", $"ccid"),
-      perSub.map(_._1).reduce(_ unionByName _).localCheckpoint(),
-      perSub.map(_._2).reduce(_ unionByName _).localCheckpoint())
+    val coarse = lloyd(emb.select(lit(0).as("key"), $"vec_id", $"v"),
+      PqK, KmeansIters, SquaredL2)
+    // read by the residual fit's rounds and its encode
+    val resid = coarseResiduals(emb, coarse).localCheckpoint()
+    val (rcb, codes) = productQuantize(resid, contiguous($"r"))
+    (coarse, resid.select($"vec_id", $"ccid"), rcb, codes)
+  }
+
+  /** Each (vec_id, v) row's coarse cell `ccid` and residual `r` = v − c(v). */
+  private def coarseResiduals(vecs: DataFrame, coarse: LloydFit): DataFrame = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    vecs.select($"vec_id", coarse.nearest(lit(0), $"v").getField("cid").as("ccid"), $"v")
+      .join(broadcast(coarse.frame(spark).select($"cid".as("ccid"), $"cv")), Seq("ccid"))
+      .select($"vec_id", $"ccid", zip_with($"v", $"cv", (a, b) => a - b).as("r"))
   }
 
   /** q_ivfpq_codes — the IVFADC compressed representation of each probe
@@ -1712,23 +1707,10 @@ object SimilarityQueries {
     val emb = Tables.embeddings(spark, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val (coarse, cells, rcb, codes) = ivfPqFit(spark, dir)
-    // query-side routing + residual (the same broadcast shape as the fit)
-    val qres = emb.filter($"vec_id" < 10)
-      .withColumn("vn2", Similarity.dot($"v", $"v"))
-      .crossJoin(broadcast(coarse))
-      .withColumn("d2",
-        ($"vn2" - lit(2.0) * Similarity.dot($"v", $"cv")) + $"cn2")
-      .groupBy($"vec_id")
-      .agg(min_by(struct($"cid", $"v"), struct($"d2", $"cid")).as("best"))
-      .select($"vec_id".as("query_id"), $"best.cid".as("qccid"), $"best.v".as("v"))
-      .join(broadcast(coarse.select($"cid".as("qccid"), $"cv")), Seq("qccid"))
-      .select($"query_id", $"qccid",
-        zip_with($"v", $"cv", (a, b) => a - b).as("qr"))
-    val qsub = qres
-      .select($"query_id", $"qccid",
-        explode(array((0 until PqSub).map(j => struct(lit(j).as("sub"),
-          slice($"qr", j * PqSubDim + 1, PqSubDim).as("qv"))): _*)).as("s"))
-      .select($"query_id", $"qccid", $"s.sub".as("sub"), $"s.qv".as("qv"))
+    // query-side routing + residual: the fit's own argmin and broadcast
+    val qsub = bySubspace(coarseResiduals(emb.filter($"vec_id" < 10), coarse),
+        contiguous($"r"))
+      .select($"vec_id".as("query_id"), $"ccid".as("qccid"), $"sub", $"sv".as("qv"))
       .withColumn("qn2", Similarity.dot($"qv", $"qv"))
     val lut = qsub.join(broadcast(rcb), Seq("sub"))
       .select($"query_id", $"qccid", $"sub", $"cid",
@@ -1761,11 +1743,8 @@ object SimilarityQueries {
     val (cb, codes) = pqFit(spark, dir)
     val emb = Tables.embeddings(spark, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-    val qsub = emb.filter($"vec_id" < 10)
-      .select($"vec_id".as("query_id"),
-        explode(array((0 until PqSub).map(j => struct(lit(j).as("sub"),
-          slice($"v", j * PqSubDim + 1, PqSubDim).as("qv"))): _*)).as("s"))
-      .select($"query_id", $"s.sub".as("sub"), $"s.qv".as("qv"))
+    val qsub = bySubspace(emb.filter($"vec_id" < 10), contiguous($"v"))
+      .select($"vec_id".as("query_id"), $"sub", $"sv".as("qv"))
       .withColumn("qn2", Similarity.dot($"qv", $"qv"))
     val lut = qsub.join(broadcast(cb), Seq("sub"))
       .select($"query_id", $"sub", $"cid",
@@ -1802,10 +1781,10 @@ object SimilarityQueries {
   // 100-TB posture: the allocation input is ONE 64-row aggregate —
   // per-dimension variance is O(d), independent of corpus size — and the
   // greedy is a driver-side fold over those 64 rows, the same bounded-by-
-  // dimensionality driver step FAISS's OPQ trainer runs. The refit reuses
-  // the exact pqFit shuffle shape (broadcast 16-row codebooks, min_by
-  // partial+final argmin; vectors never shuffle), and the permuted slice
-  // is a literal column projection — pure codegen, no lookup join.
+  // dimensionality driver step FAISS's OPQ trainer runs. The refit is
+  // pqFit's [[productQuantize]] on the permuted slices (driver-held
+  // codebooks, row-local argmin; vectors never shuffle), and the permuted
+  // slice is a literal column projection — pure codegen, no lookup join.
   // ---------------------------------------------------------------------
 
   /** One allocated dimension: `dim` 1-based source coordinate, its 6-dp
@@ -1818,7 +1797,7 @@ object SimilarityQueries {
   /** The greedy balanced-variance allocation. Determinism doctrine: the
     * variance lands on the shared 6-dp DECIMAL grid (the double
     * subtraction happens pre-round; both engines' avgs agree far inside
-    * the quantum — the [[kmeansL2]] mean-grid precedent), and every
+    * the quantum — the [[lloyd]] mean-grid precedent), and every
     * subsequent comparison — the (variance DESC, dim) sort, the running
     * subspace sums, the argmin with tie → lowest subspace — is exact
     * decimal/int arithmetic, so the DuckDB recursive-CTE replay picks the
@@ -1862,34 +1841,18 @@ object SimilarityQueries {
       .sortBy(_.dim)
   }
 
-  /** The permuted refit: four [[kmeansL2]] codebooks over the allocation's
-    * subspaces plus the full-catalog code assignment with quantization d²
-    * — exactly [[pqFit]]'s plan on permuted slices. Returns (codebooks
-    * (sub, cid, cv, cn2), codes (vec_id, sub, code, d2)). */
-  private def opqFit(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+  /** The permuted refit: [[productQuantize]] over the allocation's
+    * subspaces, each slice its allocated dimensions in ascending order.
+    * Returns (codebooks (sub, cid, cv, cn2), codes (vec_id, sub, code, d2)). */
+  private[graft] def opqFit(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     SessionMemo.cached(spark,
       "opqfit:" + SessionMemo.tableTag(dir, "embeddings")) {
       import spark.implicits._
       val alloc = opqAllocate(spark, dir)
+      val dims = (0 until PqSub).map(j => alloc.filter(_.sub == j).sortBy(_.pos).map(_.dim))
       val emb = Tables.embeddings(spark, dir)
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      val perSub = (0 until PqSub).map { j =>
-        val dims = alloc.filter(_.sub == j).sortBy(_.pos).map(_.dim)
-        val sub = emb.select($"vec_id",
-          array(dims.map(p => element_at($"v", p)): _*).as("v"))
-        val cb = kmeansL2(sub, PqK, KmeansIters).withColumn("sub", lit(j))
-        val codes = sub.withColumn("vn2", Similarity.dot($"v", $"v"))
-          .crossJoin(broadcast(cb.select($"cid", $"cv", $"cn2")))
-          .withColumn("d2",
-            ($"vn2" - lit(2.0) * Similarity.dot($"v", $"cv")) + $"cn2")
-          .groupBy($"vec_id")
-          .agg(min_by(struct($"cid", $"d2"), struct($"d2", $"cid")).as("best"))
-          .select($"vec_id", lit(j).as("sub"),
-            $"best.cid".as("code"), $"best.d2".as("d2"))
-        (cb, codes)
-      }
-      (perSub.map(_._1).reduce(_ unionByName _).localCheckpoint(),
-        perSub.map(_._2).reduce(_ unionByName _).localCheckpoint())
+      productQuantize(emb, j => array(dims(j).map(p => element_at($"v", p)): _*))
     }
 
   /** q_opq_assign — the dimension→subspace permutation itself (64 rows:

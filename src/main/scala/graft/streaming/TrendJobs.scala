@@ -33,6 +33,18 @@ object TrendJobs {
       .trigger(trigger)
       .start()
 
+  /** A foreachBatch body over a batch computed once: `prepare(batch)` is
+    * persisted, so `isEmpty` and every sink read the cached rows instead of
+    * re-scanning and re-parsing the source (and the progress's
+    * `numInputRows` counts each line once); empty batches are skipped. */
+  private def once(prepare: DataFrame => DataFrame)(process: (DataFrame, Long) => Unit)
+      : (DataFrame, Long) => Unit =
+    (batch, id) => {
+      val rows = prepare(batch).persist()
+      try { if (!rows.isEmpty) process(rows, id) }
+      finally rows.unpersist()
+    }
+
   /** spark_stream.py parity: parse → ETL projection → sink. */
   def etl(raw: DataFrame, checkpointDir: String,
           sink: (DataFrame, Long) => Unit,
@@ -59,11 +71,9 @@ object TrendJobs {
              onError: (Long, Throwable) => Unit = rethrow,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     start(Pipeline.parseTweets(raw), checkpointDir,
-      (batch, id) => {
-        if (!batch.isEmpty) {
-          sink(batch, id)
-          metricsSink(Pipeline.cmsMetrics(batch), id)
-        }
+      once(identity) { (batch, id) =>
+        sink(batch, id)
+        metricsSink(Pipeline.cmsMetrics(batch), id)
       }, onError, trigger)
 
   /** flajolent_stream.py parity: raw append + one FM-estimate row per batch. */
@@ -73,11 +83,9 @@ object TrendJobs {
             onError: (Long, Throwable) => Unit = rethrow,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     start(Pipeline.parseTweets(raw), checkpointDir,
-      (batch, id) => {
-        if (!batch.isEmpty) {
-          sink(batch, id)
-          metricsSink(Pipeline.fmMetrics(batch), id)
-        }
+      once(identity) { (batch, id) =>
+        sink(batch, id)
+        metricsSink(Pipeline.fmMetrics(batch), id)
       }, onError, trigger)
 
   /** Takedown-cascade job — the streaming face of
@@ -91,9 +99,12 @@ object TrendJobs {
     * The ban list is a SLOWLY CHANGING DIMENSION: `banList` is a thunk
     * re-evaluated at every micro-batch (a parquet / JDBC re-read in
     * production), so a takedown notice landing mid-stream takes effect on
-    * the NEXT batch with no query restart. The anti-join broadcasts the
-    * ban side and is STATE-FREE — nothing to watermark, no state-store
-    * growth at any stream length, unlike a stream-stream formulation.
+    * the NEXT batch with no query restart. Each batch is fingerprinted and
+    * left-joined against the broadcast ban side ONCE, with a `banned`
+    * marker, and the two sinks filter that one persisted result — so the
+    * ban list is read once per batch. The join is STATE-FREE — nothing to
+    * watermark, no state-store growth at any stream length, unlike a
+    * stream-stream formulation.
     * Rows with NULL text (malformed JSON, PERMISSIVE parse) have no
     * fingerprint and pass through to `sink` un-scrubbed — a takedown can
     * only name content, and dropping unparsed rows would hide ingest
@@ -105,16 +116,14 @@ object TrendJobs {
                   onError: (Long, Throwable) => Unit = rethrow,
                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     start(Pipeline.parseTweets(raw), checkpointDir,
-      (batch, id) => {
-        if (!batch.isEmpty) {
-          val bans = broadcast(
-            banList().select(col("fp")).distinct())
-          val fp = batch.withColumn("fp",
-            graft.functions.Text.fingerprint(col("text")))
-          sink(fp.join(bans, Seq("fp"), "left_anti").drop("fp"), id)
-          removedSink(fp.filter(col("fp").isNotNull)
-            .join(bans, Seq("fp"), "left_semi").drop("fp"), id)
-        }
+      once { batch =>
+        val bans = broadcast(banList().select(col("fp")).distinct()
+          .withColumn("banned", lit(true)))
+        batch.withColumn("fp", graft.functions.Text.fingerprint(col("text")))
+          .join(bans, Seq("fp"), "left")
+      } { (marked, id) =>
+        sink(marked.filter(col("banned").isNull).drop("fp", "banned"), id)
+        removedSink(marked.filter(col("banned")).drop("fp", "banned"), id)
       }, onError, trigger)
 
   private def rethrow: (Long, Throwable) => Unit = (_, e) => throw e

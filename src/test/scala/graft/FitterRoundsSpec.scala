@@ -2,15 +2,16 @@ package graft
 
 import graft.functions.Similarity
 import graft.queries.SimilarityQueries
-import graft.queries.SimilarityQueries.{Centroid, centroidFrame}
+import graft.queries.SimilarityQueries.{Centroid, Cosine, LloydFit, SquaredL2}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The two job-count-bound fitters, one Spark action per round: parity of
-  * the row-local k-means argmax and of the in-round components convergence
-  * against the former crossJoin + max_by assignment and join + count()
-  * loop (kept here as references), and listener-counted job pins. */
+/** The job-count-bound fitters, one Spark action per round: parity of the
+  * row-local k-means argmax and argmin, of the keyed PQ fits and of the
+  * in-round components convergence against the former crossJoin + max_by /
+  * min_by assignments, per-subspace PQ loop and join + count() loop (kept
+  * here as references), and listener-counted job pins. */
 class FitterRoundsSpec extends SparkSpec {
 
   private val Sf01 = "/root/testdata/sf0.01"
@@ -27,11 +28,15 @@ class FitterRoundsSpec extends SparkSpec {
       .agg(max_by(col("cid"), struct(col("ccos"), -col("cid"))).as("cid"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  private def rowLocalAssign(base: DataFrame, cents: Array[Centroid],
-                             ansi: Boolean): Map[Long, Long] =
-    base.select(col("vec_id"),
-        SimilarityQueries.nearestCentroid(cents.sortBy(_.cid), ansi)(col("v"), col("vn")))
+  private def rowLocalAssign(base: DataFrame, cents: Array[Centroid]): Map[Long, Long] =
+    base.select(col("vec_id"), SimilarityQueries.nearestCentroid(
+        Cosine, Map(0 -> cents.sortBy(_.cid)))(lit(0), col("v")).getField("cid"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Driver-held cosine centroids as the (cid, cv, cn) frame consumers read. */
+  private def cosineFrame(s: SparkSession, cents: Array[Centroid]): DataFrame =
+    LloydFit(Cosine, Map(0 -> cents)).frame(s)
+      .select(col("cid"), col("cv"), col("norm").as("cn"))
 
   private def vectors(s: SparkSession, vs: Seq[(Long, Array[java.lang.Double])]): DataFrame = {
     val schema = new org.apache.spark.sql.types.StructType()
@@ -51,8 +56,8 @@ class FitterRoundsSpec extends SparkSpec {
     // duplicate centroids: cid 20 repeats cid 3, cid 21 repeats cid 9 —
     // every vector nearest to either must tie and go to the lower cid
     val cents = seeds ++ Seq(Centroid(20L, seeds(3).cv), Centroid(21L, seeds(9).cv))
-    val got = rowLocalAssign(base, cents, ansi = true)
-    assert(got == referenceAssign(base, centroidFrame(spark, cents.toSeq)))
+    val got = rowLocalAssign(base, cents)
+    assert(got == referenceAssign(base, cosineFrame(spark, cents)))
     assert(got.values.toSet.intersect(Set(20L, 21L)).isEmpty)
     assert(got.values.exists(_ == 3L) && got.values.exists(_ == 9L))
   }
@@ -74,34 +79,197 @@ class FitterRoundsSpec extends SparkSpec {
       5L -> boxed(1.0, 0.0, 7.0),              // longer vector: shorter fold
       6L -> null)                              // null vector: all null
     val base = vectors(spark, vs)
-    val got = rowLocalAssign(base, cents, ansi = true)
-    assert(got == referenceAssign(base, centroidFrame(spark, cents.toSeq)))
+    val got = rowLocalAssign(base, cents)
+    assert(got == referenceAssign(base, cosineFrame(spark, cents)))
     assert(got == Map(1L -> 3L, 2L -> 1L, 3L -> 5L, 4L -> 1L, 5L -> 3L, 6L -> 1L))
     // a NaN centroid outranks every finite cosine
     val withNan = cents :+ Centroid(7L, boxed(Double.NaN, 0.0))
-    val nan = rowLocalAssign(base, withNan, ansi = true)
-    assert(nan == referenceAssign(base, centroidFrame(spark, withNan.toSeq)))
+    val nan = rowLocalAssign(base, withNan)
+    assert(nan == referenceAssign(base, cosineFrame(spark, withNan)))
     assert(nan - 6L == Map(1L -> 7L, 2L -> 7L, 3L -> 7L, 4L -> 1L, 5L -> 7L))
   }
 
-  test("nearestCentroid: a zero vector fails under ANSI and ranks lowest " +
-    "without it, as the SQL division does") {
+  test("nearestCentroid: a zero vector or centroid has a null cosine, which " +
+    "ranks lowest under ANSI mode too") {
     val cents = Array(Centroid(1L, boxed(1.0, 0.0)), Centroid(2L, boxed(0.0, 1.0)))
     val vs = Seq(1L -> boxed(0.0, 0.0), 2L -> boxed(0.0, 3.0))
-    val ansiBase = vectors(spark, vs)
-    intercept[Exception](referenceAssign(ansiBase, centroidFrame(spark, cents.toSeq)))
-    intercept[Exception](rowLocalAssign(ansiBase, cents, ansi = true))
+    // the former assignment fails with DIVIDE_BY_ZERO under ANSI; its
+    // non-ANSI null division gives the assignment the helper now gives
+    intercept[Exception](referenceAssign(vectors(spark, vs), cosineFrame(spark, cents)))
     val lax = spark.newSession()
     lax.conf.set("spark.sql.ansi.enabled", "false")
-    val base = vectors(lax, vs)
-    val got = rowLocalAssign(base, cents, ansi = false)
-    assert(got == referenceAssign(base, centroidFrame(lax, cents.toSeq)))
-    assert(got == Map(1L -> 1L, 2L -> 2L))
+    val want = referenceAssign(vectors(lax, vs), cosineFrame(lax, cents))
+    assert(want == Map(1L -> 1L, 2L -> 2L))
+    assert(rowLocalAssign(vectors(spark, vs), cents) == want)
     // a zero centroid: its cosine is null for every vector
     val zero = Array(Centroid(1L, boxed(0.0, 0.0)), Centroid(2L, boxed(1.0, 1.0)))
-    val zgot = rowLocalAssign(base, zero, ansi = false)
-    assert(zgot == referenceAssign(base, centroidFrame(lax, zero.toSeq)))
-    assert(zgot == Map(1L -> 1L, 2L -> 2L))
+    val zwant = referenceAssign(vectors(lax, vs), cosineFrame(lax, zero))
+    assert(zwant == Map(1L -> 1L, 2L -> 2L))
+    assert(rowLocalAssign(vectors(spark, vs), zero) == zwant)
+  }
+
+  test("a catalog holding an all-zero embedding fits and probes under ANSI mode") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val dir = java.nio.file.Files.createTempDirectory("graft-zero-vec").toString
+    graft.sources.Tables.embeddings(spark, sf)
+      .withColumn("embedding", when(col("vec_id") === 5L, array_repeat(lit(0.0f), 64))
+        .otherwise(col("embedding")))
+      .write.parquet(s"$dir/embeddings.parquet")
+    val emb = graft.sources.Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val cents = SimilarityQueries.kmeansCentroids(emb, 16, SimilarityQueries.KmeansIters)
+      .collect()
+    assert(cents.length == 16)
+    // the zero seed's cosine is null for every vector: its cell never wins
+    // a member and keeps the seed
+    val c5 = cents.find(_.getLong(0) == 5L).get
+    assert(c5.getSeq[Double](1).forall(_ == 0.0) && c5.getDouble(2) == 0.0)
+    val ann = SimilarityQueries.annIvf(spark, dir).collect()
+    assert(ann.map(_.getLong(0)).toSet == (0L until 10L).toSet)
+  }
+
+  /** A nullable double's exact bits: NaN equals NaN, -0.0 differs from 0.0. */
+  private def bits(d: java.lang.Double): Option[Long] =
+    Option(d).map(x => java.lang.Double.doubleToLongBits(x))
+
+  /** The former PQ assignment: crossJoin against the (cid, cv, cn2) frame,
+    * argmin as min_by(struct(cid, d2), struct(d2, cid)). */
+  private def referenceL2Assign(base: DataFrame, cents: DataFrame)
+      : Map[Long, (Long, Option[Long])] =
+    base.withColumn("vn2", Similarity.dot(col("v"), col("v")))
+      .crossJoin(broadcast(cents))
+      .withColumn("d2",
+        (col("vn2") - lit(2.0) * Similarity.dot(col("v"), col("cv"))) + col("cn2"))
+      .groupBy(col("vec_id"))
+      .agg(min_by(struct(col("cid"), col("d2")), struct(col("d2"), col("cid"))).as("best"))
+      .select(col("vec_id"), col("best.cid"), col("best.d2"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), bits(r.getAs[java.lang.Double](2)))).toMap
+
+  private def rowLocalL2(base: DataFrame, cents: Array[Centroid])
+      : Map[Long, (Long, Option[Long])] =
+    base.select(col("vec_id"), SimilarityQueries.nearestCentroid(
+        SquaredL2, Map(0 -> cents.sortBy(_.cid)))(lit(0), col("v")).as("n"))
+      .select(col("vec_id"), col("n.cid"), col("n.score"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), bits(r.getAs[java.lang.Double](2)))).toMap
+
+  private def l2Frame(s: SparkSession, cents: Array[Centroid]): DataFrame =
+    LloydFit(SquaredL2, Map(0 -> cents)).frame(s)
+      .select(col("cid"), col("cv"), col("norm").as("cn2"))
+
+  test("nearestCentroid: squared-L2 argmin equals the crossJoin + min_by " +
+    "argmin on catalog slices, with tied seeds") {
+    val emb = graft.sources.Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    for (base <- Seq(emb, emb.select(col("vec_id"), slice(col("v"), 17, 16).as("v")))) {
+      val seeds = base.filter(col("vec_id") < 16).collect()
+        .map(r => Centroid(r.getLong(0), r.getSeq[java.lang.Double](1).toArray))
+      val cents = seeds ++ Seq(Centroid(20L, seeds(3).cv), Centroid(21L, seeds(9).cv))
+      val got = rowLocalL2(base, cents)
+      assert(got == referenceL2Assign(base, l2Frame(spark, cents)))
+      assert(got.values.map(_._1).toSet.intersect(Set(20L, 21L)).isEmpty)
+      assert(got(3L)._1 == 3L && got(9L)._1 == 9L)
+    }
+  }
+
+  test("nearestCentroid: squared-L2 argmin ranks NaN, null and -0.0 as " +
+    "min_by orders them") {
+    val cents = Array(
+      Centroid(1L, boxed(0.0, 1.0)),
+      Centroid(2L, boxed(1.0, 1.0)),
+      Centroid(3L, boxed(1.0, 1.0)),            // duplicate of cid 2: ties
+      Centroid(4L, boxed(-0.0, -2.0)),
+      Centroid(5L, boxed(3.0, -0.0)))
+    val vs = Seq(
+      1L -> boxed(1.0, 1.0),                    // 2 and 3 tie at d² 0
+      2L -> boxed(-0.0, -2.0),                  // -0.0 folds as 0.0
+      3L -> boxed(3.0, 0.0),
+      4L -> boxed(Double.NaN, 1.0),             // NaN d² everywhere
+      5L -> boxed(1.0, 1.0, 7.0),               // longer vector: shorter fold
+      6L -> Array[java.lang.Double](1.0, null), // null element: skipped
+      7L -> null)                               // null vector: all null
+    val base = vectors(spark, vs)
+    val got = rowLocalL2(base, cents)
+    assert(got == referenceL2Assign(base, l2Frame(spark, cents)))
+    assert(got.map { case (id, (cid, _)) => id -> cid } ==
+      Map(1L -> 2L, 2L -> 4L, 3L -> 5L, 4L -> 1L, 5L -> 2L, 6L -> 2L, 7L -> 1L))
+    // a NaN centroid never beats a number; a null centroid's null d² beats
+    // everything
+    for ((extra, want) <- Seq(
+        Centroid(8L, boxed(Double.NaN, 0.0)) -> got.map { case (id, (c, _)) => id -> c },
+        Centroid(9L, null) -> (got.map { case (id, _) => id -> 9L } + (7L -> 1L)))) {
+      val cs = cents :+ extra
+      val more = rowLocalL2(base, cs)
+      assert(more == referenceL2Assign(base, l2Frame(spark, cs)))
+      assert(more.map { case (id, (cid, _)) => id -> cid } == want)
+    }
+  }
+
+  /** The former PQ sub-codebook fitter: per round a crossJoin + min_by
+    * assignment, a collect_list mean and a localCheckpoint. */
+  private def referenceKmeansL2(sub: DataFrame, k: Int, iters: Int): DataFrame = {
+    var cents = sub.filter(col("vec_id") < k)
+      .select(col("vec_id").as("cid"), col("v").as("cv"),
+        Similarity.dot(col("v"), col("v")).as("cn2"))
+      .localCheckpoint()
+    val base = sub.withColumn("vn2", Similarity.dot(col("v"), col("v")))
+    for (_ <- 0 until iters) {
+      val assigned = base.crossJoin(broadcast(cents))
+        .withColumn("d2",
+          (col("vn2") - lit(2.0) * Similarity.dot(col("v"), col("cv"))) + col("cn2"))
+        .groupBy(col("vec_id"))
+        .agg(min_by(struct(col("cid"), col("v")), struct(col("d2"), col("cid"))).as("best"))
+        .select(col("best.cid").as("cid"), col("best.v").as("v"))
+      val means = assigned
+        .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
+        .groupBy(col("cid"), col("dim")).agg(round(avg(col("x")), 6).as("m"))
+        .groupBy(col("cid"))
+        .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
+          s => s.getField("m")).as("cv"))
+      cents = cents.as("old")
+        .join(means.as("nw"), Seq("cid"), "left")
+        .select(col("cid"), coalesce(col("nw.cv"), col("old.cv")).as("cv"))
+        .withColumn("cn2", Similarity.dot(col("cv"), col("cv")))
+        .localCheckpoint()
+    }
+    cents
+  }
+
+  /** The former per-subspace PQ loop: each subspace fitted by
+    * [[referenceKmeansL2]] and encoded by [[referenceL2Assign]]'s argmin. */
+  private def referencePq(emb: DataFrame, slice: Int => Column)
+      : (Map[(Int, Long), (Seq[java.lang.Double], Double)],
+         Map[(Long, Int), (Long, Option[Long])]) = {
+    val per = (0 until SimilarityQueries.PqSub).map { j =>
+      val sub = emb.select(col("vec_id"), slice(j).as("v"))
+      val cb = referenceKmeansL2(sub, SimilarityQueries.PqK, SimilarityQueries.KmeansIters)
+      val codebook = cb.collect().map(r =>
+        (j, r.getLong(0)) -> (r.getSeq[java.lang.Double](1), r.getDouble(2)))
+      val codes = referenceL2Assign(sub, cb).map { case (id, code) => (id, j) -> code }
+      (codebook, codes)
+    }
+    (per.flatMap(_._1).toMap, per.flatMap(_._2).toMap)
+  }
+
+  private def fitted(fit: (DataFrame, DataFrame))
+      : (Map[(Int, Long), (Seq[java.lang.Double], Double)],
+         Map[(Long, Int), (Long, Option[Long])]) =
+    (fit._1.select("sub", "cid", "cv", "cn2").collect().map(r =>
+        (r.getInt(0), r.getLong(1)) -> (r.getSeq[java.lang.Double](2), r.getDouble(3))).toMap,
+      fit._2.select("vec_id", "sub", "code", "d2").collect().map(r =>
+        (r.getLong(0), r.getInt(1)) -> (r.getLong(2), bits(r.getAs[java.lang.Double](3)))).toMap)
+
+  test("pqFit and opqFit: the keyed fit gives the codebooks and codes of the " +
+    "former per-subspace loop") {
+    val emb = graft.sources.Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val d = SimilarityQueries.PqSubDim
+    val pq = fitted(SimilarityQueries.pqFit(spark, sf))
+    assert(pq == referencePq(emb, j => slice(col("v"), j * d + 1, d)))
+    assert(pq._1.size == 4 * 16 && pq._2.size == 4 * emb.count())
+    val alloc = SimilarityQueries.opqAllocate(spark, sf)
+    val opq = fitted(SimilarityQueries.opqFit(spark, sf))
+    assert(opq == referencePq(emb, j => array(alloc.filter(_.sub == j).sortBy(_.pos)
+      .map(a => element_at(col("v"), a.dim)): _*)))
   }
 
   /** The former components loop: labels from a checkpointed distinct-node
@@ -183,6 +351,15 @@ class FitterRoundsSpec extends SparkSpec {
     // the seed collect, then per round the mean aggregate's shuffle map
     // stage and its collect; the crossJoin + checkpoint rounds ran 15
     assert(jobs <= 5, s"kmeansCentroids ran $jobs jobs")
+  }
+
+  test("job pin: pqFit in a fresh session at sf0.01") {
+    val s = spark.newSession()
+    val jobs = jobsOf(s)(SimilarityQueries.pqFit(s, Sf01))
+    // the parquet schema read, the seed collect, per round the mean
+    // aggregate's map stage and its collect, and the code checkpoint; the
+    // per-subspace crossJoin + checkpoint loop on a driver thread pool ran 71
+    assert(jobs <= 7, s"pqFit ran $jobs jobs")
   }
 
   test("job pin: dedupComponents in a fresh session at sf0.01") {

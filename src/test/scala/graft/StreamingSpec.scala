@@ -246,6 +246,32 @@ class StreamingSpec extends SparkSpec {
     assert(est.get == fm.finish(Seq("hello", "world").foldLeft(fm.zero)(fm.reduce)))
   }
 
+  test("cms, fm and takedown jobs parse a micro-batch once: numInputRows " +
+    "equals the lines fed") {
+    implicit val ctx = sql.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft_once").toString
+    Seq("scan").toDF("text")
+      .select(graft.functions.Text.fingerprint($"text").as("fp"))
+      .write.parquet(s"$tmp/bans")
+    val lines = Seq(tweetJson("join hash", "2024-01-01 00:00:00", "x"),
+      "{malformed line",
+      tweetJson("scan", "2024-01-01 00:00:01", "x"))
+    val count: (DataFrame, Long) => Unit = (b, _) => b.count()
+    val jobs = Seq[(String, (DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery)](
+      "cms" -> ((raw, cp) => graft.streaming.TrendJobs.cmsJob(raw, cp, count, count)),
+      "fm" -> ((raw, cp) => graft.streaming.TrendJobs.fmJob(raw, cp, count, count)),
+      "takedown" -> ((raw, cp) => graft.streaming.TrendJobs.takedownJob(raw, cp,
+        () => sql.read.parquet(s"$tmp/bans"), count, count)))
+    for ((name, job) <- jobs) {
+      val in = MemoryStream[String]
+      in.addData(lines: _*)
+      val q = job(in.toDF(), s"$tmp/cp_$name")
+      q.awaitTermination()
+      assert(q.exception.isEmpty, name)
+      assert(q.recentProgress.map(_.numInputRows).sum == lines.size.toLong, name)
+    }
+  }
+
   test("checkpointed parquet sink: restart does not duplicate rows") {
     implicit val ctx = sql.sqlContext
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString

@@ -37,8 +37,8 @@ CP="/opt/spark/jars/*:target/scala-2.13/classes"
 # the occupancy-aware cell split (SimilarityQueries.rnnPairs: cells over
 # RnnSplitBudget re-quantize onto md5-ordered seed members; oracle
 # mirrors CTE-for-CTE; RnnSplitSpec pins the skew routing) PLUS the
-# ObjectHashAggregate fallback-threshold fix (see run_sf100_r14.sh: the
-# default 128-key threshold was sorting the full pair stream). Engine
+# ObjectHashAggregate fallback-threshold fix (the default 128-key
+# threshold was sorting the full pair stream). Engine
 # run at tier: 11 min wall, 3.9M pairs, cosine partial oracle green.
 # The FULL oracle replay still builds an ~8e9-row pair stream at this
 # tier (~50 GB of DuckDB spill at sf10, linear growth), so its in-sweep
@@ -50,7 +50,6 @@ CP="/opt/spark/jars/*:target/scala-2.13/classes"
 # 252G sandbox while the DuckDB check was spilling alongside; the plan
 # shape is the right distributed NMF (all joins linear in nnz, k x k
 # Grams broadcast) and its 10x evidence is green in CORRECTNESS_sf10.
-# r14: the serial re-attempt lives in tools/run_sf100_r14.sh.
 # r13 MEASURED oracle-disk exclusions (this sandbox's scratch ceiling is
 # ~71 GB; each of these DuckDB replays exhausted it even run SERIALLY at
 # a 100 GB memory_limit on a fresh connection — every ENGINE dump ran
@@ -65,7 +64,7 @@ CP="/opt/spark/jars/*:target/scala-2.13/classes"
 # tools/partial_check.py replays a deterministic md5-sampled linear
 # intermediate (sample-pair exact Jaccard, probe-join LCP span/scrub
 # recompute, edge weights, PPMI rows) against the engine dumps →
-# CORRECTNESS_sf100_partial.json (driven by tools/run_sf100_r14.sh).
+# CORRECTNESS_sf100_partial.json.
 # r13 additions that ARE green at sf100: q_silhouette, q_db_index,
 # q_heaps_law, plus the cheap corpus profiles q_token_stats,
 # q_lang_profile, q_zipf_profile, q_source_entropy, q_quality_scores.
