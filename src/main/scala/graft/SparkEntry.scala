@@ -330,6 +330,16 @@ object SparkEntry {
 
   private val KmeansCte = "WITH " + kmeansCteBody("16")
 
+  /** [[KmeansCte]] plus `cd`, every (vector, centroid) chord distance
+    * √(2−2·cos) whose cosine is not null — as in the engine, a zero-norm
+    * side has no distance (greatest would make it 0). */
+  private val ChordCte = KmeansCte + raw""",
+         cd AS (SELECT vec_id, cid, sqrt(greatest(0.0, 2.0 - 2.0 * ccos)) AS cdist
+           FROM (SELECT e.vec_id, c.cid, list_dot_product(e.v, c.cv)
+               / (e.vn * sqrt(list_dot_product(c.cv, c.cv))) AS ccos
+             FROM emb e CROSS JOIN c2 c)
+           WHERE ccos IS NOT NULL)"""
+
   /** q_semantic_dedup's scaled-k variant: k = max(16, ceil(n / target)),
     * the same pure function of count(*) [[SimilarityQueries.semDedupK]]
     * computes engine-side, so both fits replay identically. */
@@ -1703,23 +1713,19 @@ object SparkEntry {
          FROM n a JOIN n b ON a.vec_id < b.vec_id
          WHERE list_dot_product(a.v, b.v) / (a.nrm * b.nrm) >= 0.4
          ORDER BY vec_a, vec_b""",
-    // Budgeted metric join: the oracle replays the quantizer (KmeansCte),
-    // the min-chord-distance assignment (EXACTLY the engine's min_by
+    // Budgeted metric join: the oracle replays the quantizer and its chord
+    // distances (ChordCte), the min-chord-distance assignment (EXACTLY the engine's min_by
     // (cdist, cid) ordering — sqrt can collapse adjacent cosines, so the
     // replay ranks by the same cdist, not by ccos), the md5 probe sample,
     // and the probe×member verification. The triangle prune needs no
     // replay: it admits no false negatives, so pruned cell pairs hold no
     // qualifying pair by construction.
     "q_embed_dup_capped" ->
-      (KmeansCte + raw""",
-         a4 AS (SELECT e.vec_id, c.cid,
-             sqrt(greatest(0.0, 2.0 - 2.0 *
-               (list_dot_product(e.v, c.cv) / (e.vn * sqrt(list_dot_product(c.cv, c.cv)))))) AS cdist
-           FROM emb e CROSS JOIN c2 c),
+      (ChordCte + raw""",
          s4 AS (SELECT w.vec_id, e.v, e.vn, w.cid FROM (
              SELECT vec_id, cid,
                row_number() OVER (PARTITION BY vec_id ORDER BY cdist, cid) AS rn
-             FROM a4) w JOIN emb e ON e.vec_id = w.vec_id WHERE w.rn = 1),
+             FROM cd) w JOIN emb e ON e.vec_id = w.vec_id WHERE w.rn = 1),
          sz AS (SELECT cid, count(*) AS csz FROM s4 GROUP BY 1),
          pr AS (SELECT vec_id, v, vn, cid FROM (
              SELECT vec_id, v, vn, cid,
@@ -3432,14 +3438,9 @@ object SparkEntry {
     // — sqrt can collapse adjacent cosines, so the replay never ranks by
     // ccos — then s = (b−a)/max(a,b) quantizes to 6 dp and folds DECIMAL
     "q_silhouette" ->
-      (KmeansCte + raw""",
-         a5 AS (SELECT e.vec_id, c.cid,
-             sqrt(greatest(0.0, 2.0 - 2.0 *
-               (list_dot_product(e.v, c.cv)
-                 / (e.vn * sqrt(list_dot_product(c.cv, c.cv)))))) AS cdist
-           FROM emb e CROSS JOIN c2 c),
+      (ChordCte + raw""",
          r5 AS (SELECT vec_id, cid, cdist, row_number() OVER (
-             PARTITION BY vec_id ORDER BY cdist, cid) AS rn FROM a5),
+             PARTITION BY vec_id ORDER BY cdist, cid) AS rn FROM cd),
          ab AS (SELECT vec_id,
              max(CASE WHEN rn = 1 THEN cid END) AS cid,
              max(CASE WHEN rn = 1 THEN cdist END) AS a,
@@ -3458,15 +3459,10 @@ object SparkEntry {
     // grid applies to what enters the scatter fold; coincident-centroid
     // pairs (d = 0) are excluded from the max on both sides
     "q_db_index" ->
-      (KmeansCte + raw""",
-         a6 AS (SELECT e.vec_id, c.cid,
-             sqrt(greatest(0.0, 2.0 - 2.0 *
-               (list_dot_product(e.v, c.cv)
-                 / (e.vn * sqrt(list_dot_product(c.cv, c.cv)))))) AS cdist
-           FROM emb e CROSS JOIN c2 c),
+      (ChordCte + raw""",
          asg AS (SELECT vec_id, cid, round(cdist, 6) AS cdist FROM (
              SELECT vec_id, cid, cdist, row_number() OVER (
-               PARTITION BY vec_id ORDER BY cdist, cid) AS rn FROM a6)
+               PARTITION BY vec_id ORDER BY cdist, cid) AS rn FROM cd)
            WHERE rn = 1),
          sc AS (SELECT cid, count(*) AS n_members,
              round(CAST(sum(CAST(cdist AS DECIMAL(28,6))) AS DOUBLE)
@@ -4221,7 +4217,7 @@ object SparkEntry {
              AND a.vec_id != b.vec_id),
          tk AS (SELECT va, vb, cos, row_number() OVER (
              PARTITION BY va ORDER BY cos DESC, vb) AS rn
-           FROM pr QUALIFY rn <= ${SimilarityQueries.RnnK})
+           FROM pr WHERE cos IS NOT NULL QUALIFY rn <= ${SimilarityQueries.RnnK})
          SELECT x.va AS vec_a, x.vb AS vec_b, x.cos AS cosine,
            x.rn AS rank_ab, y.rn AS rank_ba
          FROM tk x JOIN tk y ON x.va = y.vb AND x.vb = y.va AND x.va < x.vb

@@ -291,9 +291,10 @@ object Similarity {
     * a 25M-row exchange and a ~20G-row / half-terabyte spill (measured
     * r12 — the window formulation overflowed local scratch). The kept set
     * is the global top-k under any merge order, so results are identical
-    * to the row_number() formulation, ties and all. */
+    * to the row_number() formulation, ties and all. A null cos (a zero-norm
+    * vector) is skipped, as SQL aggregates skip nulls: it is no neighbor. */
   class TopKNeighborsAggregator(k: Int)
-      extends Aggregator[(Long, Double), Array[Double], Array[Double]] {
+      extends Aggregator[(Long, java.lang.Double), Array[Double], Array[Double]] {
     def zero: Array[Double] = Array.emptyDoubleArray
     private def better(c1: Double, v1: Double, c2: Double, v2: Double) =
       c1 > c2 || (c1 == c2 && v1 < v2)
@@ -313,8 +314,8 @@ object Similarity {
         out
       }
     }
-    def reduce(b: Array[Double], in: (Long, Double)): Array[Double] =
-      insert(b, in._2, in._1.toDouble)
+    def reduce(b: Array[Double], in: (Long, java.lang.Double)): Array[Double] =
+      if (in._2 == null) b else insert(b, in._2, in._1.toDouble)
     def merge(x: Array[Double], y: Array[Double]): Array[Double] = {
       var b = x
       var i = 0

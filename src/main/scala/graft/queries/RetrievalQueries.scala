@@ -112,7 +112,7 @@ object RetrievalQueries {
     val denseTop = emb.filter($"vec_id" =!= 0)
       .crossJoin(broadcast(qv))
       .select($"vec_id".as("doc_id"),
-        round(Similarity.dot($"v", $"q") / ($"nrm" * $"qn"), 6).as("cos"))
+        round(Similarity.cosine($"v", $"q", $"nrm", $"qn"), 6).as("cos"))
       .orderBy($"cos".desc, $"doc_id").limit(FuseDepth)
       .withColumn("r_cos",
         row_number().over(Window.orderBy($"cos".desc, $"doc_id")))

@@ -818,12 +818,7 @@ object SimilarityQueries {
       }
     var fit = LloydFit(metric, seeds)
     for (_ <- 0 until iters if seeds.nonEmpty) {
-      val means = rows
-        .select($"key", fit.nearest($"key", $"v").getField("cid").as("cid"), $"v")
-        .where($"cid".isNotNull) // a key without seeds has no cells
-        .select($"key", $"cid", posexplode($"v").as(Seq("dim", "x")))
-        .groupBy($"key", $"cid", $"dim").agg(round(avg($"x"), 6).as("m"))
-        .collect()
+      val means = roundMeans(rows, fit).collect()
         .groupBy(r => (r.getInt(0), r.getLong(1)))
         .map { case (cell, rs) =>
           cell -> rs.sortBy(_.getInt(2))
@@ -834,6 +829,19 @@ object SimilarityQueries {
       })
     }
     fit
+  }
+
+  /** One Lloyd round's (key, cid, dim, m) cell means under `fit`: the
+    * row-local assignment, posexplode and one partial+final aggregate.
+    * Every key of `rows` has seeds in `fit` (the keys share their
+    * vec_ids), so no cid is null and nothing filters on it — a filter on
+    * the UDF's output would be pushed below the projection and run the
+    * assignment twice per row. */
+  private[graft] def roundMeans(rows: DataFrame, fit: LloydFit): DataFrame = {
+    import rows.sparkSession.implicits._
+    rows.select($"key", fit.nearest($"key", $"v").getField("cid").as("cid"), $"v")
+      .select($"key", $"cid", posexplode($"v").as(Seq("dim", "x")))
+      .groupBy($"key", $"cid", $"dim").agg(round(avg($"x"), 6).as("m"))
   }
 
   /** The cosine coarse quantizer over a (vec_id, v) frame — VERDICT r2 #5,
@@ -962,14 +970,26 @@ object SimilarityQueries {
   /** Number of coarse cells for the metric-join prune in [[embedDupPairs]]. */
   val DupCells = 16
 
-  /** Unit-sphere chord distance from a cosine: ‖â−b̂‖ = √(2−2·cos). */
-  private def unitDist(dot: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sqrt(greatest(lit(0.0), lit(2.0) - lit(2.0) * dot))
+  /** Unit-sphere chord distance from a cosine: ‖â−b̂‖ = √(2−2·cos). A
+    * null cosine (a zero-norm side) gives a null distance, not the 0 that
+    * `greatest`, which skips nulls, would make of it. */
+  private def unitDist(cos: Column): Column =
+    when(cos.isNotNull, sqrt(greatest(lit(0.0), lit(2.0) - lit(2.0) * cos)))
+
+  /** The (cdist, cid) ranking key of a vector–centroid row, null where the
+    * distance is null: min_by skips a null key and collect_list a null
+    * element, so a zero vector joins no cell and a zero centroid is
+    * nobody's nearest. (A struct with a null cdist would sort FIRST, and a
+    * `where` on cdist would be pushed into the crossJoin's condition and
+    * compute every cosine twice.) */
+  private def nearFirst: Column =
+    when(col("cdist").isNotNull, struct(col("cdist"), col("cid")))
 
   /** Shared front half of the exact metric join family: fit the
     * [[DupCells]]-cell quantizer and assign every vector to its nearest
     * cell (min chord distance ⟺ max cosine, tie → lowest cid) as a min_by
-    * partial+final aggregate, not a window sort. Returns (centroids,
+    * partial+final aggregate, not a window sort. A zero-norm vector has no
+    * cell (its cosines are null) and drops out. Returns (centroids,
     * assignment(vec_id, v, nrm, cid, cdist)). */
   private def dupAssignment(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import spark.implicits._
@@ -981,8 +1001,8 @@ object SimilarityQueries {
       .withColumn("cdist",
         unitDist(Similarity.cosine($"v", $"cv", $"nrm", $"cn")))
       .groupBy($"vec_id")
-      .agg(min_by(struct($"cid", $"v", $"nrm", $"cdist"),
-        struct($"cdist", $"cid")).as("best"))
+      .agg(min_by(struct($"cid", $"v", $"nrm", $"cdist"), nearFirst).as("best"))
+      .where($"best".isNotNull)
       .select($"vec_id", $"best.v".as("v"), $"best.nrm".as("nrm"),
         $"best.cid".as("cid"), $"best.cdist".as("cdist"))
       // r16 (guide §1.2/§5, the minhash-band lesson): both consumers
@@ -1436,7 +1456,7 @@ object SimilarityQueries {
     // all: the kept set is the global (cos desc, vb asc) top-k under any
     // merge order.
     val topkAgg = udaf(new Similarity.TopKNeighborsAggregator(RnnK),
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble))
+      Encoders.tuple(Encoders.scalaLong, Encoders.DOUBLE))
     val top = scored.groupBy($"va")
       .agg(topkAgg($"vb", $"cos").as("nb"))
       // every group has >=1 input row today, but guard anyway: on an
@@ -1475,7 +1495,9 @@ object SimilarityQueries {
     * order cannot perturb the hash. Scale shape: one broadcast crossJoin
     * against the 16-row centroid frame (reusing the session's memoized
     * fit), a 16-element sorted-struct collect per vector, one final
-    * 16-group aggregate — linear, no shuffle beyond the per-vector agg. */
+    * 16-group aggregate — linear, no shuffle beyond the per-vector agg.
+    * A zero-norm vector has no distance to any centroid and is left out;
+    * a zero centroid is no vector's nearest or second-nearest. */
   def silhouette(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val emb = Tables.embeddings(spark, dir)
@@ -1483,14 +1505,14 @@ object SimilarityQueries {
       .withColumn("vn", Similarity.l2norm($"v"))
     val cents = fittedCentroids(spark, dir, 16)
     val ab = emb.crossJoin(broadcast(cents))
-      .withColumn("cdist", sqrt(greatest(lit(0.0), lit(2.0) - lit(2.0) *
-        (Similarity.cosine($"v", $"cv", $"vn", $"cn")))))
+      .withColumn("cdist", unitDist(Similarity.cosine($"v", $"cv", $"vn", $"cn")))
       .groupBy($"vec_id")
-      .agg(array_sort(collect_list(struct($"cdist", $"cid"))).as("ds"))
+      .agg(array_sort(collect_list(nearFirst)).as("ds"))
+      .where(size($"ds") > 0)
       .select($"vec_id",
         $"ds".getItem(0).getField("cid").as("cid"),
         $"ds".getItem(0).getField("cdist").as("a"),
-        $"ds".getItem(1).getField("cdist").as("b"))
+        when(size($"ds") > 1, $"ds".getItem(1).getField("cdist")).as("b"))
     ab.withColumn("s", when(greatest($"a", $"b") > 0.0,
         round(($"b" - $"a") / greatest($"a", $"b"), 6)).otherwise(lit(0.0)))
       .groupBy($"cid")
@@ -1519,7 +1541,8 @@ object SimilarityQueries {
     * peer reports r_max = 0. Scale shape: one broadcast crossJoin against
     * the 16-row centroid frame, one per-cell aggregate, then a 16×16
     * centroid-only crossJoin — O(n·k) + O(k²), no shuffle beyond the
-    * per-vector argmin aggregate. */
+    * per-vector argmin aggregate. Zero-norm vectors and centroids are left
+    * out as in [[silhouette]]. */
   def dbIndex(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val emb = Tables.embeddings(spark, dir)
@@ -1527,12 +1550,12 @@ object SimilarityQueries {
       .withColumn("vn", Similarity.l2norm($"v"))
     val cents = fittedCentroids(spark, dir, 16)
     val assigned = emb.crossJoin(broadcast(cents))
-      .withColumn("cdist", sqrt(greatest(lit(0.0), lit(2.0) - lit(2.0) *
-        (Similarity.cosine($"v", $"cv", $"vn", $"cn")))))
+      .withColumn("cdist", unitDist(Similarity.cosine($"v", $"cv", $"vn", $"cn")))
       .groupBy($"vec_id")
       // rank UNROUNDED (the silhouette assignment semantics — min chord
       // IS max cosine), quantize only what enters the fold
-      .agg(min_by(struct($"cid", $"cdist"), struct($"cdist", $"cid")).as("b"))
+      .agg(min_by(struct($"cid", $"cdist"), nearFirst).as("b"))
+      .where($"b".isNotNull)
       .select($"b.cid".as("cid"), round($"b.cdist", 6).as("cdist"))
     val scatter = assigned.groupBy($"cid")
       .agg(count(lit(1)).as("n_members"),
@@ -1542,8 +1565,7 @@ object SimilarityQueries {
       .localCheckpoint() // k rows — pins the tiny frame for the self-join
     val sep = cents.as("p").join(cents.as("q"), $"p.cid" =!= $"q.cid")
       .select($"p.cid".as("ci"), $"q.cid".as("cj"),
-        round(sqrt(greatest(lit(0.0), lit(2.0) - lit(2.0) *
-          (Similarity.cosine($"p.cv", $"q.cv", $"p.cn", $"q.cn")))), 6)
+        round(unitDist(Similarity.cosine($"p.cv", $"q.cv", $"p.cn", $"q.cn")), 6)
           .as("d"))
     val ratios = scatter.as("a")
       .join(scatter.as("b"), lit(true))
@@ -1674,12 +1696,15 @@ object SimilarityQueries {
     (coarse, resid.select($"vec_id", $"ccid"), rcb, codes)
   }
 
-  /** Each (vec_id, v) row's coarse cell `ccid` and residual `r` = v − c(v). */
-  private def coarseResiduals(vecs: DataFrame, coarse: LloydFit): DataFrame = {
+  /** Each (vec_id, v) row's coarse cell `ccid` and residual `r` = v − c(v).
+    * Every ccid is a cell of the fit, so the join keeps every row; it is a
+    * LEFT join because an inner one infers `isnotnull(ccid)` and pushes it
+    * below the projection, which would run the assignment twice per row. */
+  private[graft] def coarseResiduals(vecs: DataFrame, coarse: LloydFit): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
     vecs.select($"vec_id", coarse.nearest(lit(0), $"v").getField("cid").as("ccid"), $"v")
-      .join(broadcast(coarse.frame(spark).select($"cid".as("ccid"), $"cv")), Seq("ccid"))
+      .join(broadcast(coarse.frame(spark).select($"cid".as("ccid"), $"cv")), Seq("ccid"), "left")
       .select($"vec_id", $"ccid", zip_with($"v", $"cv", (a, b) => a - b).as("r"))
   }
 

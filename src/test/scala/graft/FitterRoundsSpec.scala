@@ -108,7 +108,8 @@ class FitterRoundsSpec extends SparkSpec {
     assert(rowLocalAssign(vectors(spark, vs), zero) == zwant)
   }
 
-  test("a catalog holding an all-zero embedding fits and probes under ANSI mode") {
+  test("a catalog holding an all-zero embedding fits, probes and scores its " +
+    "cells under ANSI mode") {
     assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
     val dir = java.nio.file.Files.createTempDirectory("graft-zero-vec").toString
     graft.sources.Tables.embeddings(spark, sf)
@@ -126,6 +127,25 @@ class FitterRoundsSpec extends SparkSpec {
     assert(c5.getSeq[Double](1).forall(_ == 0.0) && c5.getDouble(2) == 0.0)
     val ann = SimilarityQueries.annIvf(spark, dir).collect()
     assert(ann.map(_.getLong(0)).toSet == (0L until 10L).toSet)
+    // the chord-distance faces leave the zero vector out and never rank a
+    // vector nearest to the zero centroid (its distance is null, not 0)
+    val n = graft.sources.Tables.embeddings(spark, dir).count()
+    for (face <- Seq(SimilarityQueries.silhouette _, SimilarityQueries.dbIndex _)) {
+      val cells = face(spark, dir).collect()
+      assert(!cells.exists(_.getLong(0) == 5L))
+      assert(cells.map(_.getLong(1)).sum == n - 1)
+      assert(cells.length > 1)
+    }
+    // the budgeted metric join still equals the exact all-pairs join
+    def pairs(df: DataFrame): Seq[(Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val capped = SimilarityQueries.embedDupCapped(spark, dir)
+    assert(pairs(capped) == pairs(SimilarityQueries.embedDupBrute(spark, dir)))
+    assert(pairs(capped).nonEmpty && !pairs(capped).exists(p => p._1 == 5L || p._2 == 5L))
+    assert(pairs(SimilarityQueries.embedDupPairs(spark, dir)) == pairs(capped))
+    assert(SimilarityQueries.semanticDedup(spark, dir).count() > 0)
+    val rnn = SimilarityQueries.rnnPairs(spark, dir).collect()
+    assert(rnn.nonEmpty && !rnn.exists(r => r.getLong(0) == 5L || r.getLong(1) == 5L))
   }
 
   /** A nullable double's exact bits: NaN equals NaN, -0.0 differs from 0.0. */
@@ -317,6 +337,23 @@ class FitterRoundsSpec extends SparkSpec {
     val none = edges.filter(lit(false))
     val (noLabels, noRounds) = SimilarityQueries.minLabels(none)
     assert(noLabels.count() == 0 && noRounds == referenceLabels(none)._2)
+  }
+
+  /** How many times `df`'s optimized plan evaluates a Scala UDF. */
+  private def udfCalls(df: DataFrame): Int =
+    "UDF\\(".r.findAllIn(df.queryExecution.optimizedPlan.toString).length
+
+  test("plan: a Lloyd round and the IVF-PQ residuals run the assignment " +
+    "UDF once per row") {
+    val emb = graft.sources.Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val fit = SimilarityQueries.lloyd(emb.select(lit(0).as("key"), col("vec_id"), col("v")),
+      16, 0, SquaredL2)
+    val round = SimilarityQueries.roundMeans(
+      emb.select(lit(0).as("key"), col("vec_id"), col("v")), fit)
+    assert(udfCalls(round) == 1, round.queryExecution.optimizedPlan.toString)
+    val resid = SimilarityQueries.coarseResiduals(emb, fit)
+    assert(udfCalls(resid) == 1, resid.queryExecution.optimizedPlan.toString)
   }
 
   /** Jobs the body submits from this thread, counted by a listener on a

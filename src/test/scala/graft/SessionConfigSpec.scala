@@ -65,7 +65,7 @@ class SessionConfigSpec extends SparkSpec {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val topk = udaf(new graft.functions.Similarity.TopKNeighborsAggregator(5),
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble))
+      Encoders.tuple(Encoders.scalaLong, Encoders.DOUBLE))
     // collect through AQE wrappers: AdaptiveSparkPlanExec holds the final
     // plan out-of-line, and materialized stages nest under QueryStageExec
     def aggsIn(p: SparkPlan): Seq[ObjectHashAggregateExec] = {

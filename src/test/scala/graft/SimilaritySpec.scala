@@ -346,4 +346,15 @@ class SimilaritySpec extends SparkSpec {
     // docs exceed clustered units in any split holding a full cluster
     rows.foreach(r => assert(r.getLong(2) <= r.getLong(1)))
   }
+
+  test("TopKNeighborsAggregator: a null cosine is no neighbor") {
+    val topk = udaf(new Similarity.TopKNeighborsAggregator(2),
+      org.apache.spark.sql.Encoders.tuple(org.apache.spark.sql.Encoders.scalaLong,
+        org.apache.spark.sql.Encoders.DOUBLE))
+    val rows = Seq[(Long, Long, java.lang.Double)](
+      (1L, 2L, null), (1L, 3L, -0.5), (4L, 2L, null)).toDF("va", "vb", "cos")
+    val got = rows.groupBy($"va").agg(topk($"vb", $"cos").as("nb"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    assert(got == Map(1L -> Seq(-0.5, 3.0), 4L -> Seq()))
+  }
 }
