@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * over decodable payloads is a REAL statistic (the 8-bin luminance
   * histogram, [[histFeature]]), and resize is a REAL nearest-neighbor
   * resample over decoded rasters ([[resizePixels]]). The deterministic
-  * byte-length FAKES ([[decodeStub]]/[[featureStub]]/[[resizeStub]])
+  * byte-length FAKES ([[decodeStub]]/[[featureStub]])
   * remain only as the fallback for payloads outside those formats
   * (arithmetic-coded/hierarchical/12-bit JPEG, 1/2-bpp BMP, the
   * testdata's UTF-8 text payloads). AUDIO decode is REAL for RIFF/WAVE PCM at 8 and 16 bits
@@ -756,14 +756,6 @@ object Multimodal {
       case Some(img) => MediaFeature(r.doc_id, histFeature(img))
       case None => featureStub(r)
     }
-
-  /** STUB resize: returns a payload of exactly `targetBytes` (≤ 0 → empty),
-    * cycling the source bytes — stands in for a pixel resample. */
-  def resizeStub(payload: Array[Byte], targetBytes: Int): Array[Byte] = {
-    if (targetBytes <= 0) Array.emptyByteArray
-    else if (payload.isEmpty) new Array[Byte](targetBytes)
-    else Array.tabulate(targetBytes)(i => payload(i % payload.length))
-  }
 
   /** STUB frame sampling: split the payload into `n` equal-length frames
     * (remainder bytes dropped; n ≤ 0 or payload shorter than n → empty) —
@@ -1865,16 +1857,6 @@ object Multimodal {
                         n: Int): Option[IndexedSeq[PixelImage]] =
     if (n <= 0) None
     else decodeVideoFrames(p).map { fs =>
-      if (fs.length <= n) fs
-      else IndexedSeq.tabulate(n)(i => fs(i * fs.length / n))
-    }
-
-  /** GIF-only sampling (kept for compatibility; [[sampleVideoFrames]] is
-    * the registered path and adds the AVI container). */
-  def sampleGifFrames(p: Array[Byte],
-                      n: Int): Option[IndexedSeq[PixelImage]] =
-    if (n <= 0) None
-    else decodeGifFrames(p).map { fs =>
       if (fs.length <= n) fs
       else IndexedSeq.tabulate(n)(i => fs(i * fs.length / n))
     }

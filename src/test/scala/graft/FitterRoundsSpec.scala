@@ -108,14 +108,21 @@ class FitterRoundsSpec extends SparkSpec {
     assert(rowLocalAssign(vectors(spark, vs), zero) == zwant)
   }
 
-  test("a catalog holding an all-zero embedding fits, probes and scores its " +
-    "cells under ANSI mode") {
-    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+  /** A copy of the sf0.001 catalog whose vec_id 5 (a k-means seed) is an
+    * all-zero embedding. */
+  private lazy val zeroCatalog: String = {
     val dir = java.nio.file.Files.createTempDirectory("graft-zero-vec").toString
     graft.sources.Tables.embeddings(spark, sf)
       .withColumn("embedding", when(col("vec_id") === 5L, array_repeat(lit(0.0f), 64))
         .otherwise(col("embedding")))
       .write.parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  test("a catalog holding an all-zero embedding fits, probes and scores its " +
+    "cells under ANSI mode") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val dir = zeroCatalog
     val emb = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val cents = SimilarityQueries.kmeansCentroids(emb, 16, SimilarityQueries.KmeansIters)
@@ -146,6 +153,73 @@ class FitterRoundsSpec extends SparkSpec {
     assert(SimilarityQueries.semanticDedup(spark, dir).count() > 0)
     val rnn = SimilarityQueries.rnnPairs(spark, dir).collect()
     assert(rnn.nonEmpty && !rnn.exists(r => r.getLong(0) == 5L || r.getLong(1) == 5L))
+  }
+
+  private def catalog(s: SparkSession, dir: String): DataFrame =
+    graft.sources.Tables.embeddings(s, dir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+
+  /** The former IVF-flat and SemDeDup cell assignment: crossJoin against
+    * the k-row centroid frame, argmax as max_by(.., struct(cosine, -cid)). */
+  private def referenceCells(vecs: DataFrame, k: Int): DataFrame = {
+    val cents = SimilarityQueries.kmeansCentroids(vecs, k, SimilarityQueries.KmeansIters)
+    vecs.withColumn("nrm", Similarity.l2norm(col("v")))
+      .crossJoin(broadcast(cents))
+      .withColumn("ccos", Similarity.cosine(col("v"), col("cv"), col("nrm"), col("cn")))
+      .groupBy(col("vec_id"))
+      .agg(max_by(struct(col("cid"), col("v"), col("nrm")), struct(col("ccos"), -col("cid")))
+        .as("best"))
+      .select(col("vec_id"), col("best.v").as("v"), col("best.nrm").as("nrm"),
+        col("best.cid").as("cid"))
+  }
+
+  /** The former annIvf: top-3 within the query's cell over referenceCells. */
+  private def referenceAnnIvf(dir: String): Seq[Row] = {
+    val assigned = referenceCells(catalog(spark, dir), 16)
+    val queries = assigned.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"),
+        col("cid").as("qcid"))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("neighbor_id"))
+    assigned.join(broadcast(queries),
+        col("cid") === col("qcid") && col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        round(Similarity.cosine(col("qv"), col("v"), col("qn"), col("nrm")), 6).as("cosine"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 3)
+      .orderBy(col("query_id"), col("rank"))
+      .collect().toSeq
+  }
+
+  /** The former semanticDedup: within-cell pairs over referenceCells. */
+  private def referenceSemanticDedup(dir: String): Seq[Row] = {
+    val vecs = catalog(spark, dir)
+    val assigned = referenceCells(vecs, SimilarityQueries.semDedupK(vecs.count()))
+    assigned.as("a")
+      .join(assigned.as("b"), col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
+      .withColumn("cos", Similarity.cosine(col("a.v"), col("b.v"), col("a.nrm"), col("b.nrm")))
+      .filter(col("cos") >= SimilarityQueries.EmbedDupThreshold)
+      .select(col("a.cid").as("cluster"), col("a.vec_id").as("vec_a"),
+        col("b.vec_id").as("vec_b"), round(col("cos"), 6).as("cosine"))
+      .orderBy(col("vec_a"), col("vec_b"))
+      .collect().toSeq
+  }
+
+  test("annIvf and semanticDedup: the row-local assignment gives the rows of " +
+    "the former crossJoin + max_by form, a zero vector included") {
+    for (dir <- Seq(sf, zeroCatalog)) {
+      val ann = SimilarityQueries.annIvf(spark, dir).collect().toSeq
+      assert(ann == referenceAnnIvf(dir))
+      assert(ann.length == 30)
+      val sem = SimilarityQueries.semanticDedup(spark, dir).collect().toSeq
+      assert(sem == referenceSemanticDedup(dir))
+      assert(sem.nonEmpty)
+    }
+    // one assignment per scanned row: annIvf scans the catalog and its 10
+    // queries, semanticDedup the probe and the build side; the join's
+    // inferred isnotnull(cid) must not copy the UDF into a filter
+    for (df <- Seq(SimilarityQueries.annIvf(spark, sf), SimilarityQueries.semanticDedup(spark, sf)))
+      assert(udfCalls(df) == 2, df.queryExecution.optimizedPlan.toString)
   }
 
   /** A nullable double's exact bits: NaN equals NaN, -0.0 differs from 0.0. */
@@ -339,6 +413,60 @@ class FitterRoundsSpec extends SparkSpec {
     assert(noLabels.count() == 0 && noRounds == referenceLabels(none)._2)
   }
 
+  /** A (doc_a, doc_b) frame with the nullable long columns a parquet
+    * doc_id gives. */
+  private def pairFrame(s: SparkSession, pairs: Seq[(Long, Long)]): DataFrame = {
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("doc_a", "long").add("doc_b", "long")
+    s.createDataFrame(java.util.Arrays.asList(
+      pairs.map { case (a, b) => Row(a, b) }: _*), schema)
+  }
+
+  /** The driver's union-find components equal the executors' min-label
+    * fixpoint over the same pairs: schema, rows and row order. */
+  private def assertSameComponents(pairs: Seq[(Long, Long)]): Array[Row] = {
+    val local = SimilarityQueries.unionFindComponents(spark, pairs)
+    val propagated = SimilarityQueries.propagatedComponents(pairFrame(spark, pairs))
+    assert(local.schema == propagated.schema)
+    val got = local.collect()
+    assert(got.toSeq == propagated.collect().toSeq)
+    got
+  }
+
+  test("unionFindComponents: same labels as minLabels on a long path, on " +
+    "seeded random graphs and on the empty graph") {
+    val paths = (1L until 9L).map(i => (i + 1, i)) ++
+      (20L until 26L).map(i => (i, i + 1)) ++
+      Seq((40L, 41L), (41L, 42L), (42L, 40L))
+    val got = assertSameComponents(paths)
+    assert(got.map(_.getLong(1)).toSet == Set(1L, 20L, 40L))
+    assert(got.filter(_.getBoolean(2)).map(_.getLong(0)).toSeq == Seq(1L, 20L, 40L))
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      // sparse enough to leave several components, plus a repeated pair,
+      // its reverse and a self-loop
+      val drawn = Seq.fill(40)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+      val edges = drawn ++ Seq(drawn.head, drawn.head.swap, (61L, 61L))
+      val labels = assertSameComponents(edges)
+      assert(labels.map(_.getLong(1)).distinct.length > 1)
+    }
+    assert(assertSameComponents(Seq.empty).isEmpty)
+  }
+
+  test("computeComponents: with cap 0 the executor fallback gives the same " +
+    "frame as the driver labeling") {
+    val local = SimilarityQueries.computeComponents(spark, Sf01)
+    val fallback = SimilarityQueries.computeComponents(spark, Sf01, cap = 0)
+    assert(local.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(!fallback.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(local.schema == fallback.schema)
+    val rows = local.collect()
+    assert(rows.toSeq == fallback.collect().toSeq)
+    assert(rows.nonEmpty && rows.exists(!_.getBoolean(2)))
+  }
+
   /** How many times `df`'s optimized plan evaluates a Scala UDF. */
   private def udfCalls(df: DataFrame): Int =
     "UDF\\(".r.findAllIn(df.queryExecution.optimizedPlan.toString).length
@@ -402,8 +530,10 @@ class FitterRoundsSpec extends SparkSpec {
   test("job pin: dedupComponents in a fresh session at sf0.01") {
     val s = spark.newSession()
     val jobs = jobsOf(s)(SimilarityQueries.dedupComponents(s, Sf01))
-    // MinHash pairs, the edge checkpoint, one checkpoint per round and the
-    // sorted output; the join + count() rounds ran 33
-    assert(jobs <= 18, s"dedupComponents ran $jobs jobs")
+    // the MinHash bands' checkpoint and stages, then one collect of the
+    // verified pairs, labeled on the driver; the executor min-label rounds
+    // with their edge, round and sorted-output checkpoints ran 18, and the
+    // join + count() rounds before them 33
+    assert(jobs <= 6, s"dedupComponents ran $jobs jobs")
   }
 }

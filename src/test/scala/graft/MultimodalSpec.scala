@@ -7,6 +7,23 @@ class MultimodalSpec extends SparkSpec {
   private val sql = SparkSpec.spark
   import sql.implicits._
 
+  /** Byte-cycling resize to exactly `targetBytes` (≤ 0 → empty): the stub
+    * these cases pin, which no query uses. */
+  private def resizeStub(payload: Array[Byte], targetBytes: Int): Array[Byte] =
+    if (targetBytes <= 0) Array.emptyByteArray
+    else if (payload.isEmpty) new Array[Byte](targetBytes)
+    else Array.tabulate(targetBytes)(i => payload(i % payload.length))
+
+  /** GIF-only frame sampling, the selection of
+    * [[Multimodal.sampleVideoFrames]] without its AVI container. */
+  private def sampleGifFrames(p: Array[Byte], n: Int)
+      : Option[IndexedSeq[Multimodal.PixelImage]] =
+    if (n <= 0) None
+    else Multimodal.decodeGifFrames(p).map { fs =>
+      if (fs.length <= n) fs
+      else IndexedSeq.tabulate(n)(i => fs(i * fs.length / n))
+    }
+
   test("decode stub: deterministic metadata from byte length") {
     val r = MediaRecord(1L, "img/test", "abcd".getBytes("UTF-8"))
     val d = Multimodal.decodeStub(r)
@@ -23,9 +40,9 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("resize stub: exact target size, cycles source bytes, empty-safe") {
-    val out = Multimodal.resizeStub(Array[Byte](1, 2, 3), 7)
+    val out = resizeStub(Array[Byte](1, 2, 3), 7)
     assert(out.toSeq == Seq[Byte](1, 2, 3, 1, 2, 3, 1))
-    assert(Multimodal.resizeStub(Array.emptyByteArray, 4).toSeq == Seq[Byte](0, 0, 0, 0))
+    assert(resizeStub(Array.emptyByteArray, 4).toSeq == Seq[Byte](0, 0, 0, 0))
   }
 
   test("frame sample stub: n equal frames, remainder dropped, short-payload-safe") {
@@ -34,7 +51,7 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.frameSampleStub(Array[Byte](1), 3).isEmpty)
     assert(Multimodal.frameSampleStub(Array[Byte](1, 2), 0).isEmpty)
     assert(Multimodal.frameSampleStub(Array[Byte](1, 2), -1).isEmpty)
-    assert(Multimodal.resizeStub(Array[Byte](1), -4).isEmpty)
+    assert(resizeStub(Array[Byte](1), -4).isEmpty)
   }
 
   private def pngBytes(w: Int, h: Int, colorType: Byte): Array[Byte] = {
@@ -433,17 +450,17 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.decodeGifFrames("GIF89a but not really".getBytes).isEmpty)
     val good = fixtureBytes("gif_anim.gif")
     assert(Multimodal.decodeGifFrames(good.take(40)).isEmpty)
-    assert(Multimodal.sampleGifFrames("plain text".getBytes, 3).isEmpty)
+    assert(sampleGifFrames("plain text".getBytes, 3).isEmpty)
   }
 
   test("gif frame sampling: evenly-spaced floor(i*f/n) selection, all frames " +
     "when clip is short") {
     val wide = fixtureBytes("gif_wide.gif") // 5 frames
-    val s3 = Multimodal.sampleGifFrames(wide, 3).get
+    val s3 = sampleGifFrames(wide, 3).get
     assert(s3.length == 3) // file frames 0, 1, 3 — pinned via q_media_video
-    val all = Multimodal.sampleGifFrames(wide, 9).get
+    val all = sampleGifFrames(wide, 9).get
     assert(all.length == 5)
-    val anim = Multimodal.sampleGifFrames(fixtureBytes("gif_anim.gif"), 4).get
+    val anim = sampleGifFrames(fixtureBytes("gif_anim.gif"), 4).get
     assert(anim.length == 4)
   }
 

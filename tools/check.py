@@ -8,6 +8,7 @@ name and rows sorted. Usage:
 
     sbt "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_out"
     python3 tools/check.py /root/testdata/sf0.01 /tmp/verify_out [out.json]
+    python3 tools/test_check.py      # tests of the hash canonicalisation
 
 The optional third argument writes a driver-style CORRECTNESS json
 (per-query rows/schema/hash match) — used to publish sweeps at tiers the
@@ -24,12 +25,19 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 def canon(df: pd.DataFrame) -> str:
     df = df.reindex(sorted(df.columns), axis=1)
-    # normalize dtypes to strings with fixed float repr
-    def cell(v):
+    # normalize dtypes to strings with fixed float repr. Outside float
+    # columns one missing cell reads None from the Spark parquet but NaN
+    # from DuckDB (a nullable BOOLEAN), so there every missing cell is one
+    # null token; float columns keep their 'nan'.
+    floats = [pd.api.types.is_float_dtype(t) for t in df.dtypes]
+    def cell(v, is_float):
+        if not is_float and pd.api.types.is_scalar(v) and pd.isna(v):
+            return repr(None)
         if isinstance(v, float):
             return repr(round(v, 9))
         return repr(v)
-    rows = sorted(tuple(cell(v) for v in row) for row in df.itertuples(index=False, name=None))
+    rows = sorted(tuple(cell(v, f) for v, f in zip(row, floats))
+                  for row in df.itertuples(index=False, name=None))
     return hashlib.md5(repr(rows).encode()).hexdigest()
 
 def main(sf_dir, out_dir, json_out=None):
