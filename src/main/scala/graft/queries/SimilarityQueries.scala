@@ -664,9 +664,7 @@ object SimilarityQueries {
     * identically; ties break on neighbor_id. */
   def knnCosine(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.l2norm($"v"))
+    val emb = catalog(spark, dir).withColumn("nrm", Similarity.l2norm($"v"))
     val queries = emb.filter($"vec_id" < 10)
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"))
     val scored = emb.crossJoin(broadcast(queries))
@@ -707,9 +705,7 @@ object SimilarityQueries {
     * plans flat. */
   def mmrRerank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.l2norm($"v"))
+    val emb = catalog(spark, dir).withColumn("nrm", Similarity.l2norm($"v"))
     val queries = emb.filter($"vec_id" < 10)
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"))
     val scored = emb.crossJoin(broadcast(queries))
@@ -794,11 +790,17 @@ object SimilarityQueries {
     * and whether the highest or the lowest score wins. Scores fold with
     * [[Similarity.dotOf]] — `dot_product_d`'s fold — so each one equals its
     * Spark column to the bit; a null vector or centroid scores null. */
-  private[graft] sealed abstract class Metric(val higherWins: Boolean) {
+  private[graft] sealed abstract class Metric(val higherWins: Boolean,
+      val skipsNull: Boolean = false) {
     /** The norm term of one side, computed once per vector and centroid. */
     def norm(v: Array[java.lang.Double]): java.lang.Double
     def score(x: Array[java.lang.Double], xn: java.lang.Double,
               c: Array[java.lang.Double], cn: java.lang.Double): java.lang.Double
+    /** Whether score `s` wins over `t` in SQL's order ([[sqlCompare]]). */
+    def ahead(s: java.lang.Double, t: java.lang.Double): Boolean = {
+      val order = sqlCompare(s, t)
+      if (higherWins) order > 0 else order < 0
+    }
   }
 
   /** Cosine, highest wins: dot(v, c) / nullif(‖v‖·‖c‖, 0), the
@@ -826,12 +828,29 @@ object SimilarityQueries {
       else (xn - 2.0 * Similarity.dotOf(x, c)) + cn
   }
 
+  /** Unit-sphere chord distance, lowest wins: √max(0, 2 − 2·cos) from the
+    * [[Cosine]] score, the `unitDist` column. A null cosine (a zero-norm
+    * side) is no distance: that centroid is skipped, and a vector with no
+    * distance gets no cell. The chord-distance faces rank by it, not by
+    * cosine, because sqrt and the clamp collapse adjacent cosines to one
+    * distance, whose tie then goes to the lowest cid. */
+  private[graft] case object Chord extends Metric(higherWins = false, skipsNull = true) {
+    def norm(v: Array[java.lang.Double]): java.lang.Double = Cosine.norm(v)
+    def score(x: Array[java.lang.Double], xn: java.lang.Double,
+              c: Array[java.lang.Double], cn: java.lang.Double): java.lang.Double = {
+      val cos = Cosine.score(x, xn, c, cn)
+      if (cos == null) null else math.sqrt(math.max(0.0, 2.0 - 2.0 * cos))
+    }
+  }
+
   /** One driver-held Lloyd centroid. `cv` keeps the SQL nulls of the column
     * it stands for (a null seed vector, a null mean element). */
   private[graft] final case class Centroid(cid: Long, cv: Array[java.lang.Double])
 
-  /** A vector's nearest centroid and its score. */
-  private[graft] final case class Nearest(cid: Long, score: java.lang.Double)
+  /** A vector's nearest centroid and its score, and the runner-up's (null
+    * when the key has one candidate). */
+  private[graft] final case class Nearest(cid: Long, score: java.lang.Double,
+      cid2: java.lang.Long, score2: java.lang.Double)
 
   /** A driver-held Lloyd fit: per key, its centroids sorted by cid. */
   private[graft] final case class LloydFit(metric: Metric, cents: Map[Int, Array[Centroid]]) {
@@ -934,35 +953,43 @@ object SimilarityQueries {
     else if (b == null) 1
     else org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(a, b)
 
-  /** Row-local nearest centroid: `(key, v) → (cid, score)` over the
-    * centroids of the row's key, the exact result of the crossJoin argmax
-    * `max_by(cid, struct(score, -cid))` (a `higherWins` metric) or argmin
-    * `min_by(cid, struct(score, cid))` against `cents`, without the join.
-    * The order is SQL's struct order: NaN above every number, -0.0 equal to
-    * 0.0, null below everything — so a null cosine never wins and a null d²
-    * always does — and ties go to the lowest cid. A key with no centroids
-    * gives null. The centroids and their norms travel in the UDF's closure,
-    * not in generated code; each key's array must be sorted by cid. */
+  /** Row-local nearest centroid: `(key, v) → (cid, score, cid2, score2)`
+    * over the centroids of the row's key — the best and the runner-up
+    * under the crossJoin argmax `max_by(cid, struct(score, -cid))` (a
+    * `higherWins` metric) or argmin `min_by(cid, struct(score, cid))`
+    * against `cents`, without the join. The order is SQL's struct order:
+    * NaN above every number, -0.0 equal to 0.0, null below everything — so
+    * a null cosine never wins and a null d² always does — and ties go to
+    * the lowest cid. A `skipsNull` metric leaves null scores out, as
+    * `min_by` skips a null key: a row with no score gives null, and so does
+    * a key with no centroids. The centroids and their norms travel in the
+    * UDF's closure, not in generated code; each key's array must be sorted
+    * by cid. */
   private[graft] def nearestCentroid(metric: Metric, cents: Map[Int, Array[Centroid]])
       : org.apache.spark.sql.expressions.UserDefinedFunction = {
     val normed = cents.map { case (key, cs) => key -> cs.map(c => (c, metric.norm(c.cv))) }
     udf { (key: Int, v: Seq[java.lang.Double]) =>
-      normed.get(key).map { cs =>
+      normed.get(key).flatMap { cs =>
         val x = boxed(v)
         val xn = metric.norm(x)
-        var best = cs(0)._1.cid
-        var bestScore = metric.score(x, xn, cs(0)._1.cv, cs(0)._2)
-        var i = 1
+        var best, next = -1
+        var bestScore, nextScore: java.lang.Double = null
+        var i = 0
         while (i < cs.length) {
           val s = metric.score(x, xn, cs(i)._1.cv, cs(i)._2)
-          val order = sqlCompare(s, bestScore)
-          if (if (metric.higherWins) order > 0 else order < 0) {
-            best = cs(i)._1.cid
-            bestScore = s
+          if (s != null || !metric.skipsNull) {
+            if (best < 0 || metric.ahead(s, bestScore)) {
+              next = best; nextScore = bestScore
+              best = i; bestScore = s
+            } else if (next < 0 || metric.ahead(s, nextScore)) {
+              next = i; nextScore = s
+            }
           }
           i += 1
         }
-        Nearest(best, bestScore)
+        if (best < 0) None
+        else Some(Nearest(cs(best)._1.cid, bestScore,
+          if (next < 0) null else java.lang.Long.valueOf(cs(next)._1.cid), nextScore))
       }.orNull
     }
   }
@@ -993,16 +1020,26 @@ object SimilarityQueries {
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
-  /** The cell of every (vec_id, v) row under the cosine `fit` (argmax
-    * cosine, tie → lowest cid; a zero-norm vector's cosines are null, so it
-    * takes the lowest cid) as a row-local column next to (vec_id, v, nrm):
-    * no n×k crossJoin and no argmax shuffle. The assignment is marked
-    * nondeterministic only to pin it where it is: an inner join on cid
-    * infers `isnotnull(cid)`, and a deterministic UDF would be copied into
-    * that filter below this projection and run twice per row. */
+  /** The cell of every (vec_id, v) row under the one-key `fit` as
+    * row-local columns next to (vec_id, v, nrm): the nearest centroid
+    * (cid, score) and the runner-up (cid2, score2), no n×k crossJoin and no
+    * aggregate shuffle. Under [[Cosine]] (argmax, tie → lowest cid) a
+    * zero-norm vector's cosines are null, so it takes the lowest cid; under
+    * [[Chord]] it has no distance, so no cell, and is left out. The
+    * assignment is marked nondeterministic only to pin it where it is: the
+    * filter here, or an inner join's inferred `isnotnull(cid)`, would
+    * otherwise be copied below this projection and run it twice per row. */
   private def assignedCells(vecs: DataFrame, fit: LloydFit): DataFrame =
     vecs.select(col("vec_id"), col("v"), Similarity.l2norm(col("v")).as("nrm"),
-      fit.nearest.asNondeterministic()(lit(0), col("v")).getField("cid").as("cid"))
+        fit.nearest.asNondeterministic()(lit(0), col("v")).as("n"))
+      .where(col("n").isNotNull)
+      .select(col("vec_id"), col("v"), col("nrm"), col("n.*"))
+
+  /** [[assignedCells]] of the catalog under the session's k-cell fit ranked
+    * by [[Chord]] distance: score is the distance to the nearest centroid,
+    * score2 to the runner-up. */
+  private[graft] def chordCells(spark: SparkSession, dir: String, k: Int): DataFrame =
+    assignedCells(catalog(spark, dir), fittedQuantizer(spark, dir, k).copy(metric = Chord))
 
   /** The fitted k-means centroids as a (cid, dim, mean_val) profile — the
     * registered, ORACLE-CHECKED face of [[kmeansCentroids]]: DuckDB reruns
@@ -1054,44 +1091,42 @@ object SimilarityQueries {
   private def unitDist(cos: Column): Column =
     when(cos.isNotNull, sqrt(greatest(lit(0.0), lit(2.0) - lit(2.0) * cos)))
 
-  /** The (cdist, cid) ranking key of a vector–centroid row, null where the
-    * distance is null: min_by skips a null key and collect_list a null
-    * element, so a zero vector joins no cell and a zero centroid is
-    * nobody's nearest. (A struct with a null cdist would sort FIRST, and a
-    * `where` on cdist would be pushed into the crossJoin's condition and
-    * compute every cosine twice.) */
-  private def nearFirst: Column =
-    when(col("cdist").isNotNull, struct(col("cdist"), col("cid")))
-
-  /** Shared front half of the exact metric join family: fit the
-    * [[DupCells]]-cell quantizer and assign every vector to its nearest
-    * cell (min chord distance ⟺ max cosine, tie → lowest cid) as a min_by
-    * partial+final aggregate, not a window sort. A zero-norm vector has no
-    * cell (its cosines are null) and drops out. Returns (centroids,
+  /** Shared front half of the exact metric join family: the
+    * [[DupCells]]-cell fit's centroids and every vector's nearest cell by
+    * chord distance ([[chordCells]]; min chord distance ⟺ max cosine up to
+    * the clamp, tie → lowest cid), a row-local column with no shuffle. A
+    * zero-norm vector has no cell and drops out. Returns (centroids,
     * assignment(vec_id, v, nrm, cid, cdist)). */
-  private def dupAssignment(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  private[graft] def dupAssignment(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.l2norm($"v"))
-    val cents = fittedCentroids(spark, dir, DupCells)
-    val assigned = emb.crossJoin(broadcast(cents))
-      .withColumn("cdist",
-        unitDist(Similarity.cosine($"v", $"cv", $"nrm", $"cn")))
-      .groupBy($"vec_id")
-      .agg(min_by(struct($"cid", $"v", $"nrm", $"cdist"), nearFirst).as("best"))
-      .where($"best".isNotNull)
-      .select($"vec_id", $"best.v".as("v"), $"best.nrm".as("nrm"),
-        $"best.cid".as("cid"), $"best.cdist".as("cdist"))
-      // r16 (guide §1.2/§5, the minhash-band lesson): both consumers
-      // reference this frame 4-6 times (radii, cell sizes, probe sample,
-      // member side), and the broadcast-build references live in separate
-      // jobs AQE cannot stitch to the probe-side shuffle — the corpus
-      // assignment pass ran up to 6× per query (plan-verified: 6 parquet
-      // scans in q_embed_dup_capped, 4 in the smalltier twin). Checkpoint
-      // once; every reference reads executor-resident blocks.
+    val assigned = chordCells(spark, dir, DupCells)
+      .select($"vec_id", $"v", $"nrm", $"cid", $"score".as("cdist"))
+      // both consumers reference this frame 4-6 times (radii, cell sizes,
+      // probe sample, member side), and the broadcast-build references run
+      // in jobs of their own: checkpoint once, so the n·k assignment scan
+      // runs once and every reference reads executor-resident blocks
       .localCheckpoint()
-    (cents, assigned)
+    (fittedCentroids(spark, dir, DupCells), assigned)
+  }
+
+  /** The triangle-inequality prune of the metric join: the (ci, cj) cell
+    * pairs whose centroid distance is at most radᵢ + r + radⱼ, where a
+    * cell's radius is its farthest member's distance and r the chord radius
+    * of [[EmbedDupThreshold]]. Every other cell pair holds no qualifying
+    * pair. */
+  private def cellPairs(cents: DataFrame, assigned: DataFrame): DataFrame = {
+    val spark = cents.sparkSession
+    import spark.implicits._
+    val r = math.sqrt(2.0 - 2.0 * EmbedDupThreshold)
+    val radii = assigned.groupBy($"cid").agg(max($"cdist").as("rad"))
+    cents.as("p").crossJoin(cents.as("q"))
+      .select($"p.cid".as("ci"), $"q.cid".as("cj"),
+        unitDist(Similarity.cosine($"p.cv", $"q.cv", $"p.cn", $"q.cn")).as("cc"))
+      .join(radii.as("ri"), $"ci" === $"ri.cid")
+      .join(radii.as("rj"), $"cj" === $"rj.cid")
+      .filter($"cc" <= $"ri.rad" + $"rj.rad" + lit(r))
+      .select($"ci", $"cj")
   }
 
   /** Embedding-cosine near-duplicate pairs (cos ≥ 0.4) as an EXACT
@@ -1100,11 +1135,14 @@ object SimilarityQueries {
     *  1. on unit vectors, cos(a,b) ≥ t ⟺ ‖â−b̂‖ ≤ r = √(2−2t);
     *  2. assign every vector to its nearest of [[DupCells]] k-means
     *     centroids ([[kmeansCentroids]], deterministic lowest-vec_id
-    *     seeds), recording the distance to its centroid;
+    *     seeds), recording the distance to its centroid — a row-local
+    *     column against the driver-held fit ([[dupAssignment]]), so the
+    *     assignment is one map-only pass with no join and no shuffle;
     *  3. per-cell radius = max member distance; by the triangle inequality a
     *     qualifying pair can only span cells (i,j) with
     *     d(cᵢ,cⱼ) ≤ radᵢ + r + radⱼ — every other cell pair is pruned with
-    *     zero false negatives, so the exact all-pairs oracle applies;
+    *     zero false negatives, so the exact all-pairs oracle applies
+    *     ([[cellPairs]], O(C²) on the centroids alone);
     *  4. members of surviving cell pairs join on cell ids (the C² cell-pair
     *     list is broadcast; the data shuffles on its cell key) and the exact
     *     cosine is verified with the codegen'd dot product.
@@ -1121,17 +1159,7 @@ object SimilarityQueries {
   def embedDupPairs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val t = EmbedDupThreshold
-    val r = math.sqrt(2.0 - 2.0 * t)
     val (cents, assigned) = dupAssignment(spark, dir)
-    val radii = assigned.groupBy($"cid").agg(max($"cdist").as("rad"))
-    val centDist = cents.as("p").crossJoin(cents.as("q"))
-      .select($"p.cid".as("ci"), $"q.cid".as("cj"),
-        unitDist(Similarity.cosine($"p.cv", $"q.cv", $"p.cn", $"q.cn")).as("cc"))
-    val cellPairs = centDist
-      .join(radii.as("ri"), $"ci" === $"ri.cid")
-      .join(radii.as("rj"), $"cj" === $"rj.cid")
-      .filter($"cc" <= $"ri.rad" + $"rj.rad" + lit(r))
-      .select($"ci", $"cj")
     // SALT the verification join: keyed on cell id alone its parallelism
     // is capped at DupCells tasks (and AQE, seeing small shuffle BYTES,
     // coalesces further — at the 100× tier the 2e10-dot-product stage ran
@@ -1142,7 +1170,7 @@ object SimilarityQueries {
     // replicated side. Salt is a constant (not data-sized): the goal is
     // key count ≥ cluster cores, not finer pruning.
     val salted = assigned.as("a")
-      .join(broadcast(cellPairs), $"a.cid" === $"ci")
+      .join(broadcast(cellPairs(cents, assigned)), $"a.cid" === $"ci")
       .withColumn("salt", pmod(hash($"a.vec_id"), lit(EmbedDupSalt)))
     val build = assigned.as("b")
       .withColumn("salt", explode(sequence(lit(0), lit(EmbedDupSalt - 1))))
@@ -1168,9 +1196,7 @@ object SimilarityQueries {
     * broadcast cannot scale past one executor's memory). */
   def embedDupBrute(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.l2norm($"v"))
+    val emb = catalog(spark, dir).withColumn("nrm", Similarity.l2norm($"v"))
     emb.as("a").crossJoin(broadcast(emb.as("b")))
       .filter($"a.vec_id" < $"b.vec_id")
       .withColumn("cos", Similarity.cosine($"a.v", $"b.v", $"a.nrm", $"b.nrm"))
@@ -1222,17 +1248,7 @@ object SimilarityQueries {
       budget: Int): DataFrame = {
     import spark.implicits._
     val t = EmbedDupThreshold
-    val r = math.sqrt(2.0 - 2.0 * t)
     val (cents, assigned) = dupAssignment(spark, dir)
-    val radii = assigned.groupBy($"cid").agg(max($"cdist").as("rad"))
-    val centDist = cents.as("p").crossJoin(cents.as("q"))
-      .select($"p.cid".as("ci"), $"q.cid".as("cj"),
-        unitDist(Similarity.cosine($"p.cv", $"q.cv", $"p.cn", $"q.cn")).as("cc"))
-    val cellPairs = centDist
-      .join(radii.as("ri"), $"ci" === $"ri.cid")
-      .join(radii.as("rj"), $"cj" === $"rj.cid")
-      .filter($"cc" <= $"ri.rad" + $"rj.rad" + lit(r))
-      .select($"ci", $"cj")
     val cellSizes = assigned.groupBy($"cid").agg(count(lit(1)).as("csz"))
     // deterministic unbiased probe sample: rank cell members by
     // md5(vec_id) — replayable bit-for-bit in the DuckDB oracle
@@ -1244,7 +1260,7 @@ object SimilarityQueries {
       .select($"vec_id", $"v", $"nrm", $"cid")
     // probe side ≤ cells × budget rows → broadcast; members stay map-only
     val pairs = assigned.as("b")
-      .join(broadcast(cellPairs), $"b.cid" === $"cj")
+      .join(broadcast(cellPairs(cents, assigned)), $"b.cid" === $"cj")
       .join(broadcast(probes).as("a"),
         $"a.cid" === $"ci" && $"a.vec_id" =!= $"b.vec_id")
       .withColumn("cos", Similarity.cosine($"a.v", $"b.v", $"a.nrm", $"b.nrm"))
@@ -1293,9 +1309,7 @@ object SimilarityQueries {
     * ScalaTest. */
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.l2norm($"v"))
+    val emb = catalog(spark, dir).withColumn("nrm", Similarity.l2norm($"v"))
       .withColumn("bucket", Similarity.lshBucket($"v"))
     val queries = emb.filter($"vec_id" < 10)
       .select($"vec_id".as("query_id"), $"v".as("qv"),
@@ -1392,86 +1406,48 @@ object SimilarityQueries {
     * spreads the work, it doesn't shrink it). */
   val RnnSplitBudget: Long = 2L * SemDedupCellTarget
 
-  /** Reciprocal nearest neighbors within the fitted coarse clusters — the
-    * rank-based near-duplicate signal (RNN-DBSCAN / de-duplication
-    * pruning literature): a pair qualifies when EACH vector ranks in the
-    * other's within-cluster top-[[RnnK]] by cosine. Rank mutuality is
-    * threshold-free — it adapts to local density where
-    * [[semanticDedup]]'s fixed cosine cut-off can't — and the two views
-    * disagree exactly on the pairs a curator should eyeball.
-    *
-    * Scale shape: the same scaled-k assignment as [[semanticDedup]]
-    * (k grows with n, within-cluster pair mass ≈ n·target — linear), the
-    * same salted (cid, salt) pair join; per-vector ranks are one window
-    * over the pair frame, the mutuality check a self-join of the
-    * [[RnnK]]·n-row top-k frame on the swapped key. Cosines round to
-    * 6 dp BEFORE ranking (the [[knnCosine]] doctrine) so both engines
-    * rank identically; ties break on neighbor id.
-    *
-    * Occupancy-aware cell split (the r13 sf100 lesson): "pair mass ≈
-    * n·target" is only true when the fit balances — on a skewed corpus
-    * (a dominant mode, or ScaleUp's sign-flipped copies that no copy-0
-    * seed attracts) most of the catalog lands in a few cells and the
-    * within-cell join goes quadratic. So cells whose measured occupancy
-    * exceeds [[RnnSplitBudget]] are re-quantized by a secondary
-    * one-round k-means INSIDE the cell: ceil(occ / target) seed members
-    * are drawn in md5(vec_id) order (a deterministic uniform sample —
-    * lowest-vec_id seeding would draw all seeds from one copy family),
-    * every hot-cell member re-assigns to its max-cosine seed (tie →
-    * lowest seed rank), and the pair join keys on (cid, sub). Cold cells
-    * keep sub = 0. The split bounds every cell near the target, so pair
-    * mass is linear again in n regardless of the input distribution;
-    * RNN-within-coarse-cells was already an approximation, and the
-    * secondary quantizer refines by locality rather than splitting
-    * arbitrarily. The oracle replays the split CTE-for-CTE (same md5
-    * seed order, same argmax tiebreak). */
   /** Assignment + occupancy-aware cell split shared by [[rnnPairs]] and
     * the sf100 mutuality partial oracle ([[rnnCellAssignment]]): returns
     * the split frame `(vec_id, v, nrm, cid, sub)` plus the
     * eagerly-checkpointed assignment whose blocks the CALLER must drop
     * (via `GraftSqlBridge.dropCheckpoint`) once every consumer has
-    * materialized — the split frame's lineage runs through it. */
-  private def rnnSplitFrames(spark: SparkSession, dir: String)
+    * materialized — the split frame's lineage runs through it. Both
+    * assignments are the row-local [[nearestCentroid]]: the coarse cell
+    * under the session's [[semDedupK]] fit, and the sub-cell under a
+    * [[Cosine]] fit keyed by coarse cell whose centroids are the hot
+    * cells' md5-ordered seeds (about n / [[SemDedupCellTarget]] rows,
+    * collected; none when no cell is over [[RnnSplitBudget]]). */
+  private[graft] def rnnSplitFrames(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.l2norm($"v"))
     val k = semDedupK(embCatalogCount(spark, dir))
-    val cents = fittedCentroids(spark, dir, k)
-    // eager checkpoint: the assignment feeds the occupancy count, the
-    // hot-member frame AND the final split frame — recomputing the n×k
-    // argmax crossJoin per consumer would triple the dominant scan
-    val assigned = emb.crossJoin(broadcast(cents))
-      .withColumn("ccos", Similarity.cosine($"v", $"cv", $"nrm", $"cn"))
-      .groupBy($"vec_id")
-      .agg(max_by(struct($"cid", $"v", $"nrm"), struct($"ccos", -$"cid")).as("best"))
-      .select($"vec_id", $"best.v".as("v"), $"best.nrm".as("nrm"), $"best.cid".as("cid"))
+    // eager checkpoint: the assignment feeds the occupancy count, the seed
+    // draw AND both sides of the split frame's pair join — each scan
+    // would otherwise pay the n·k dot products again
+    val assigned = assignedCells(catalog(spark, dir), fittedQuantizer(spark, dir, k))
+      .select($"vec_id", $"v", $"nrm", $"cid")
       .localCheckpoint()
     // occupancy-aware split: measure cells, re-quantize the hot ones
     val hot = assigned.groupBy($"cid").agg(count(lit(1)).as("occ"))
       .filter($"occ" > RnnSplitBudget)
       .select($"cid",
         ceil($"occ" / lit(SemDedupCellTarget.toDouble)).cast("int").as("nsub"))
-    val hotM = assigned.join(broadcast(hot), Seq("cid"))
     // seeds: a per-cell md5-ordered uniform draw — ONE window sort over
-    // hot members only (n log n, never quadratic); the seed frame is
-    // ~n/target rows total, comfortably broadcastable
+    // hot members only (n log n, never quadratic)
     val wSeed = Window.partitionBy($"cid")
       .orderBy(md5($"vec_id".cast("string")), $"vec_id")
-    val seeds = hotM.withColumn("srk", row_number().over(wSeed))
+    val seeds = assigned.join(broadcast(hot), Seq("cid"))
+      .withColumn("srk", row_number().over(wSeed))
       .filter($"srk" <= $"nsub")
-      .select($"cid", $"srk".as("sub"), $"v".as("sv"), $"nrm".as("sn"))
-    // argmax over a SLIM (vec_id, sub, scos) projection: max_by partially
-    // aggregates map-side, so the shuffle is one row per hot vector — the
-    // member vectors never ride through this exchange
-    val resub = hotM.join(broadcast(seeds), Seq("cid"))
-      .select($"vec_id", $"sub",
-        (Similarity.cosine($"v", $"sv", $"nrm", $"sn")).as("scos"))
-      .groupBy($"vec_id")
-      .agg(max_by($"sub", struct($"scos", -$"sub")).as("sub"))
-    val split = assigned.join(resub, Seq("vec_id"), "left")
-      .withColumn("sub", coalesce($"sub", lit(0)))
+      .select($"cid", $"srk", $"v").collect()
+    // each hot member takes its max-cosine seed (tie → lowest seed rank);
+    // a cold cell is no key of the fit, so its members keep sub = 0
+    val subFit = LloydFit(Cosine, seeds.groupBy(_.getLong(0).toInt).map { case (cid, rs) =>
+      cid -> rs.map(r => Centroid(r.getInt(1).toLong, boxed(r.getSeq[java.lang.Double](2))))
+        .sortBy(_.cid)
+    })
+    val split = assigned.withColumn("sub", coalesce(
+      subFit.nearest($"cid".cast("int"), $"v").getField("cid").cast("int"), lit(0)))
     (split, assigned)
   }
 
@@ -1495,6 +1471,39 @@ object SimilarityQueries {
     cells
   }
 
+  /** Reciprocal nearest neighbors within the fitted coarse clusters — the
+    * rank-based near-duplicate signal (RNN-DBSCAN / de-duplication
+    * pruning literature): a pair qualifies when EACH vector ranks in the
+    * other's within-cluster top-[[RnnK]] by cosine. Rank mutuality is
+    * threshold-free — it adapts to local density where
+    * [[semanticDedup]]'s fixed cosine cut-off can't — and the two views
+    * disagree exactly on the pairs a curator should eyeball.
+    *
+    * Scale shape: the same scaled-k assignment as [[semanticDedup]]
+    * (k grows with n, within-cluster pair mass ≈ n·target — linear), the
+    * same salted (cid, salt) pair join; per-vector ranks are one mergeable
+    * top-k aggregate over the pair frame, the mutuality check a self-join of the
+    * [[RnnK]]·n-row top-k frame on the swapped key. Cosines round to
+    * 6 dp BEFORE ranking (the [[knnCosine]] doctrine) so both engines
+    * rank identically; ties break on neighbor id.
+    *
+    * Occupancy-aware cell split (the r13 sf100 lesson): "pair mass ≈
+    * n·target" is only true when the fit balances — on a skewed corpus
+    * (a dominant mode, or ScaleUp's sign-flipped copies that no copy-0
+    * seed attracts) most of the catalog lands in a few cells and the
+    * within-cell join goes quadratic. So cells whose measured occupancy
+    * exceeds [[RnnSplitBudget]] are re-quantized by a secondary
+    * one-round k-means INSIDE the cell: ceil(occ / target) seed members
+    * are drawn in md5(vec_id) order (a deterministic uniform sample —
+    * lowest-vec_id seeding would draw all seeds from one copy family),
+    * every hot-cell member re-assigns to its max-cosine seed (tie →
+    * lowest seed rank), and the pair join keys on (cid, sub). Cold cells
+    * keep sub = 0. The split bounds every cell near the target, so pair
+    * mass is linear again in n regardless of the input distribution;
+    * RNN-within-coarse-cells was already an approximation, and the
+    * secondary quantizer refines by locality rather than splitting
+    * arbitrarily. The oracle replays the split CTE-for-CTE (same md5
+    * seed order, same argmax tiebreak). */
   def rnnPairs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (split, assigned) = rnnSplitFrames(spark, dir)
@@ -1560,28 +1569,17 @@ object SimilarityQueries {
     * [[embedDupCapped]] ordering, since sqrt can collapse adjacent
     * cosines — s quantizes to 6 dp per vector, and the per-cell mean is a
     * DECIMAL sum over the 6-dp grid divided by the member count, so fold
-    * order cannot perturb the hash. Scale shape: one broadcast crossJoin
-    * against the 16-row centroid frame (reusing the session's memoized
-    * fit), a 16-element sorted-struct collect per vector, one final
-    * 16-group aggregate — linear, no shuffle beyond the per-vector agg.
-    * A zero-norm vector has no distance to any centroid and is left out;
-    * a zero centroid is no vector's nearest or second-nearest. */
+    * order cannot perturb the hash. Scale shape: a and b are one row-local
+    * column against the session's memoized 16-centroid fit
+    * ([[chordCells]]), then one 16-group aggregate — linear, with no join
+    * and no shuffle beyond that aggregate. A zero-norm vector has no
+    * distance to any centroid and is left out; a zero centroid is no
+    * vector's nearest or second-nearest. */
   def silhouette(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .withColumn("vn", Similarity.l2norm($"v"))
-    val cents = fittedCentroids(spark, dir, 16)
-    val ab = emb.crossJoin(broadcast(cents))
-      .withColumn("cdist", unitDist(Similarity.cosine($"v", $"cv", $"vn", $"cn")))
-      .groupBy($"vec_id")
-      .agg(array_sort(collect_list(nearFirst)).as("ds"))
-      .where(size($"ds") > 0)
-      .select($"vec_id",
-        $"ds".getItem(0).getField("cid").as("cid"),
-        $"ds".getItem(0).getField("cdist").as("a"),
-        when(size($"ds") > 1, $"ds".getItem(1).getField("cdist")).as("b"))
-    ab.withColumn("s", when(greatest($"a", $"b") > 0.0,
+    chordCells(spark, dir, 16)
+      .select($"cid", $"score".as("a"), $"score2".as("b"))
+      .withColumn("s", when(greatest($"a", $"b") > 0.0,
         round(($"b" - $"a") / greatest($"a", $"b"), 6)).otherwise(lit(0.0)))
       .groupBy($"cid")
       .agg(count(lit(1)).as("n_members"),
@@ -1606,25 +1604,19 @@ object SimilarityQueries {
     * (cdist, cid); every scalar quantizes to the 6-dp grid before a
     * DECIMAL fold; coincident-centroid pairs (d = 0, where the ratio is
     * undefined) are excluded from the max, and a cluster with no valid
-    * peer reports r_max = 0. Scale shape: one broadcast crossJoin against
-    * the 16-row centroid frame, one per-cell aggregate, then a 16×16
-    * centroid-only crossJoin — O(n·k) + O(k²), no shuffle beyond the
-    * per-vector argmin aggregate. Zero-norm vectors and centroids are left
-    * out as in [[silhouette]]. */
+    * peer reports r_max = 0. Scale shape: the assignment is one row-local
+    * column against the session's memoized 16-centroid fit
+    * ([[chordCells]]), then one per-cell aggregate and a 16×16
+    * centroid-only self-join — O(n·k) + O(k²), with no shuffle beyond the
+    * per-cell aggregate. Zero-norm vectors and centroids are left out as
+    * in [[silhouette]]. */
   def dbIndex(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .withColumn("vn", Similarity.l2norm($"v"))
     val cents = fittedCentroids(spark, dir, 16)
-    val assigned = emb.crossJoin(broadcast(cents))
-      .withColumn("cdist", unitDist(Similarity.cosine($"v", $"cv", $"vn", $"cn")))
-      .groupBy($"vec_id")
-      // rank UNROUNDED (the silhouette assignment semantics — min chord
-      // IS max cosine), quantize only what enters the fold
-      .agg(min_by(struct($"cid", $"cdist"), nearFirst).as("b"))
-      .where($"b".isNotNull)
-      .select($"b.cid".as("cid"), round($"b.cdist", 6).as("cdist"))
+    // rank UNROUNDED (the silhouette assignment semantics), quantize only
+    // what enters the fold
+    val assigned = chordCells(spark, dir, 16)
+      .select($"cid", round($"score", 6).as("cdist"))
     val scatter = assigned.groupBy($"cid")
       .agg(count(lit(1)).as("n_members"),
         sum($"cdist".cast("decimal(28,6)")).as("dsum"))
@@ -1710,8 +1702,7 @@ object SimilarityQueries {
     SessionMemo.cached(spark,
       "pqfit:" + SessionMemo.tableTag(dir, "embeddings")) {
       import spark.implicits._
-      val emb = Tables.embeddings(spark, dir)
-        .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+      val emb = catalog(spark, dir)
       productQuantize(emb, contiguous($"v"))
     }
 
@@ -1754,8 +1745,7 @@ object SimilarityQueries {
     SessionMemo.cached(spark,
       "ivfpqfit:" + SessionMemo.tableTag(dir, "embeddings")) {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val emb = catalog(spark, dir)
     val coarse = lloyd(emb.select(lit(0).as("key"), $"vec_id", $"v"),
       PqK, KmeansIters, SquaredL2)
     // read by the residual fit's rounds and its encode
@@ -1797,8 +1787,7 @@ object SimilarityQueries {
     * billion-vector catalogs. Top-3 per query, tie → lowest id. */
   def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val emb = catalog(spark, dir)
     val (coarse, cells, rcb, codes) = ivfPqFit(spark, dir)
     // query-side routing + residual: the fit's own argmin and broadcast
     val qsub = bySubspace(coarseResiduals(emb.filter($"vec_id" < 10), coarse),
@@ -1834,8 +1823,7 @@ object SimilarityQueries {
   def annPq(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (cb, codes) = pqFit(spark, dir)
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val emb = catalog(spark, dir)
     val qsub = bySubspace(emb.filter($"vec_id" < 10), contiguous($"v"))
       .select($"vec_id".as("query_id"), $"sub", $"sv".as("qv"))
       .withColumn("qn2", Similarity.dot($"qv", $"qv"))
@@ -1900,8 +1888,7 @@ object SimilarityQueries {
     SessionMemo.cached(spark,
       "opqalloc:" + SessionMemo.tableTag(dir, "embeddings")) {
       import spark.implicits._
-      val emb = Tables.embeddings(spark, dir)
-        .select($"embedding".cast("array<double>").as("v"))
+      val emb = catalog(spark, dir)
       val vars = emb.select(posexplode($"v").as(Seq("dim0", "x")))
         .groupBy($"dim0")
         .agg(round(avg($"x" * $"x") - avg($"x") * avg($"x"), 6)
@@ -1943,8 +1930,7 @@ object SimilarityQueries {
       import spark.implicits._
       val alloc = opqAllocate(spark, dir)
       val dims = (0 until PqSub).map(j => alloc.filter(_.sub == j).sortBy(_.pos).map(_.dim))
-      val emb = Tables.embeddings(spark, dir)
-        .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+      val emb = catalog(spark, dir)
       productQuantize(emb, j => array(dims(j).map(p => element_at($"v", p)): _*))
     }
 

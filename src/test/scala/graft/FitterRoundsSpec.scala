@@ -2,16 +2,21 @@ package graft
 
 import graft.functions.Similarity
 import graft.queries.SimilarityQueries
-import graft.queries.SimilarityQueries.{Centroid, Cosine, LloydFit, SquaredL2}
+import graft.queries.SimilarityQueries.{Centroid, Chord, Cosine, LloydFit, SquaredL2}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** The job-count-bound fitters, one Spark action per round: parity of the
-  * row-local k-means argmax and argmin, of the keyed PQ fits and of the
-  * in-round components convergence against the former crossJoin + max_by /
-  * min_by assignments, per-subspace PQ loop and join + count() loop (kept
-  * here as references), and listener-counted job pins. */
+  * row-local k-means argmax, argmin and chord ranking, of the keyed PQ fits,
+  * of the hot-cell split and of the in-round components convergence against
+  * the former crossJoin + max_by / min_by / collect_list assignments,
+  * per-subspace PQ loop and join + count() loop (kept here as references),
+  * and listener-counted job and UDF-call pins. */
 class FitterRoundsSpec extends SparkSpec {
 
   private val Sf01 = "/root/testdata/sf0.01"
@@ -220,6 +225,181 @@ class FitterRoundsSpec extends SparkSpec {
     // inferred isnotnull(cid) must not copy the UDF into a filter
     for (df <- Seq(SimilarityQueries.annIvf(spark, sf), SimilarityQueries.semanticDedup(spark, sf)))
       assert(udfCalls(df) == 2, df.queryExecution.optimizedPlan.toString)
+  }
+
+  /** The former chord distance of every (vector, centroid) pair: a
+    * crossJoin against the (cid, cv, cn) frame, null where the cosine is. */
+  private def referenceChord(vecs: DataFrame, cents: DataFrame): DataFrame =
+    vecs.withColumn("nrm", Similarity.l2norm(col("v")))
+      .crossJoin(broadcast(cents))
+      .withColumn("cos", Similarity.cosine(col("v"), col("cv"), col("nrm"), col("cn")))
+      .withColumn("cdist", when(col("cos").isNotNull,
+        sqrt(greatest(lit(0.0), lit(2.0) - lit(2.0) * col("cos")))))
+
+  /** The former (cdist, cid) ranking key, null where the distance is null:
+    * min_by skips the row and collect_list drops it. */
+  private def nearFirst: Column =
+    when(col("cdist").isNotNull, struct(col("cdist"), col("cid")))
+
+  /** The former dupAssignment: vec_id → (cid, cdist) by min_by. */
+  private def referenceDup(vecs: DataFrame, cents: DataFrame): Map[Long, (Long, Option[Long])] =
+    referenceChord(vecs, cents).groupBy(col("vec_id"))
+      .agg(min_by(struct(col("cid"), col("v"), col("nrm"), col("cdist")), nearFirst).as("best"))
+      .where(col("best").isNotNull)
+      .select(col("vec_id"), col("best.cid"), col("best.cdist"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), bits(r.getAs[java.lang.Double](2))))
+      .toMap
+
+  /** The former silhouette (cid, a, b): the first two of the sorted
+    * non-null (cdist, cid) list. */
+  private def referenceAb(vecs: DataFrame, cents: DataFrame)
+      : Map[Long, (Long, Option[Long], Option[Long])] =
+    referenceChord(vecs, cents).groupBy(col("vec_id"))
+      .agg(array_sort(collect_list(nearFirst)).as("ds"))
+      .where(size(col("ds")) > 0)
+      .select(col("vec_id"), col("ds").getItem(0).getField("cid"),
+        col("ds").getItem(0).getField("cdist"),
+        when(size(col("ds")) > 1, col("ds").getItem(1).getField("cdist")))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1),
+        bits(r.getAs[java.lang.Double](2)), bits(r.getAs[java.lang.Double](3)))).toMap
+
+  /** The former dbIndex assignment: min_by(struct(cid, cdist), nearFirst),
+    * the distance rounded to 6 dp. */
+  private def referenceDbAssign(vecs: DataFrame, cents: DataFrame)
+      : Map[Long, (Long, Option[Long])] =
+    referenceChord(vecs, cents).groupBy(col("vec_id"))
+      .agg(min_by(struct(col("cid"), col("cdist")), nearFirst).as("b"))
+      .where(col("b").isNotNull)
+      .select(col("vec_id"), col("b.cid"), round(col("b.cdist"), 6))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), bits(r.getAs[java.lang.Double](2))))
+      .toMap
+
+  /** vec_id → (cid, score, cid2, score2) of a row-local assignment frame. */
+  private def ranked(cells: DataFrame)
+      : Map[Long, (Long, Option[Long], Option[Long], Option[Long])] =
+    cells.select(col("vec_id"), col("cid"), col("score"), col("cid2"), col("score2"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), bits(r.getAs[java.lang.Double](2)),
+        Option(r.getAs[java.lang.Long](3)).map(_.longValue), bits(r.getAs[java.lang.Double](4))))
+      .toMap
+
+  /** The chord ranking as the former forms saw it: (cid, a, b) for
+    * silhouette, (cid, a) for dupAssignment. */
+  private def ab(got: Map[Long, (Long, Option[Long], Option[Long], Option[Long])]) =
+    got.map { case (id, (cid, a, _, b)) => id -> (cid, a, b) }
+  private def nearestOnly(got: Map[Long, (Long, Option[Long], Option[Long], Option[Long])]) =
+    got.map { case (id, (cid, a, _, _)) => id -> (cid, a) }
+
+  private def rowLocalChord(base: DataFrame, cents: Array[Centroid])
+      : Map[Long, (Long, Option[Long], Option[Long], Option[Long])] =
+    ranked(base.select(col("vec_id"), SimilarityQueries.nearestCentroid(
+        Chord, Map(0 -> cents.sortBy(_.cid)))(lit(0), col("v")).as("n"))
+      .where(col("n").isNotNull)
+      .select(col("vec_id"), col("n.*")))
+
+  test("nearestCentroid: chord distance ranks as the former min_by and " +
+    "sorted collect_list — clamped ties, NaN, zero and lone distances") {
+    val x = boxed(0.7, 0.2, 0.7)
+    val cents = Array(
+      Centroid(1L, x),                          // cos(x, x) = 1 + 2⁻⁵²
+      Centroid(2L, x.map(c => java.lang.Double.valueOf(0.3 * c))), // 1 + 2⁻⁵¹
+      Centroid(3L, boxed(0.0, 0.0, 0.0)),       // zero centroid: null distance
+      Centroid(4L, boxed(-1.0, 0.0, 1.0)),
+      Centroid(5L, boxed(0.0, 1.0, 0.0)),
+      Centroid(6L, boxed(Double.NaN, 0.0, 0.0))) // NaN distance to every vector
+    val vs = Seq(
+      1L -> x,                                  // cids 1 and 2 both clamp to 0
+      2L -> boxed(Double.NaN, 1.0, 0.0),        // NaN distance everywhere
+      3L -> boxed(0.0, 0.0, 0.0),               // zero vector: NaN to cid 6 only
+      4L -> null,                               // null vector: no distance
+      5L -> boxed(0.0, 2.0, 0.0),
+      6L -> boxed(-1.0, 0.0, 1.0))
+    val base = vectors(spark, vs)
+    val frame = cosineFrame(spark, cents)
+    val got = rowLocalChord(base, cents)
+    assert(ab(got) == referenceAb(base, frame))
+    assert(nearestOnly(got) == referenceDup(base, frame))
+    val zero = bits(0.0)
+    val nan = bits(Double.NaN)
+    // argmax cosine over the numeric cosines picks cid 2; the clamped
+    // distances tie and cid 1 wins
+    assert(rowLocalAssign(base, cents.filter(_.cid != 6L))(1L) == 2L)
+    assert(got(1L) == ((1L, zero, Some(2L), zero)))
+    assert(got(2L) == ((1L, nan, Some(2L), nan)))
+    // 0·NaN is no zero divisor: the zero vector's one distance is NaN
+    assert(got.keySet == Set(1L, 2L, 3L, 5L, 6L))
+    assert(got(3L) == ((6L, nan, None, None)))
+    assert(got(5L)._1 == 5L && got(6L)._1 == 4L)
+    // the zero centroid is nobody's nearest or runner-up; NaN loses to numbers
+    assert(!got.values.exists(g => g._1 == 3L || g._3.contains(3L)))
+    assert(Seq(1L, 5L, 6L).forall(id => got(id)._1 != 6L && !got(id)._3.contains(6L)))
+    // one non-null distance: no runner-up, so silhouette's b is null
+    val lone = Array(Centroid(1L, boxed(0.0, 0.0)), Centroid(2L, boxed(1.0, 0.0)),
+      Centroid(3L, null))
+    val lv = vectors(spark, Seq(1L -> boxed(0.0, 3.0), 2L -> boxed(0.0, 0.0)))
+    val one = rowLocalChord(lv, lone)
+    assert(ab(one) == referenceAb(lv, cosineFrame(spark, lone)))
+    assert(one == Map(1L -> ((2L, bits(math.sqrt(2.0)), None, None))))
+  }
+
+  test("dupAssignment, silhouette and dbIndex: the chord ranking gives the " +
+    "assignments of the former crossJoin forms, a zero vector included") {
+    for (dir <- Seq(sf, zeroCatalog)) {
+      val vecs = catalog(spark, dir)
+      val cents = SimilarityQueries.kmeansCentroids(vecs, 16, SimilarityQueries.KmeansIters)
+      val cells = SimilarityQueries.chordCells(spark, dir, 16)
+      val got = ranked(cells)
+      assert(ab(got) == referenceAb(vecs, cents))
+      assert(got.size == vecs.count() - (if (dir == sf) 0 else 1))
+      assert(got.values.exists(_._4.nonEmpty))
+      val db = cells.select(col("vec_id"), col("cid"), round(col("score"), 6)).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), bits(r.getAs[java.lang.Double](2)))).toMap
+      assert(db == referenceDbAssign(vecs, cents))
+      val (_, assigned) = SimilarityQueries.dupAssignment(spark, dir)
+      val dup = assigned.select(col("vec_id"), col("cid"), col("cdist")).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), bits(r.getAs[java.lang.Double](2)))).toMap
+      GraftSqlBridge.dropCheckpoint(assigned)
+      assert(dup == referenceDup(vecs, cents))
+    }
+  }
+
+  /** The former split of rnnSplitFrames: the crossJoin + max_by cells, per
+    * hot cell its md5-ordered seeds, the max_by resub over the seed join
+    * and a left join, as vec_id → (cid, sub). */
+  private def referenceSplit(dir: String): Map[Long, (Long, Int)] = {
+    val vecs = catalog(spark, dir)
+    val assigned = referenceCells(vecs, SimilarityQueries.semDedupK(vecs.count()))
+    val hot = assigned.groupBy(col("cid")).agg(count(lit(1)).as("occ"))
+      .filter(col("occ") > SimilarityQueries.RnnSplitBudget)
+      .select(col("cid"), ceil(col("occ") / lit(SimilarityQueries.SemDedupCellTarget.toDouble))
+        .cast("int").as("nsub"))
+    val hotM = assigned.join(broadcast(hot), Seq("cid"))
+    val wSeed = Window.partitionBy(col("cid"))
+      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
+    val seeds = hotM.withColumn("srk", row_number().over(wSeed))
+      .filter(col("srk") <= col("nsub"))
+      .select(col("cid"), col("srk").as("sub"), col("v").as("sv"), col("nrm").as("sn"))
+    val resub = hotM.join(broadcast(seeds), Seq("cid"))
+      .select(col("vec_id"), col("sub"),
+        Similarity.cosine(col("v"), col("sv"), col("nrm"), col("sn")).as("scos"))
+      .groupBy(col("vec_id"))
+      .agg(max_by(col("sub"), struct(col("scos"), -col("sub"))).as("sub"))
+    assigned.join(resub, Seq("vec_id"), "left")
+      .select(col("vec_id"), col("cid"), coalesce(col("sub"), lit(0)))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getInt(2))).toMap
+  }
+
+  test("rnnSplitFrames: the seed fit keyed by cell gives the (cid, sub) " +
+    "split of the former max_by resub, on the skewed catalog too") {
+    for (dir <- Seq(sf, zeroCatalog, RnnSplitSpec.skewDir)) {
+      val (split, assigned) = SimilarityQueries.rnnSplitFrames(spark, dir)
+      val got = split.select(col("vec_id"), col("cid"), col("sub")).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getInt(2))).toMap
+      GraftSqlBridge.dropCheckpoint(assigned)
+      assert(got == referenceSplit(dir))
+      // only the skewed catalog has a cell over the budget: 3 sub-cells
+      val subs = got.values.map(_._2).toSet
+      assert(subs == (if (dir == RnnSplitSpec.skewDir) Set(0, 1, 2, 3) else Set(0)))
+    }
   }
 
   /** A nullable double's exact bits: NaN equals NaN, -0.0 differs from 0.0. */
@@ -468,8 +648,9 @@ class FitterRoundsSpec extends SparkSpec {
   }
 
   /** How many times `df`'s optimized plan evaluates a Scala UDF. */
-  private def udfCalls(df: DataFrame): Int =
-    "UDF\\(".r.findAllIn(df.queryExecution.optimizedPlan.toString).length
+  private def udfCalls(df: DataFrame): Int = udfCalls(df.queryExecution.optimizedPlan.toString)
+
+  private def udfCalls(plan: String): Int = "UDF\\(".r.findAllIn(plan).length
 
   test("plan: a Lloyd round and the IVF-PQ residuals run the assignment " +
     "UDF once per row") {
@@ -482,6 +663,41 @@ class FitterRoundsSpec extends SparkSpec {
     assert(udfCalls(round) == 1, round.queryExecution.optimizedPlan.toString)
     val resid = SimilarityQueries.coarseResiduals(emb, fit)
     assert(udfCalls(resid) == 1, resid.queryExecution.optimizedPlan.toString)
+  }
+
+  /** The optimized plans of the actions the body runs in `s`,
+    * checkpoints included, in the order they finished. */
+  private def actionPlans(s: SparkSession)(body: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.optimizedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    try body
+    finally {
+      GraftSqlBridge.drainListeners(s)
+      s.listenerManager.unregister(listener)
+    }
+    plans.asScala.toSeq
+  }
+
+  test("plan: embedDupCapped, silhouette, dbIndex and rnnPairs run the " +
+    "assignment UDF once per scan") {
+    // per action that runs the UDF, its calls: the assignment is one scan
+    // of the catalog; rnnPairs's pair join scans the checkpointed
+    // assignment twice, each with the sub-cell UDF
+    val faces = Seq[(String, (SparkSession, String) => DataFrame, Seq[Int])](
+      ("embedDupCapped", (s, d) => SimilarityQueries.embedDupCapped(s, d), Seq(1)),
+      ("silhouette", SimilarityQueries.silhouette, Seq(1)),
+      ("dbIndex", SimilarityQueries.dbIndex, Seq(1)),
+      ("rnnPairs", SimilarityQueries.rnnPairs, Seq(1, 2)))
+    val calls = faces.map { case (name, face, _) =>
+      face(spark, sf).collect() // memoise the fit and the catalog count
+      name -> actionPlans(spark)(face(spark, sf).collect()).map(p => udfCalls(p)).filter(_ > 0)
+    }
+    assert(calls == faces.map { case (name, _, want) => name -> want })
   }
 
   /** Jobs the body submits from this thread, counted by a listener on a

@@ -28,45 +28,6 @@ class RnnSplitSpec extends SparkSpec {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  /** Throwaway embeddings.parquet tier with the given vectors. */
-  private def embTier(vecs: Seq[Array[Float]]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rnnskew").toString
-    vecs.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq, 0) }
-      .toDF("vec_id", "embedding", "label")
-      .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
-    dir
-  }
-
-  /** One dominant mode (8500 vectors hugging +x) plus 15 cold spokes:
-    * the scaled k collapses to the 16-seed fit, the hot mode exceeds
-    * RnnSplitBudget, and ceil(8500/target) = 3 sub-cells must fire. */
-  private lazy val skewDir: String = {
-    def unit(i: Int): Array[Float] = {
-      val v = Array.fill(4)(0f); v(i) = 1f; v
-    }
-    // seeds 0..15: +x plus 15 distinct cold directions (mixtures of the
-    // other three axes and negations — far from +x by cosine)
-    val seedDirs: Seq[Array[Float]] = Seq(unit(0)) ++ (1 to 15).map { j =>
-      val a = Array(0f, 0f, 0f, 0f)
-      a(1 + (j - 1) % 3) = if (j <= 8) 1f else -1f
-      a(1 + j % 3) += 0.3f * (1 + j / 4)
-      a
-    }
-    // 8500 hot vectors: +x with small deterministic jitter so cosines are
-    // distinct-ish and near neighbors straddle the seed boundaries
-    val hot = (0 until 8500).map { i =>
-      Array(1f, 0.002f * (i % 89), 0.002f * (i % 97), 0.001f * (i % 83))
-    }
-    // 180 cold fillers, 12 per cold spoke — every cold cell stays far
-    // below the split budget
-    val cold = (0 until 180).map { i =>
-      val d = seedDirs(1 + i % 15)
-      d.zipWithIndex.map { case (x, j) =>
-        x + (if (j == 0) 0.01f * (i % 7) else 0.005f * (i % 11)) }
-    }
-    embTier(seedDirs ++ hot ++ cold)
-  }
-
   /** The full plain-Scala twin of the split semantics: primary argmax
     * assignment against the oracle-checked fitted centroids, occupancy
     * count, md5-ordered seed draw for cells over budget, argmax
@@ -126,12 +87,12 @@ class RnnSplitSpec extends SparkSpec {
     (occ, pairs)
   }
 
-  private lazy val splitTwin = twin(skewDir, split = true)
-  private lazy val noSplitTwin = twin(skewDir, split = false)
+  private lazy val splitTwin = twin(RnnSplitSpec.skewDir, split = true)
+  private lazy val noSplitTwin = twin(RnnSplitSpec.skewDir, split = false)
 
   test("constructed skew: one cell holds >8000 vectors, the split path " +
     "fires, and rnnPairs matches the md5-seeded re-quantization twin") {
-    val dir = skewDir
+    val dir = RnnSplitSpec.skewDir
     val (occ, expected) = splitTwin
     val hotCells = occ.filter(_._2 > SimilarityQueries.RnnSplitBudget)
     assert(hotCells.nonEmpty,
@@ -154,5 +115,50 @@ class RnnSplitSpec extends SparkSpec {
     assert(withSplit != withoutSplit,
       "split and unsplit twins coincide — the construction exercises " +
         "nothing; rebuild the skew catalog")
+  }
+}
+
+object RnnSplitSpec {
+  private val sql = SparkSpec.spark
+  import sql.implicits._
+
+  /** Throwaway embeddings.parquet tier with the given vectors. */
+  private def embTier(vecs: Seq[Array[Float]]): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rnnskew").toString
+    vecs.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq, 0) }
+      .toDF("vec_id", "embedding", "label")
+      .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  /** One dominant mode (8500 vectors hugging +x) plus 15 cold spokes:
+    * the scaled k collapses to the 16-seed fit, the hot mode exceeds
+    * RnnSplitBudget, and ceil(8500/target) = 3 sub-cells must fire.
+    * FitterRoundsSpec's split parity case reads it too. */
+  lazy val skewDir: String = {
+    def unit(i: Int): Array[Float] = {
+      val v = Array.fill(4)(0f); v(i) = 1f; v
+    }
+    // seeds 0..15: +x plus 15 distinct cold directions (mixtures of the
+    // other three axes and negations — far from +x by cosine)
+    val seedDirs: Seq[Array[Float]] = Seq(unit(0)) ++ (1 to 15).map { j =>
+      val a = Array(0f, 0f, 0f, 0f)
+      a(1 + (j - 1) % 3) = if (j <= 8) 1f else -1f
+      a(1 + j % 3) += 0.3f * (1 + j / 4)
+      a
+    }
+    // 8500 hot vectors: +x with small deterministic jitter so cosines are
+    // distinct-ish and near neighbors straddle the seed boundaries
+    val hot = (0 until 8500).map { i =>
+      Array(1f, 0.002f * (i % 89), 0.002f * (i % 97), 0.001f * (i % 83))
+    }
+    // 180 cold fillers, 12 per cold spoke — every cold cell stays far
+    // below the split budget
+    val cold = (0 until 180).map { i =>
+      val d = seedDirs(1 + i % 15)
+      d.zipWithIndex.map { case (x, j) =>
+        x + (if (j == 0) 0.01f * (i % 7) else 0.005f * (i % 11)) }
+    }
+    embTier(seedDirs ++ hot ++ cold)
   }
 }
