@@ -555,31 +555,6 @@ object CorpusQueries {
     * oracle finite; the operator is iteration-generic. */
   val SvdIters = 4
 
-  /** Count-based word embeddings: truncated eigendecomposition of the
-    * PPMI co-occurrence matrix (Levy & Goldberg 2014, "Neural Word
-    * Embedding as Implicit Matrix Factorization" — SGNS's closed-form
-    * counterpart; Deerwester et al. 1990 for the LSA lineage). PPMI(w,c) =
-    * max(0, ln(n·N / (n_w·n_c))) over the [[SkipgramWindow]] symmetric
-    * co-occurrence counts; the matrix is symmetric, so its SVD is the
-    * eigendecomposition, computed as [[SvdComps]] deflated power
-    * iterations: y = M·x − Σ_j λ_j·v_j·(v_jᵀx) — the deflation never
-    * materializes a dense matrix, each matvec is ONE join linear in
-    * nnz(PPMI) and each deflation term is a vocab-sized frame times a
-    * broadcast scalar.
-    *
-    * Determinism doctrine (the [[embedPca]] rules, corpus-sized): every
-    * matvec / inner-product / norm term quantizes to the 6-dp grid and
-    * sums in DECIMAL; each normalize is a per-row double divide + round;
-    * seeds are the md5-prefix positive grid (the NMF h₀ init), so a
-    * symmetric corpus cannot start orthogonal to the Perron direction.
-    * An empty PPMI matrix (no pair above independence) yields zero
-    * loadings and λ = 0 through the n² > 0 guard, never NaN.
-    *
-    * Scale shape: corpus-sized work is the per-row pair explode feeding
-    * one pair-vocabulary-bounded count aggregate; every iteration frame is
-    * vocab-sized, superseded checkpoints dropped eagerly. Emits
-    * (comp, word, loading, lambda), the embedding column a retrieval
-    * stack consumes as word vectors. */
   /** The PPMI matrix on its own: (w, c, g DECIMAL(18,6)) — the corpus-
     * sized half of [[ppmiSvd]], exposed UNCHECKPOINTED so the sf100
     * partial oracle can verify an md5-sampled row subset without the
@@ -614,6 +589,31 @@ object CorpusQueries {
       .filter($"g" > 0.0)
   }
 
+  /** Count-based word embeddings: truncated eigendecomposition of the
+    * PPMI co-occurrence matrix (Levy & Goldberg 2014, "Neural Word
+    * Embedding as Implicit Matrix Factorization" — SGNS's closed-form
+    * counterpart; Deerwester et al. 1990 for the LSA lineage). PPMI(w,c) =
+    * max(0, ln(n·N / (n_w·n_c))) over the [[SkipgramWindow]] symmetric
+    * co-occurrence counts; the matrix is symmetric, so its SVD is the
+    * eigendecomposition, computed as [[SvdComps]] deflated power
+    * iterations: y = M·x − Σ_j λ_j·v_j·(v_jᵀx) — the deflation never
+    * materializes a dense matrix, each matvec is ONE join linear in
+    * nnz(PPMI) and each deflation term is a vocab-sized frame times a
+    * broadcast scalar.
+    *
+    * Determinism doctrine (the [[embedPca]] rules, corpus-sized): every
+    * matvec / inner-product / norm term quantizes to the 6-dp grid and
+    * sums in DECIMAL; each normalize is a per-row double divide + round;
+    * seeds are the md5-prefix positive grid (the NMF h₀ init), so a
+    * symmetric corpus cannot start orthogonal to the Perron direction.
+    * An empty PPMI matrix (no pair above independence) yields zero
+    * loadings and λ = 0 through the n² > 0 guard, never NaN.
+    *
+    * Scale shape: corpus-sized work is the per-row pair explode feeding
+    * one pair-vocabulary-bounded count aggregate; every iteration frame is
+    * vocab-sized, superseded checkpoints dropped eagerly. Emits
+    * (comp, word, loading, lambda), the embedding column a retrieval
+    * stack consumes as word vectors. */
   def ppmiSvd(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // r15: the pair-count frame is checkpointed ONCE and m/words derive
@@ -704,44 +704,13 @@ object CorpusQueries {
   /** AdaGrad learning rate (the paper's initial rate is 0.05). */
   val GloveLr = 0.05
 
-  /** GloVe-style weighted co-occurrence factorization (Pennington,
-    * Socher & Manning 2014, "GloVe: Global Vectors for Word
-    * Representation" — VERDICT r14 #7 stretch): minimize
-    * Σ f(x_ij)·(wᵢ·cⱼ + bᵢ + b̃ⱼ − ln x_ij)² over the observed skip-gram
-    * co-occurrence counts, trained as [[GloveIters]] FULL-BATCH AdaGrad
-    * rounds — the paper's optimizer made deterministic by batching: no
-    * sample order, no shard race, identical on any partitioning. AdaGrad
-    * is also the stability story: each coordinate's step is
-    * lr·g/√(Σg²) ≤ lr, so a frequent word's large accumulated gradient
-    * cannot blow up the iterate the way raw full-batch GD would.
-    *
-    * Determinism doctrine (the [[ppmiSvd]] rules): f(x) and ln x land on
-    * the 6-dp grid ONCE in the checkpointed pair frame; every
-    * grid×grid product rounds decimal-to-decimal (HALF_UP both engines);
-    * gradient sums fold in DECIMAL (fold-order exact); the one double
-    * operation per update is the AdaGrad quotient lr·g/√G — quantized
-    * straight back to the grid, the same double-divide-then-round shape
-    * as [[ppmiSvd]]'s normalize. Seeds are the md5-prefix grid with
-    * per-side salts (":w"/":c"), so the two factor matrices cannot start
-    * identical. Biases start at 0; accumulators at 1 (no ε juggling).
-    *
-    * Scale shape: the corpus-sized work is exactly the [[coocCounts]]
-    * pair aggregate every count-based embedding pays; the top-[[GloveVocab]]
-    * cut is a distributed sort-limit (TakeOrderedAndProject — never a
-    * single-partition window), and every training frame is then bounded
-    * by vocab²·dim independent of tier. Per round: one pairs×dim join
-    * for the dot products, four bounded hash aggregates for the
-    * gradients, broadcast-joined updates; superseded state checkpoints
-    * drop eagerly. Output: (word, dim, vec = w+c) for the whole capped
-    * vocabulary — GloVe's published practice of summing the two factor
-    * matrices. */
   /** The capped vocabulary (top-[[GloveVocab]] by co-occurrence mass,
     * ties → word asc) and the in-vocab pair frame `(i, j, fx, lx)` with
     * f(x) and ln x already on the 6-dp grid — the CORPUS-SIZED half of
     * [[gloveEmbed]], exposed UNCHECKPOINTED so the sf100 partial oracle
     * can verify an md5-sampled row subset without replaying the training
-    * rounds (the [[ppmiMatrix]] pattern); [[gloveEmbed]] checkpoints it
-    * for the iteration loop. */
+    * rounds (the [[ppmiMatrix]] pattern); [[gloveEmbed]] collects it for
+    * the driver rounds. */
   def glovePairGrid(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     import spark.implicits._
@@ -761,111 +730,112 @@ object CorpusQueries {
     (vocab, pairs)
   }
 
+  /** GloVe-style weighted co-occurrence factorization (Pennington,
+    * Socher & Manning 2014, "GloVe: Global Vectors for Word
+    * Representation" — VERDICT r14 #7 stretch): minimize
+    * Σ f(x_ij)·(wᵢ·cⱼ + bᵢ + b̃ⱼ − ln x_ij)² over the observed skip-gram
+    * co-occurrence counts, trained as [[GloveIters]] FULL-BATCH AdaGrad
+    * rounds — the paper's optimizer made deterministic by batching: no
+    * sample order, no shard race, identical on any partitioning. AdaGrad
+    * is also the stability story: each coordinate's step is
+    * lr·g/√(Σg²) ≤ lr, so a frequent word's large accumulated gradient
+    * cannot blow up the iterate the way raw full-batch GD would.
+    *
+    * Determinism doctrine (the [[ppmiSvd]] rules): f(x) and ln x land on
+    * the 6-dp grid ONCE in the pair grid; every grid×grid product rounds
+    * decimal-to-decimal (HALF_UP both engines);
+    * gradient sums fold in DECIMAL (fold-order exact); the one double
+    * operation per update is the AdaGrad quotient lr·g/√G — quantized
+    * straight back to the grid, the same double-divide-then-round shape
+    * as [[ppmiSvd]]'s normalize. Seeds are the md5-prefix grid with
+    * per-side salts (":w"/":c"), so the two factor matrices cannot start
+    * identical. Biases start at 0; accumulators at 1 (no ε juggling).
+    *
+    * Scale shape: the corpus-sized work is exactly the [[coocCounts]]
+    * pair aggregate every count-based embedding pays; the top-[[GloveVocab]]
+    * cut is a distributed sort-limit (TakeOrderedAndProject — never a
+    * single-partition window). Everything after the cut is bounded at any
+    * tier — at most [[GloveVocab]]² pairs and 2·[[GloveVocab]]·
+    * ([[GloveDim]]+1) parameters — so the pair grid and the md5 seeds are
+    * collected once and the [[GloveIters]] rounds run on the driver in
+    * exact decimals ([[AdaGrad]]), with no job per round. Output: (word,
+    * dim, vec = w+c) for the whole capped vocabulary — GloVe's published
+    * practice of summing the two factor matrices. */
   def gloveEmbed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (vocab, pairsRaw) = glovePairGrid(spark, dir)
-    // pair frame checkpointed once, read by every round (≤ vocab² rows
-    // by construction)
-    val pairs = pairsRaw.localCheckpoint()
-    val dims = spark.range(1, GloveDim + 1).toDF("k")
-    def seed(salt: String): DataFrame = vocab.crossJoin(broadcast(dims))
-      .select($"w", $"k",
-        ((conv(substring(md5(concat($"w", lit(salt), $"k".cast("string"))),
-          1, 8), 16, 10).cast("long") % 10 + 1).cast("double") / lit(20.0))
-          .cast("decimal(18,6)").as("wv"),
-        lit(1).cast("decimal(18,6)").as("g2"))
-    def seedB: DataFrame = vocab.select($"w",
-      lit(0).cast("decimal(18,6)").as("bv"),
-      lit(1).cast("decimal(18,6)").as("g2"))
-    // r15: ALL FOUR AdaGrad states ride ONE side-tagged frame — factors
-    // at k ∈ 1..GloveDim, biases at k = 0 — so each round is exactly one
-    // state checkpoint and one gradient aggregate exchange (all four
-    // gradient streams union into a single (side, w, k)-keyed sum; keys
-    // are disjoint across streams, so per-key sums are unchanged and
-    // DECIMAL folding stays order-exact). Row-wise the updates are
-    // identical to four separate states.
-    var state = seed(":w").withColumn("side", lit("w"))
-      .unionByName(seed(":c").withColumn("side", lit("c")))
-      .unionByName(seedB.withColumn("k", lit(0L)).withColumn("side", lit("w"))
-        .withColumnRenamed("bv", "wv").select($"w", $"k", $"wv", $"g2", $"side"))
-      .unionByName(seedB.withColumn("k", lit(0L)).withColumn("side", lit("c"))
-        .withColumnRenamed("bv", "wv").select($"w", $"k", $"wv", $"g2", $"side"))
-      .localCheckpoint()
-    // one AdaGrad update for the whole state: g2' = g2 + (g·g on the
-    // grid); step = round(lr·g/√g2', 6) — bounded by lr per round
-    def adagrad(st: DataFrame, grad: DataFrame, keys: Seq[String],
-                value: String): DataFrame = {
-      val g = coalesce($"g", lit(0).cast("decimal(28,6)"))
-      st.join(grad.hint("broadcast"), keys, "left")
-        .withColumn("gq", round(g.cast("decimal(18,6)") *
-          g.cast("decimal(18,6)"), 6).cast("decimal(18,6)"))
-        .withColumn("g2n", ($"g2" + $"gq").cast("decimal(18,6)"))
-        .select(keys.map(col) :+
-          (col(value) - round(lit(GloveLr) * g.cast("double") /
-            sqrt($"g2n".cast("double")), 6).cast("decimal(18,6)"))
-            .cast("decimal(18,6)").as(value) :+
-          $"g2n".as("g2"): _*)
+    val (vocab, pairs) = glovePairGrid(spark, dir)
+    def seed(salt: String): Column =
+      ((conv(substring(md5(concat($"w", lit(salt), $"k".cast("string"))), 1, 8),
+        16, 10).cast("long") % 10 + 1).cast("double") / lit(20.0))
+        .cast("decimal(18,6)")
+    val seeds = vocab.crossJoin(broadcast(spark.range(1, GloveDim + 1).toDF("k")))
+      .select($"w", $"k", seed(":w"), seed(":c"))
+      .collect()
+    val words = seeds.map(_.getString(0)).distinct
+    val ix = words.zipWithIndex.toMap
+    // factors at word·GloveDim + (k − 1); biases at word
+    val w = new AdaGrad(words.length * GloveDim)
+    val c = new AdaGrad(words.length * GloveDim)
+    val bw = new AdaGrad(words.length)
+    val bc = new AdaGrad(words.length)
+    for (r <- seeds) {
+      val e = ix(r.getString(0)) * GloveDim + r.getLong(1).toInt - 1
+      w.x(e) = r.getDecimal(2)
+      c.x(e) = r.getDecimal(3)
     }
+    val grid = pairs.collect().map(r =>
+      (ix(r.getString(0)), ix(r.getString(1)), r.getDecimal(2), r.getDecimal(3)))
     for (_ <- 1 to GloveIters) {
-      // every state frame is bounded by construction (≤ 2·GloveVocab·
-      // (dim+1) rows at ANY tier), so broadcast is pinned by hint (guide
-      // §3.1) on every pairs×state / fe×state join — the pair stream is
-      // never shuffled inside a round; the only exchanges left are the
-      // two bounded aggregates (dot products, gradients).
-      val wS = state.filter($"side" === "w" && $"k" >= 1)
-      val cS = state.filter($"side" === "c" && $"k" >= 1)
-      // dot products: pairs×dim join, partial-aggregated per (i, j)
-      val dot = pairs
-        .join(wS.select($"w".as("i"), $"k", $"wv").hint("broadcast"), Seq("i"))
-        .join(cS.select($"w".as("j"), $"k", $"wv".as("cv")).hint("broadcast"),
-          Seq("j", "k"))
-        .select($"i", $"j", round($"wv" * $"cv", 6).cast("decimal(28,6)").as("t"))
-        .groupBy($"i", $"j").agg(sum($"t").as("dt"))
-      // weighted residual fe = f(x)·(wᵢ·cⱼ + bᵢ + b̃ⱼ − ln x) on the grid —
-      // the frame every gradient reads; checkpointed per round. r16
-      // negative result: dropping this checkpoint (relying on
-      // ReuseExchange to dedupe the dot aggregate across the 4 gradient
-      // union branches) measured SLOWER — 6.33 vs 5.22 s min-of-5
-      // back-to-back at sf0.1/local[32]; the 4x recompute of the
-      // broadcast joins above the reused exchange outweighs the saved
-      // checkpoint job. Keep the checkpoint.
-      val fe = pairs.join(dot.hint("broadcast"), Seq("i", "j"))
-        .join(state.filter($"side" === "w" && $"k" === 0)
-          .select($"w".as("i"), $"wv".as("bv")).hint("broadcast"), Seq("i"))
-        .join(state.filter($"side" === "c" && $"k" === 0)
-          .select($"w".as("j"), $"wv".as("bbv")).hint("broadcast"), Seq("j"))
-        .select($"i", $"j",
-          round($"fx" * ($"dt" + $"bv" + $"bbv" - $"lx").cast("decimal(18,6)"),
-            6).cast("decimal(18,6)").as("fe"))
-        .localCheckpoint()
-      // all four gradient streams through ONE aggregate, keyed (side, w, k)
-      val grad = fe.join(cS.select($"w".as("j"), $"k", $"wv".as("cv"))
-          .hint("broadcast"), Seq("j"))
-        .select(lit("w").as("side"), $"i".as("w"), $"k",
-          round($"fe" * $"cv", 6).cast("decimal(28,6)").as("t"))
-        .unionByName(
-          fe.join(wS.select($"w".as("i"), $"k", $"wv").hint("broadcast"),
-            Seq("i"))
-            .select(lit("c").as("side"), $"j".as("w"), $"k",
-              round($"fe" * $"wv", 6).cast("decimal(28,6)").as("t")))
-        .unionByName(fe.select(lit("w").as("side"), $"i".as("w"),
-          lit(0L).as("k"), $"fe".cast("decimal(28,6)").as("t")))
-        .unionByName(fe.select(lit("c").as("side"), $"j".as("w"),
-          lit(0L).as("k"), $"fe".cast("decimal(28,6)").as("t")))
-        .groupBy($"side", $"w", $"k").agg(sum($"t").as("g"))
-      val stateN = adagrad(state, grad, Seq("side", "w", "k"), "wv")
-        .localCheckpoint()
-      Seq(state, fe).foreach(GraftSqlBridge.dropCheckpoint)
-      state = stateN
+      val (gw, gc) = (w.zeros, c.zeros)
+      val (gbw, gbc) = (bw.zeros, bc.zeros)
+      for ((i, j, fx, lx) <- grid) {
+        val (wi, cj) = (i * GloveDim, j * GloveDim)
+        var dt = java.math.BigDecimal.ZERO
+        for (k <- 0 until GloveDim) dt = dt.add(onGrid(w.x(wi + k).multiply(c.x(cj + k))))
+        // weighted residual f(x)·(wᵢ·cⱼ + bᵢ + b̃ⱼ − ln x) on the grid
+        val fe = onGrid(fx.multiply(dt.add(bw.x(i)).add(bc.x(j)).subtract(lx)))
+        for (k <- 0 until GloveDim) {
+          gw(wi + k) = gw(wi + k).add(onGrid(fe.multiply(c.x(cj + k))))
+          gc(cj + k) = gc(cj + k).add(onGrid(fe.multiply(w.x(wi + k))))
+        }
+        gbw(i) = gbw(i).add(fe)
+        gbc(j) = gbc(j).add(fe)
+      }
+      w.step(gw); c.step(gc); bw.step(gbw); bc.step(gbc)
     }
-    GraftSqlBridge.dropCheckpoint(pairs)
-    state.filter($"side" === "w" && $"k" >= 1)
-      .join(state.filter($"side" === "c" && $"k" >= 1)
-        .select($"w", $"k", $"wv".as("cv")).hint("broadcast"),
-        Seq("w", "k"))
-      .select($"w".as("word"), $"k".as("dim"),
-        ($"wv" + $"cv").cast("double").as("vec"))
+    val rows = for ((word, i) <- words.toSeq.zipWithIndex; k <- 0 until GloveDim) yield {
+      val e = i * GloveDim + k
+      org.apache.spark.sql.Row(word, k + 1L, w.x(e).add(c.x(e)).doubleValue)
+    }
+    // Spark's sort: strings in UTF-8 byte order, not Java's UTF-16 order
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), GloveSchema)
       .orderBy($"word", $"dim")
+  }
+
+  /** The (word, dim, vec) schema of [[gloveEmbed]]. */
+  private val GloveSchema = new org.apache.spark.sql.types.StructType()
+    .add("word", "string").add("dim", "long").add("vec", "double")
+
+  /** A decimal(18,6) product or quotient rounded back to the grid, as
+    * Spark's `round(x, 6)`: HALF_UP, away from zero on a tie. */
+  private def onGrid(d: java.math.BigDecimal): java.math.BigDecimal =
+    d.setScale(6, java.math.RoundingMode.HALF_UP)
+
+  /** One AdaGrad-trained parameter block of [[gloveEmbed]] on the 6-dp
+    * grid, values from 0 and accumulators from 1. A step adds the grid
+    * square g·g to the accumulator G and subtracts lr·g/√G — the one
+    * double operation, rounded as Spark's `round(double, 6)` rounds the
+    * double's shortest decimal form. */
+  private final class AdaGrad(n: Int) {
+    val x: Array[java.math.BigDecimal] = Array.fill(n)(java.math.BigDecimal.ZERO)
+    private val g2 = Array.fill(n)(java.math.BigDecimal.ONE)
+    def zeros: Array[java.math.BigDecimal] = Array.fill(n)(java.math.BigDecimal.ZERO)
+    def step(g: Array[java.math.BigDecimal]): Unit =
+      for (e <- 0 until n) {
+        g2(e) = g2(e).add(onGrid(g(e).multiply(g(e))))
+        val q = GloveLr * g(e).doubleValue / math.sqrt(g2(e).doubleValue)
+        x(e) = x(e).subtract(onGrid(java.math.BigDecimal.valueOf(q)))
+      }
   }
 
   /** CCNet-style head/middle/tail perplexity bucketing (Wenzek et al.

@@ -698,11 +698,11 @@ object SimilarityQueries {
     * CTEs, the Lloyd-round pattern) hash-matches exactly.
     *
     * Scale shape: the candidate pool is a broadcast-query scan + per-query
-    * top-k window (the [[knnCosine]] plan); everything after runs on
-    * Q×[[MmrCandidates]] rows — the pairwise frame is Q×20×20 and each
-    * greedy round is a join + argmax aggregate on those tiny frames,
-    * independent of catalog size. `localCheckpoint` keeps the per-round
-    * plans flat. */
+    * top-k window (the [[knnCosine]] plan), collected with its vectors;
+    * the Q×20×19 pairwise cosines are computed by Spark over a local frame
+    * of that pool and collected too. Both are Q×[[MmrCandidates]]-bounded
+    * at any tier, so the [[MmrK]] greedy rounds run on the driver
+    * ([[mmrGreedy]]) and the selection is returned as a local frame. */
   def mmrRerank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val emb = catalog(spark, dir).withColumn("nrm", Similarity.l2norm($"v"))
@@ -713,77 +713,74 @@ object SimilarityQueries {
       .select($"query_id", $"vec_id".as("cid"), $"v", $"nrm",
         round(Similarity.cosine($"qv", $"v", $"qn", $"nrm"), 6).as("cos"))
     val wq = Window.partitionBy($"query_id").orderBy($"cos".desc, $"cid")
-    val cand = scored.withColumn("rn", row_number().over(wq))
+    val pool = scored.withColumn("rn", row_number().over(wq))
       .filter($"rn" <= MmrCandidates)
       .select($"query_id", $"cid", $"v", $"nrm", $"cos")
-      .localCheckpoint()
-    // directed pairwise candidate cosines: Q × 20 × 20 rows
+    val held = pool.collect()
+    val cand = spark.createDataFrame(java.util.Arrays.asList(held: _*), pool.schema)
+    // directed pairwise candidate cosines: Q × 20 × 19 rows
     val pc = cand.as("x")
       .join(cand.as("y"),
         $"x.query_id" === $"y.query_id" && $"x.cid" =!= $"y.cid")
-      .select($"x.query_id".as("query_id"), $"x.cid".as("a"),
-        $"y.cid".as("b"),
-        round(Similarity.cosine($"x.v", $"y.v", $"x.nrm", $"y.nrm"), 6)
-          .as("pcos"))
-      .localCheckpoint()
-    val slim = cand.select($"query_id", $"cid", $"cos")
-    var sel = slim.groupBy($"query_id")
-      .agg(max_by(struct($"cid", $"cos"), struct($"cos", -$"cid")).as("p"))
-      .select($"query_id", $"p.cid".as("cid"), $"p.cos".as("cos"),
-        (lit(MmrLambda) * $"p.cos").as("score"), lit(1).as("rank"))
-      .localCheckpoint()
-    // r16 (guide §1.2): running-max greedy state — one row per surviving
-    // candidate carrying msim = max pairwise cosine to the selected set
-    // SO FAR. max is associative, so the per-round greatest() update
-    // equals the former full re-aggregation of pc against the whole
-    // selected set, and each round collapses from 3 hinted joins + 2
-    // aggregates (ms + pick) to 1 broadcast join + 1 argmax. Every loop
-    // frame stays bounded by construction (state ≤ Q·MmrCandidates,
-    // picks ≤ Q rows at ANY tier), so broadcast stays pinned by hint
-    // (guide §3.1, the r15 rule).
-    def strip(p: DataFrame) =
-      p.select($"query_id".as("pq"), $"cid".as("pid"))
-    def advanced(state: DataFrame, pick: DataFrame): DataFrame = {
-      val pcPick = pc.join(strip(pick).hint("broadcast"),
-          $"query_id" === $"pq" && $"b" === $"pid")
-        .select($"query_id".as("uq"), $"a".as("ua"), $"pcos".as("pp"))
-      state.join(strip(pick).hint("broadcast"),
-          $"query_id" === $"pq" && $"cid" === $"pid", "left_anti")
-        .join(pcPick.hint("broadcast"),
-          $"query_id" === $"uq" && $"cid" === $"ua")
-        .select($"query_id", $"cid", $"cos",
-          greatest($"msim", $"pp").as("msim"))
+      .select($"x.query_id", $"x.cid", $"y.cid",
+        round(Similarity.cosine($"x.v", $"y.v", $"x.nrm", $"y.nrm"), 6))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> nullableDouble(r, 3))
+      .toMap
+    val picks = held.toSeq.groupBy(_.getLong(0)).toSeq.sortBy(_._1).flatMap { case (q, rs) =>
+      mmrGreedy(rs.map(r => (r.getLong(1), nullableDouble(r, 4))),
+        (a, b) => pc((q, a, b)))
+        .zipWithIndex.map { case ((cid, cos, score), i) =>
+          org.apache.spark.sql.Row(q, i + 1, cid, cos, score)
+        }
     }
-    // cosines are ≥ -1, so the -2 floor is absorbed by the first update
-    var state = advanced(slim.withColumn("msim", lit(-2.0)), sel)
-      .localCheckpoint()
-    for (r <- 2 to MmrK) {
-      val pick = state
-        .withColumn("sc",
-          lit(MmrLambda) * $"cos" - lit(1.0 - MmrLambda) * $"msim")
-        .groupBy($"query_id")
-        .agg(max_by(struct($"cid", $"cos", $"sc"), struct($"sc", -$"cid"))
-          .as("p"))
-        .select($"query_id", $"p.cid".as("cid"), $"p.cos".as("cos"),
-          $"p.sc".as("score"), lit(r).as("rank"))
-        .localCheckpoint() // read by the output union AND the state update
-      sel = sel.unionByName(pick)
-      if (r < MmrK) {
-        val prev = state
-        state = advanced(state, pick).localCheckpoint()
-        // superseded round state (VERDICT r12 #5 cold-pass hygiene)
-        org.apache.spark.sql.GraftSqlBridge.dropCheckpoint(prev)
-      }
-    }
-    // the output below depends only on the pick checkpoints
-    org.apache.spark.sql.GraftSqlBridge.dropCheckpoint(state)
     // mmr_score stays UNROUNDED: it is a fixed dag of IEEE ops over 6-dp
     // inputs (bit-identical across engines), and λ·cos lands exactly on
     // the 7th-decimal .5 whenever cos's 6th digit is odd — rounding it
     // would diverge on shortest-repr vs raw-double tie handling
-    sel.select($"query_id", $"rank", $"cid".as("neighbor_id"), $"cos".as("cosine"),
-        $"score".as("mmr_score"))
-      .orderBy($"query_id", $"rank")
+    spark.createDataFrame(java.util.Arrays.asList(picks: _*), MmrSchema)
+  }
+
+  /** The (query_id, rank, neighbor_id, cosine, mmr_score) schema of
+    * [[mmrRerank]]. */
+  private val MmrSchema = new org.apache.spark.sql.types.StructType()
+    .add("query_id", "long").add("rank", "int").add("neighbor_id", "long")
+    .add("cosine", "double").add("mmr_score", "double")
+
+  private def nullableDouble(r: org.apache.spark.sql.Row, i: Int): java.lang.Double =
+    if (r.isNullAt(i)) null else r.getDouble(i)
+
+  /** One query's [[MmrK]] greedy picks over its `(cid, cos)` candidates,
+    * as (cid, cos, score) in pick order; `pcos(a, b)` is the rounded
+    * cosine of candidates a and b. Round 1 ranks by `cos` — two cosines
+    * can round to one λ·cos — and scores λ·cos; later rounds rank and score
+    * by λ·cos − (1−λ)·msim, where msim starts at −2 (below any cosine)
+    * and takes the `greatest` of itself and each pick's pcos, skipping
+    * nulls. The order is SQL's ([[sqlCompare]]: a null score ranks
+    * lowest, NaN highest) and ties go to the lowest cid, as the former
+    * `max_by(.., struct(score, -cid))` rounds ranked. */
+  private def mmrGreedy(cands: Seq[(Long, java.lang.Double)],
+      pcos: (Long, Long) => java.lang.Double): Seq[(Long, java.lang.Double, java.lang.Double)] = {
+    val msim = scala.collection.mutable.LongMap(cands.map(_._1 -> -2.0): _*)
+    val picks = Seq.newBuilder[(Long, java.lang.Double, java.lang.Double)]
+    var left = cands.sortBy(_._1)
+    var rank = 1
+    while (rank <= MmrK && left.nonEmpty) {
+      def score(c: (Long, java.lang.Double)): java.lang.Double =
+        if (c._2 == null) null
+        else if (rank == 1) MmrLambda * c._2
+        else MmrLambda * c._2 - (1.0 - MmrLambda) * msim(c._1)
+      def key(c: (Long, java.lang.Double)): java.lang.Double = if (rank == 1) c._2 else score(c)
+      val pick = left.reduceLeft((best, c) => if (sqlCompare(key(c), key(best)) > 0) c else best)
+      picks += ((pick._1, pick._2, score(pick)))
+      left = left.filter(_._1 != pick._1)
+      for ((cid, _) <- left) {
+        val p = pcos(cid, pick._1)
+        if (p != null && sqlCompare(p, msim(cid)) > 0) msim(cid) = p
+      }
+      rank += 1
+    }
+    picks.result()
   }
 
   /** Lloyd's distance for [[lloyd]]: a vector's score against one centroid

@@ -160,6 +160,88 @@ class FitterRoundsSpec extends SparkSpec {
     assert(rnn.nonEmpty && !rnn.exists(r => r.getLong(0) == 5L || r.getLong(1) == 5L))
   }
 
+  /** The former mmrRerank: the greedy rounds as Spark frames — a running
+    * msim state joined with each round's pick, both checkpointed per
+    * round. */
+  private def referenceMmr(dir: String): Seq[Row] = {
+    import SimilarityQueries.{MmrCandidates, MmrK, MmrLambda}
+    val s = spark
+    import s.implicits._
+    val emb = catalog(s, dir).withColumn("nrm", Similarity.l2norm($"v"))
+    val queries = emb.filter($"vec_id" < 10)
+      .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"))
+    val scored = emb.crossJoin(broadcast(queries))
+      .filter($"vec_id" =!= $"query_id")
+      .select($"query_id", $"vec_id".as("cid"), $"v", $"nrm",
+        round(Similarity.cosine($"qv", $"v", $"qn", $"nrm"), 6).as("cos"))
+    val wq = Window.partitionBy($"query_id").orderBy($"cos".desc, $"cid")
+    val cand = scored.withColumn("rn", row_number().over(wq))
+      .filter($"rn" <= MmrCandidates)
+      .select($"query_id", $"cid", $"v", $"nrm", $"cos")
+      .localCheckpoint()
+    val pc = cand.as("x")
+      .join(cand.as("y"),
+        $"x.query_id" === $"y.query_id" && $"x.cid" =!= $"y.cid")
+      .select($"x.query_id".as("query_id"), $"x.cid".as("a"),
+        $"y.cid".as("b"),
+        round(Similarity.cosine($"x.v", $"y.v", $"x.nrm", $"y.nrm"), 6)
+          .as("pcos"))
+      .localCheckpoint()
+    val slim = cand.select($"query_id", $"cid", $"cos")
+    var sel = slim.groupBy($"query_id")
+      .agg(max_by(struct($"cid", $"cos"), struct($"cos", -$"cid")).as("p"))
+      .select($"query_id", $"p.cid".as("cid"), $"p.cos".as("cos"),
+        (lit(MmrLambda) * $"p.cos").as("score"), lit(1).as("rank"))
+      .localCheckpoint()
+    def strip(p: DataFrame) =
+      p.select($"query_id".as("pq"), $"cid".as("pid"))
+    def advanced(state: DataFrame, pick: DataFrame): DataFrame = {
+      val pcPick = pc.join(strip(pick).hint("broadcast"),
+          $"query_id" === $"pq" && $"b" === $"pid")
+        .select($"query_id".as("uq"), $"a".as("ua"), $"pcos".as("pp"))
+      state.join(strip(pick).hint("broadcast"),
+          $"query_id" === $"pq" && $"cid" === $"pid", "left_anti")
+        .join(pcPick.hint("broadcast"),
+          $"query_id" === $"uq" && $"cid" === $"ua")
+        .select($"query_id", $"cid", $"cos",
+          greatest($"msim", $"pp").as("msim"))
+    }
+    var state = advanced(slim.withColumn("msim", lit(-2.0)), sel)
+      .localCheckpoint()
+    for (r <- 2 to MmrK) {
+      val pick = state
+        .withColumn("sc",
+          lit(MmrLambda) * $"cos" - lit(1.0 - MmrLambda) * $"msim")
+        .groupBy($"query_id")
+        .agg(max_by(struct($"cid", $"cos", $"sc"), struct($"sc", -$"cid"))
+          .as("p"))
+        .select($"query_id", $"p.cid".as("cid"), $"p.cos".as("cos"),
+          $"p.sc".as("score"), lit(r).as("rank"))
+        .localCheckpoint()
+      sel = sel.unionByName(pick)
+      if (r < MmrK) state = advanced(state, pick).localCheckpoint()
+    }
+    sel.select($"query_id", $"rank", $"cid".as("neighbor_id"), $"cos".as("cosine"),
+        $"score".as("mmr_score"))
+      .orderBy($"query_id", $"rank")
+      .collect().toSeq
+  }
+
+  test("mmrRerank: the driver greedy gives the rows of the former Spark " +
+    "rounds, a zero query vector included") {
+    for (dir <- Seq(Sf01, zeroCatalog)) {
+      val got = SimilarityQueries.mmrRerank(spark, dir).collect().toSeq
+      assert(got.length == 10 * SimilarityQueries.MmrK)
+      assert(got == referenceMmr(dir), dir)
+    }
+    // query 5 is the zero vector: every cosine and score is null, so each
+    // round picks the lowest cid left
+    val q5 = SimilarityQueries.mmrRerank(spark, zeroCatalog).collect()
+      .filter(_.getLong(0) == 5L)
+    assert(q5.map(_.getLong(2)).toSeq == Seq(0L, 1L, 2L, 3L, 4L))
+    assert(q5.forall(r => r.isNullAt(3) && r.isNullAt(4)))
+  }
+
   private def catalog(s: SparkSession, dir: String): DataFrame =
     graft.sources.Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -751,5 +833,23 @@ class FitterRoundsSpec extends SparkSpec {
     // with their edge, round and sorted-output checkpoints ran 18, and the
     // join + count() rounds before them 33
     assert(jobs <= 6, s"dedupComponents ran $jobs jobs")
+  }
+
+  test("job pin: gloveEmbed in a fresh session at sf0.01") {
+    val s = spark.newSession()
+    val jobs = jobsOf(s)(graft.queries.CorpusQueries.gloveEmbed(s, Sf01).collect())
+    // the seed collect and the pair-grid collect, each re-running the
+    // co-occurrence aggregate and the vocabulary cut, then the closing sort
+    // over the local result; the per-round checkpoint loop ran 51
+    assert(jobs <= 14, s"gloveEmbed ran $jobs jobs")
+  }
+
+  test("job pin: mmrRerank in a fresh session at sf0.01") {
+    val s = spark.newSession()
+    val jobs = jobsOf(s)(SimilarityQueries.mmrRerank(s, Sf01).collect())
+    // the candidate-pool collect and the pairwise-cosine collect over its
+    // local frame; the greedy rounds with their state and pick checkpoints
+    // ran 32
+    assert(jobs <= 6, s"mmrRerank ran $jobs jobs")
   }
 }

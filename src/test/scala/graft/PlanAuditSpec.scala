@@ -139,11 +139,11 @@ class PlanAuditSpec extends SparkSpec {
     assert(exchanges(p) <= bound, s"too many shuffles (> $bound):\n$p")
   }
 
-  test("mmrRerank: greedy rounds stay behind checkpoints — final plan is " +
-    "the checkpointed selection plus one closing sort") {
+  test("mmrRerank: the greedy rounds run on the driver — the final plan " +
+    "reads the local selection") {
     val p = plan(graft.queries.SimilarityQueries.mmrRerank(spark, sf))
     assert(!p.toLowerCase.contains("parquet"),
-      s"catalog scan leaked past the checkpoint:\n$p")
+      s"catalog scan leaked past the local selection:\n$p")
     assert(!p.contains("Join"), s"post-selection join:\n$p")
     assert(exchanges(p) <= 2, s"too many shuffles:\n$p")
   }
