@@ -545,6 +545,11 @@ object CorpusQueries {
       .select(Text.tokenize($"text").as("t"))
       .select(explode(flatten(array(pairCols: _*))).as("p"))
       .select($"p.center", $"p.context")
+      // tokens are never null, so this keeps every pair; stated here, it
+      // is the filter a join on the counts would infer below the
+      // aggregate, and a consumer that both joins the counts and reads
+      // them unjoined (glovePairGrid) then plans one shared scan
+      .filter($"center".isNotNull && $"context".isNotNull)
       .groupBy($"center", $"context").agg(count(lit(1)).as("n"))
   }
 

@@ -307,10 +307,11 @@ object SimilarityQueries {
                                        cap: Int = ComponentPairCap): DataFrame = {
     import spark.implicits._
     val pairs = minhashPairs(spark, dir).select($"doc_a", $"doc_b")
-    val held = pairs.limit(cap + 1).collect()
-    if (held.length <= cap)
-      unionFindComponents(spark, held.map(r => (r.getLong(0), r.getLong(1))))
-    else propagatedComponents(pairs)
+    Bounded.collectUnder(pairs, cap) match {
+      case Some(held) =>
+        unionFindComponents(spark, held.map(r => (r.getLong(0), r.getLong(1))))
+      case None => propagatedComponents(pairs)
+    }
   }
 
   /** The (doc_id, component, is_keeper) schema of [[dedupComponents]]. */

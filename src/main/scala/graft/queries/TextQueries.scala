@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.functions.Text
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Text analytics over `documents` — distributed re-expression of the
@@ -225,25 +225,6 @@ object TextQueries {
   /** Keywords reported by [[textrank]]. */
   val TrTop = 30
 
-  /** TextRank keyword extraction (Mihalcea & Tarau, EMNLP 2004): weighted
-    * PageRank over the token co-occurrence graph — words are nodes, an
-    * undirected edge weighted by how often two words appear within
-    * [[TrWindow]] positions of each other, top-[[TrTop]] words by
-    * stationary score.
-    *
-    * Scale shape (r15): pair generation is [[TrWindow]] lead() columns
-    * over ONE (doc_id, pos) window pass — exactly n·W pair rows from a
-    * single token-stream shuffle, never a per-document position cross
-    * join — and each iteration is one edge-frame join + vocabulary-sized
-    * aggregate, the [[GraphQueries.pagerank]] loop shape with the edge
-    * frame checkpointed once. Determinism doctrine: per-edge
-    * contributions quantize to 6 dp and fold in DECIMAL; the score update
-    * itself stays UNROUNDED (the mmrRerank rule — it is a fixed IEEE dag
-    * over a DECIMAL-exact insum, bit-identical across engines, while
-    * re-rounding it would diverge on 7th-decimal ties between Spark's
-    * exact-binary HALF_UP and DuckDB's ×1e6 double round); init exactly 1,
-    * so the DuckDB oracle unrolls all [[TrIters]] iterations
-    * bit-identically. */
   /** The TextRank co-occurrence graph on its own: (src, dst, ew) —
     * exposed so the sf100 partial oracle can verify the corpus-sized
     * half of [[textrank]] (the n·W pair stream aggregation) for an
@@ -277,9 +258,92 @@ object TextQueries {
       .groupBy($"src", $"dst").agg(count(lit(1)).cast("double").as("ew"))
   }
 
-  def textrank(spark: SparkSession, dir: String): DataFrame = {
+  /** Most co-occurrence edges [[textrank]] ranks on the driver. 2^20
+    * collected (src, dst, ew) rows of eight-character words are about
+    * 180 MiB of driver heap; the rounds add two ints and a double per edge
+    * and a score and a decimal sum per word. */
+  val TrEdgeCap: Int = 1 << 20
+
+  /** TextRank keyword extraction (Mihalcea & Tarau, EMNLP 2004): weighted
+    * PageRank over the token co-occurrence graph — words are nodes, an
+    * undirected edge weighted by how often two words appear within
+    * [[TrWindow]] positions of each other, top-[[TrTop]] words by
+    * stationary score.
+    *
+    * Scale shape: pair generation is [[TrWindow]] lead() columns over ONE
+    * (doc_id, pos) window pass — exactly n·W pair rows from a single
+    * token-stream shuffle, never a per-document position cross join —
+    * aggregated into the word-pair-sized edge list ([[textrankEdges]]).
+    * One action collects at most [[TrEdgeCap]] + 1 edges. Under the cap,
+    * [[rankWords]] runs the [[TrIters]] rounds on the driver with no job
+    * per round, and the scores re-enter the plan as a local frame; the
+    * closing top-[[TrTop]] sort stays in Spark for its UTF-8 word order.
+    * Above the cap, [[propagatedRanks]] runs the rounds on executors,
+    * each one edge-frame join + vocabulary-sized aggregate over a `frac`
+    * frame checkpointed once; that checkpoint re-runs the edge aggregate,
+    * one extra corpus pass paid only by graphs too large for the driver.
+    * Both paths compute the same values, so they agree row for row.
+    *
+    * Determinism doctrine: per-edge contributions quantize to 6 dp and
+    * fold in DECIMAL (exact, so fold-order free); the score update itself
+    * stays UNROUNDED (the mmrRerank rule — it is a fixed IEEE dag over a
+    * DECIMAL-exact insum, bit-identical across engines, while re-rounding
+    * it would diverge on 7th-decimal ties between Spark's exact-binary
+    * HALF_UP and DuckDB's ×1e6 double round); init exactly 1, so the
+    * DuckDB oracle unrolls all [[TrIters]] iterations bit-identically. */
+  def textrank(spark: SparkSession, dir: String): DataFrame =
+    textrank(spark, dir, TrEdgeCap)
+
+  private[graft] def textrank(spark: SparkSession, dir: String,
+                              cap: Int): DataFrame = {
     import spark.implicits._
     val edges = textrankEdges(spark, dir)
+    val scores = Bounded.collectUnder(edges, cap) match {
+      case Some(held) =>
+        spark.createDataFrame(java.util.Arrays.asList(rankWords(held): _*),
+          TextrankSchema)
+      case None => propagatedRanks(edges)
+    }
+    scores.orderBy($"score".desc, $"word").limit(TrTop)
+  }
+
+  /** The (word, score) schema of [[textrank]]. */
+  private val TextrankSchema = new org.apache.spark.sql.types.StructType()
+    .add("word", "string").add("score", "double")
+
+  /** [[textrank]]'s rounds over a driver-held (src, dst, ew) edge list, as
+    * [[propagatedRanks]] computes them: the out-weight sum (ew is an
+    * integer-valued double, so the sum is exact in any order), `ew / outw`,
+    * each contribution rounded as Spark's `round(double, 6)` rounds the
+    * double's shortest decimal form, exact decimal per-word sums and the
+    * unrounded update. The edge list is symmetric, so every word is a
+    * source, has in-edges and keeps a score in every round. */
+  private def rankWords(held: Array[Row]): Array[Row] = {
+    val words = held.map(_.getString(0)).distinct
+    val ix = words.zipWithIndex.toMap
+    val src = held.map(r => ix(r.getString(0)))
+    val dst = held.map(r => ix(r.getString(1)))
+    val outw = new Array[Double](words.length)
+    for (e <- held.indices) outw(src(e)) += held(e).getDouble(2)
+    val frac = held.indices.map(e => held(e).getDouble(2) / outw(src(e))).toArray
+    var s = Array.fill(words.length)(1.0)
+    for (_ <- 1 to TrIters) {
+      val insum = Array.fill(words.length)(java.math.BigDecimal.ZERO)
+      for (e <- held.indices) insum(dst(e)) = insum(dst(e)).add(
+        java.math.BigDecimal.valueOf(s(src(e)) * frac(e))
+          .setScale(6, java.math.RoundingMode.HALF_UP))
+      s = insum.map(x =>
+        (1.0 - GraphQueries.Damping) + GraphQueries.Damping * x.doubleValue)
+    }
+    words.indices.map(i => Row(words(i), s(i))).toArray
+  }
+
+  /** [[textrank]]'s rounds on executors, for edge lists above
+    * [[TrEdgeCap]]: the (word, score) frame after [[TrIters]] rounds. Its
+    * `frac` checkpoint re-runs the edge aggregate that the capped collect
+    * already ran once. */
+  private def propagatedRanks(edges: DataFrame): DataFrame = {
+    import edges.sparkSession.implicits._
     // r15: out-weight as a window sum over the edge frame (ONE exchange on
     // src) instead of groupBy(src) + self-join, which re-keyed the edge
     // frame twice. ew is an integer-valued double (a count), so the window
@@ -312,7 +376,6 @@ object TextQueries {
           (lit(1.0 - GraphQueries.Damping) + lit(GraphQueries.Damping) *
             $"insum".cast("double")).as("s"))
     }
-    scores.orderBy($"s".desc, $"w").limit(TrTop)
-      .select($"w".as("word"), $"s".as("score"))
+    scores.select($"w".as("word"), $"s".as("score"))
   }
 }

@@ -57,6 +57,16 @@ class GloveSpec extends SparkSpec {
       s"pair grid must not contain a window:\n$pp")
   }
 
+  test("glove: the pair-grid collect scans documents.parquet once — the " +
+    "vocabulary cut and the pair stream share the co-occurrence exchange") {
+    val (_, pairs) = CorpusQueries.glovePairGrid(spark, sf)
+    pairs.collect()
+    // the final adaptive plan, without the initial plan AQE also prints
+    val p = pairs.queryExecution.executedPlan.asInstanceOf[
+      org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec].executedPlan.toString
+    assert("FileScan parquet".r.findAllIn(p).length == 1, p)
+  }
+
   /** A corpus of `docs` as a fresh documents.parquet directory. */
   private def corpus(docs: Seq[String]): String = {
     val dir = java.nio.file.Files.createTempDirectory("glove_corpus").toString

@@ -245,19 +245,26 @@ class PlanAuditSpec extends SparkSpec {
     assert(exchanges(p) <= 2, s"too many shuffles:\n$p")
   }
 
-  test("textrank: corpus work stays behind the frac checkpoint — the " +
-    "final plan is a bounded top-k over a per-round-bounded score chain") {
+  test("textrank: the rounds run on the driver — the final plan is a " +
+    "bounded top-k over the local scores; above the cap the corpus work " +
+    "stays behind the frac checkpoint") {
     val p = plan(graft.queries.TextQueries.textrank(spark, sf))
     assert(!p.contains("Scan parquet"),
-      s"post-checkpoint plan must not rescan the corpus:\n$p")
+      s"the final plan must not rescan the corpus:\n$p")
+    assert(!p.contains("Join"), s"no join against the edge list:\n$p")
     assert(p.contains("TakeOrderedAndProject"),
       s"top-30 must compile to a bounded buffer, not a global sort:\n$p")
-    // r15: no per-round localCheckpoint — the TrIters rounds chain in one
+    val above = plan(graft.queries.TextQueries.textrank(spark, sf, cap = 0))
+    assert(!above.contains("Scan parquet"),
+      s"post-checkpoint plan must not rescan the corpus:\n$above")
+    assert(above.contains("TakeOrderedAndProject"),
+      s"top-30 must compile to a bounded buffer, not a global sort:\n$above")
+    // no per-round localCheckpoint — the TrIters rounds chain in one
     // plan. Budget: exactly 1 non-broadcast exchange per round (the
     // contrib aggregate; the score join reuses the aggregate's keying) +
     // the node-set distinct. Measured 6 at this shape — an inserted extra
     // shuffle trips this.
     val bound = graft.queries.TextQueries.TrIters + 1
-    assert(exchanges(p) <= bound, s"too many shuffles (> $bound):\n$p")
+    assert(exchanges(above) <= bound, s"too many shuffles (> $bound):\n$above")
   }
 }
