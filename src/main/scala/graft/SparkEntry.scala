@@ -1231,7 +1231,8 @@ object SparkEntry {
     * (bit-identical longs), mirrored to the full symmetric matrix, then
     * [[graft.queries.CorpusQueries.PcaIters]] matvec+normalize rounds
     * unrolled — every Σ quantizes terms to the 6-dp grid and sums in
-    * DECIMAL, so the replay is exact under any fold order. */
+    * DECIMAL, so the replay is exact under any fold order. A zero n² gives
+    * zero loadings, as in the engine. */
   private val PcaOracle: String = {
     val iters = (1 to CorpusQueries.PcaIters).map { k =>
       s"""u$k AS (SELECT f.i,
@@ -1240,8 +1241,9 @@ object SparkEntry {
        n$k AS (SELECT sum(CAST(round(CAST(ui AS DOUBLE) * CAST(ui AS DOUBLE), 6)
              AS DECIMAL(38,6))) AS n2 FROM u$k),
        v$k AS (SELECT i AS j, n2,
-             CAST(round(CAST(ui AS DOUBLE) / sqrt(CAST(n2 AS DOUBLE)), 6)
-               AS DECIMAL(18,6)) AS vj
+             CAST(CASE WHEN CAST(n2 AS DOUBLE) > 0.0
+               THEN round(CAST(ui AS DOUBLE) / sqrt(CAST(n2 AS DOUBLE)), 6)
+               ELSE 0.0 END AS DECIMAL(18,6)) AS vj
            FROM u$k CROSS JOIN n$k)"""
     }.mkString(",\n       ", ",\n       ", "")
     s"""WITH e AS (SELECT vec_id,

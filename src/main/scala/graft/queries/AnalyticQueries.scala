@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -716,9 +716,11 @@ object AnalyticQueries {
     * hash-matches bit-for-bit.
     *
     * Scale shape: the corpus-sized work (lead window + count) runs ONCE;
-    * the iteration runs on the ≤|types|² transition frame with the
-    * |types|-row π vector — constant-size per round regardless of event
-    * count, `localCheckpoint` keeping plans flat. */
+    * the ≤ |types|² transition frame P is collected, and the [[MarkovIters]]
+    * rounds run on the driver over the |types|-entry π vector in
+    * `java.math.BigDecimal` ([[SparkRound]]), with no job per round. The
+    * result re-enters the plan as a local frame; the closing sort stays
+    * in Spark for its UTF-8 state order. */
   def markovSteady(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // ONE memoized corpus pass ([[transitionCounts]]) yields both the
@@ -728,42 +730,31 @@ object AnalyticQueries {
     // no second corpus scan for states (VERDICT r11 #4)
     val art = transitionCounts(spark, dir)
     val raw = art.filter($"to_type".isNotNull)
-    val states = art.select($"from_type".as("st")).distinct().localCheckpoint()
     // absorbing states: no observed out-transition → unit self-loop
-    val noOut = states
-      .join(raw.select($"from_type").distinct(),
-        $"st" === $"from_type", "left_anti")
-      .select($"st".as("from_type"), $"st".as("to_type"), lit(1L).as("n"))
-    val wTot = Window.partitionBy($"from_type")
+    val noOut = art.select($"from_type").distinct()
+      .join(raw.select($"from_type").distinct(), Seq("from_type"), "left_anti")
+      .select($"from_type", $"from_type".as("to_type"), lit(1L).as("n"))
     val tr = raw.unionByName(noOut)
-      .withColumn("tot", sum($"n").over(wTot))
+      .withColumn("tot", sum($"n").over(Window.partitionBy($"from_type")))
       .select($"from_type", $"to_type",
         round($"n".cast("double") / $"tot".cast("double"), 6).as("p"))
-      .localCheckpoint()
-    // uniform start on the 6-dp grid (k is a window count over the tiny
-    // state frame — the corpus is not re-scanned)
-    var pi = states
-      .withColumn("pi",
-        round(lit(1.0) / count(lit(1)).over(Window.partitionBy()), 6)
-          .cast("decimal(18,6)"))
+      .collect()
+    // every state is a from_type of P (its own self-loop when absorbing);
+    // a null state joins no edge, so it holds no mass after round one
+    val states = tr.map(_.getString(0)).distinct
+    val ix = states.zipWithIndex.filter(_._1 != null).toMap
+    val edges = tr.flatMap(r =>
+      for (s <- ix.get(r.getString(0)); t <- ix.get(r.getString(1)))
+        yield (s, t, r.getDouble(2)))
+    var pi = states.map(_ => SparkRound.round(1.0 / states.length, 6))
     for (_ <- 1 to MarkovIters) {
-      // r15: every frame in the loop is |types|-bounded (event_type is a
-      // fixed enum at every tier), so broadcast is pinned by hint (guide
-      // §3.1) and NO in-loop checkpoint remains — π is read exactly once
-      // per round (linear lineage), so the whole 20-round chain runs as
-      // one job: per round one tiny exchange (the to_type aggregate) and
-      // two broadcast builds, instead of a materialize-to-blocks job
-      // every 5 rounds plus AQE's materialize-both-sides-then-convert on
-      // each join.
-      val next = tr.join(pi.hint("broadcast"), $"st" === $"from_type")
-        .select($"to_type",
-          round($"pi".cast("double") * $"p", 6).cast("decimal(28,6)").as("c"))
-        .groupBy($"to_type").agg(sum($"c").as("m"))
-      pi = states.join(next.hint("broadcast"), $"st" === $"to_type", "left")
-        .select($"st",
-          coalesce($"m", lit(0)).cast("decimal(18,6)").as("pi"))
+      val next = states.map(_ => java.math.BigDecimal.ZERO)
+      for ((s, t, p) <- edges)
+        next(t) = next(t).add(SparkRound.round(pi(s).doubleValue * p, 6))
+      pi = next
     }
-    pi.select($"st".as("event_type"), $"pi".cast("double").as("pi"))
+    Bounded.localFrame(spark, "event_type string, pi double",
+      states.indices.map(i => Row(states(i), pi(i).doubleValue)))
       .orderBy($"event_type")
   }
 

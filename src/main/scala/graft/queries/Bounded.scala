@@ -1,12 +1,15 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-/** The guard of the fitters that hold a corpus-derived frame on the driver
-  * when it is small: [[SimilarityQueries.computeComponents]]' verified pair
-  * list and [[TextQueries.textrank]]'s edge list. Such a frame is bounded by
-  * the data, not by construction, so each caller names a hard row cap and
-  * keeps an executor path for frames above it. */
+/** The driver side of the fitters that hold a frame or an iterate on the
+  * driver. A corpus-derived frame such as
+  * [[SimilarityQueries.computeComponents]]' verified pair list or
+  * [[TextQueries.textrank]]'s edge list is bounded by the data, not by
+  * construction, so each caller names a hard row cap and keeps an executor
+  * path for frames above it. Every driver-held result re-enters the plan as
+  * a local frame. */
 private[graft] object Bounded {
 
   /** `df`'s rows when it has at most `cap` of them, else None. One action
@@ -17,4 +20,8 @@ private[graft] object Bounded {
     val held = df.limit(cap + 1).collect()
     if (held.length <= cap) Some(held) else None
   }
+
+  /** `rows` as a local frame of the DDL schema `ddl`, in their order. */
+  def localFrame(spark: SparkSession, ddl: String, rows: Iterable[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), StructType.fromDDL(ddl))
 }

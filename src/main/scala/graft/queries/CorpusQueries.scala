@@ -3,7 +3,7 @@ package graft.queries
 import graft.functions.Text
 import graft.sources.Tables
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -796,12 +796,13 @@ object CorpusQueries {
       for ((i, j, fx, lx) <- grid) {
         val (wi, cj) = (i * GloveDim, j * GloveDim)
         var dt = java.math.BigDecimal.ZERO
-        for (k <- 0 until GloveDim) dt = dt.add(onGrid(w.x(wi + k).multiply(c.x(cj + k))))
+        for (k <- 0 until GloveDim)
+          dt = dt.add(SparkRound.onGrid(w.x(wi + k).multiply(c.x(cj + k))))
         // weighted residual f(x)·(wᵢ·cⱼ + bᵢ + b̃ⱼ − ln x) on the grid
-        val fe = onGrid(fx.multiply(dt.add(bw.x(i)).add(bc.x(j)).subtract(lx)))
+        val fe = SparkRound.onGrid(fx.multiply(dt.add(bw.x(i)).add(bc.x(j)).subtract(lx)))
         for (k <- 0 until GloveDim) {
-          gw(wi + k) = gw(wi + k).add(onGrid(fe.multiply(c.x(cj + k))))
-          gc(cj + k) = gc(cj + k).add(onGrid(fe.multiply(w.x(wi + k))))
+          gw(wi + k) = gw(wi + k).add(SparkRound.onGrid(fe.multiply(c.x(cj + k))))
+          gc(cj + k) = gc(cj + k).add(SparkRound.onGrid(fe.multiply(w.x(wi + k))))
         }
         gbw(i) = gbw(i).add(fe)
         gbc(j) = gbc(j).add(fe)
@@ -810,21 +811,12 @@ object CorpusQueries {
     }
     val rows = for ((word, i) <- words.toSeq.zipWithIndex; k <- 0 until GloveDim) yield {
       val e = i * GloveDim + k
-      org.apache.spark.sql.Row(word, k + 1L, w.x(e).add(c.x(e)).doubleValue)
+      Row(word, k + 1L, w.x(e).add(c.x(e)).doubleValue)
     }
     // Spark's sort: strings in UTF-8 byte order, not Java's UTF-16 order
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), GloveSchema)
+    Bounded.localFrame(spark, "word string, dim bigint, vec double", rows)
       .orderBy($"word", $"dim")
   }
-
-  /** The (word, dim, vec) schema of [[gloveEmbed]]. */
-  private val GloveSchema = new org.apache.spark.sql.types.StructType()
-    .add("word", "string").add("dim", "long").add("vec", "double")
-
-  /** A decimal(18,6) product or quotient rounded back to the grid, as
-    * Spark's `round(x, 6)`: HALF_UP, away from zero on a tie. */
-  private def onGrid(d: java.math.BigDecimal): java.math.BigDecimal =
-    d.setScale(6, java.math.RoundingMode.HALF_UP)
 
   /** One AdaGrad-trained parameter block of [[gloveEmbed]] on the 6-dp
     * grid, values from 0 and accumulators from 1. A step adds the grid
@@ -837,9 +829,9 @@ object CorpusQueries {
     def zeros: Array[java.math.BigDecimal] = Array.fill(n)(java.math.BigDecimal.ZERO)
     def step(g: Array[java.math.BigDecimal]): Unit =
       for (e <- 0 until n) {
-        g2(e) = g2(e).add(onGrid(g(e).multiply(g(e))))
+        g2(e) = g2(e).add(SparkRound.onGrid(g(e).multiply(g(e))))
         val q = GloveLr * g(e).doubleValue / math.sqrt(g2(e).doubleValue)
-        x(e) = x(e).subtract(onGrid(java.math.BigDecimal.valueOf(q)))
+        x(e) = x(e).subtract(SparkRound.round(q, 6))
       }
   }
 
@@ -1123,6 +1115,8 @@ object CorpusQueries {
     * pipeline uses). Emits the unit loading per dimension after
     * [[PcaIters]] iterations from the exact uniform start (1/√64 = 0.125),
     * plus the dominant-eigenvalue estimate ‖G·v‖ from the final step.
+    * An all-zero Gram matrix (no embedding, or only zero vectors) yields
+    * zero loadings and λ = 0 through the n² > 0 guard of [[ppmiSvd]].
     *
     * Determinism doctrine: matrix entries enter as exact fixed-point longs
     * rescaled by one double divide; every Σ (matvec terms, squared norms)
@@ -1132,46 +1126,34 @@ object CorpusQueries {
     * on the identical grid.
     *
     * Scale shape: the corpus-sized work is [[gramUpperFx]]'s mergeable
-    * fixed-buffer aggregate (shuffle = #partitions × 2080 longs); the
-    * iterations run on d²-row checkpointed frames — constant-size
-    * regardless of corpus row count. */
+    * fixed-buffer aggregate (shuffle = #partitions × 2080 longs), whose
+    * 2080 rows are collected once; the [[PcaIters]] rounds run on the
+    * driver over the mirrored [[GramDims]]² entries in
+    * `java.math.BigDecimal` ([[SparkRound]]), with no job per round. */
   def embedPca(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val fx2 = graft.functions.Linalg.GramFxScale * graft.functions.Linalg.GramFxScale
-    val upper = gramUpperFx(spark, dir)
     // mirror to the full symmetric matrix, rescaled to the double view
-    val full = upper
-      .union(upper.filter($"i" =!= $"j").select($"j".as("i"), $"i".as("j"), $"g_fx"))
-      .select($"i", $"j", ($"g_fx" / lit(fx2)).as("g"))
-      .localCheckpoint()
-    var v = spark.range(GramDims)
-      .select($"id".as("j"), expr("CAST(0.125 AS DECIMAL(18,6))").as("vj"))
-    var last: DataFrame = null
-    // r15: every iteration frame is dims-bounded (≤ GramDims rows at ANY
-    // tier), so broadcast is pinned by hint, the squared-norm scalar is a
-    // single-partition window (the hits recipe — removes the crossJoin's
-    // double reference), and NO per-round checkpoint remains: the chain
-    // is linear over a fixed PcaIters, so the whole power iteration runs
-    // as one job after the Gram checkpoint. DECIMAL window sum ≡ the agg
-    // (fold-order exact).
-    for (_ <- 1 to PcaIters) {
-      val u = full.join(v.hint("broadcast"), "j")
-        .select($"i", round($"g" * $"vj".cast("double"), 6)
-          .cast("decimal(28,6)").as("t"))
-        .groupBy($"i").agg(sum($"t").as("ui"))
-      last = u
-        .withColumn("n2",
-          sum(round($"ui".cast("double") * $"ui".cast("double"), 6)
-            .cast("decimal(38,6)"))
-            .over(Window.partitionBy()))
-        .select($"i".as("j"), $"n2",
-          round($"ui".cast("double") / sqrt($"n2".cast("double")), 6)
-            .cast("decimal(18,6)").as("vj"))
-      v = last.select($"j", $"vj")
+    val full = gramUpperFx(spark, dir).collect().flatMap { r =>
+      val (i, j, g) = (r.getLong(0).toInt, r.getLong(1).toInt, r.getLong(2) / fx2)
+      if (i == j) Seq((i, j, g)) else Seq((i, j, g), (j, i, g))
     }
-    last.select($"j".as("dim"), $"vj".cast("double").as("loading"),
-        round(sqrt($"n2".cast("double")), 6).as("lambda"))
-      .orderBy($"dim")
+    var v = Array.fill(GramDims)(new java.math.BigDecimal("0.125"))
+    var n2 = java.math.BigDecimal.ZERO
+    for (_ <- 1 to PcaIters) {
+      val u = Array.fill(GramDims)(java.math.BigDecimal.ZERO)
+      for ((i, j, g) <- full)
+        u(i) = u(i).add(SparkRound.round(g * v(j).doubleValue, 6))
+      n2 = u.map(ui => SparkRound.round(ui.doubleValue * ui.doubleValue, 6))
+        .foldLeft(java.math.BigDecimal.ZERO)(_ add _)
+      val norm = math.sqrt(n2.doubleValue)
+      v = u.map(ui =>
+        if (n2.doubleValue > 0.0) SparkRound.round(ui.doubleValue / norm, 6)
+        else java.math.BigDecimal.ZERO)
+    }
+    val lambda = SparkRound.round(math.sqrt(n2.doubleValue), 6).doubleValue
+    // already in dim order
+    Bounded.localFrame(spark, "dim bigint, loading double, lambda double",
+      v.indices.map(j => Row(j.toLong, v(j).doubleValue, lambda)))
   }
 
   /** Per-source lexical diversity profile: type-token ratio and distinct-
@@ -1463,18 +1445,18 @@ object CorpusQueries {
     * engines' `replace` share the greedy scan BPE prescribes.
     *
     * Scale shape: the ONLY corpus-sized shuffle is the one token→vocab
-    * groupBy (Heaps' law: vocab ≪ corpus); each round then runs
-    * vocabulary-side — a pair explode (fan-out = word length), one
-    * partial+final pair count, a 1-row min_by argmax broadcast back, and
-    * a map-only replace — with localCheckpoint pinning the vocab plan
-    * constant across rounds (the dedupComponents iteration doctrine).
+    * groupBy (Heaps' law: vocab ≪ corpus), checkpointed once as the base
+    * segmentation. Each round then runs vocabulary-side as one job — a
+    * pair explode (fan-out = word length) over the base with the merges so
+    * far applied as literal replaces, one partial+final pair count and a
+    * 1-row min_by argmax, collected — and the next round's segmentation
+    * is one more map-only `replace`. The merge table is a local frame.
     * The DuckDB oracle unrolls all [[BpeMerges]] rounds as CTEs and must
     * reproduce every merge and count exactly. */
   def bpeTrain(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    bpeLoop(spark, dir)._1
-      .select($"it", $"pair", $"merged", $"n")
-      .orderBy($"it")
+    // the local merge table is already in `it` order
+    bpeLoop(spark, dir)._1.select($"it", $"pair", $"merged", $"n")
   }
 
   /** The trained loop's two artifacts: the merge table and the final
@@ -1482,10 +1464,10 @@ object CorpusQueries {
     * fitted-quantizer doctrine): four registered faces — train, vocab,
     * encode, WordPiece — consume the SAME trained artifacts, and without
     * the memo each pays the corpus token->vocab groupBy and all
-    * [[BpeMerges]] rounds again for bit-identical frames. Both returned
-    * frames end in localCheckpoints, so the cached values are
-    * executor-materialized and vocabulary-sized. */
-  private def bpeLoop(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+    * [[BpeMerges]] rounds again for bit-identical frames. The merge table
+    * is a local frame and the segmentation a map-only projection of the
+    * checkpointed base, so the cached values are vocabulary-sized. */
+  private[graft] def bpeLoop(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     SessionMemo.cached(spark,
       "bpeloop:" + SessionMemo.tableTag(dir, "documents")) {
       bpeLoopUncached(spark, dir)
@@ -1493,22 +1475,21 @@ object CorpusQueries {
 
   private def bpeLoopUncached(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val words = Tables.documents(spark, dir)
+    val base = Tables.documents(spark, dir)
       .select(explode(Text.tokenize($"text")).as("word"))
       .filter($"word".rlike("^[a-z]+$"))
       .groupBy($"word").agg(count(lit(1)).as("f"))
-    var vocab = words
       .select($"word",
         concat_ws("",
           transform(split($"word", ""), c => concat(lit("<"), c, lit(">")))).as("seg"),
         $"f")
       .localCheckpoint()
-    val rounds = (1 to BpeMerges).map { it =>
-      val syms = vocab
+    var seg: Column = $"seg"
+    val merges = (1 to BpeMerges).map { it =>
+      val best = base.select($"f", seg.as("seg"))
         .select($"f",
           split(expr("substring(seg, 2, length(seg) - 2)"), "><").as("sy"))
         .filter(size($"sy") >= 2)
-      val best = syms
         .select($"f", explode(expr(
           "transform(sequence(1, size(sy) - 1)," +
             " i -> concat('<', sy[i-1], '><', sy[i], '>'))")).as("pair"))
@@ -1516,13 +1497,15 @@ object CorpusQueries {
         .agg(min_by(struct($"pair", $"n"), struct(-$"n", $"pair")).as("b"))
         .select($"b.pair".as("pair"),
           expr("replace(b.pair, '><', '')").as("merged"), $"b.n".as("n"))
-        .localCheckpoint()
-      vocab = vocab.crossJoin(broadcast(best.select($"pair", $"merged")))
-        .select($"word", expr("replace(seg, pair, merged)").as("seg"), $"f")
-        .localCheckpoint()
-      best.withColumn("it", lit(it))
+        .head()
+      // a corpus with no pair left merges null: every segmentation turns
+      // null, as the former crossJoin with the null argmax row did
+      seg = replace(seg, lit(best.getString(0)).cast("string"),
+        lit(best.getString(1)).cast("string"))
+      Row(best.getString(0), best.getString(1), best.get(2), it)
     }
-    (rounds.reduce(_ unionByName _), vocab)
+    (Bounded.localFrame(spark, "pair string, merged string, n bigint, it int", merges),
+      base.select($"word", seg.as("seg"), $"f"))
   }
 
   /** q_bpe_vocab — the ENCODE face of [[bpeTrain]]: the 50 most frequent
@@ -2023,10 +2006,10 @@ object CorpusQueries {
     * best[j−|v|].sc + lp(v), ties → longer piece (a tie needs distinct
     * lengths: same end + same length = same piece). `st` is the growing
     * best-prefix array (element i+1 = best over prefix length i), `vs`
-    * the broadcast (sym, lp) vocabulary array. Integer micro-log scores
+    * the literal (sym, lp) vocabulary array. Integer micro-log scores
     * make every comparison exact — no float-order ambiguity for the
     * oracle to diverge on. */
-  private val UnigramDp =
+  private[graft] val UnigramDp =
     """aggregate(
          sequence(1, length(word)),
          array(named_struct('sc', cast(0 as bigint),
@@ -2069,10 +2052,14 @@ object CorpusQueries {
     * argmax bit-for-bit; local ties prefer the longer piece.
     *
     * Scale shape: ONE corpus-sized shuffle (token → word histogram,
-    * Heaps-law bounded); seeding, scoring, Viterbi (a codegen'd HOF fold
-    * per DISTINCT word against the broadcast 1-row vocab array) and
-    * re-counting are all vocabulary-sized, constant per round regardless
-    * of corpus size — the [[bpeTrain]] loop doctrine. */
+    * Heaps-law bounded), checkpointed once. The seed counts (at most 26 +
+    * [[UnigramSeedMulti]] pieces at any tier) are collected once and the
+    * counts live on the driver: each round scores the pieces there
+    * ([[SparkRound]]), passes the (sym, lp) array to the Viterbi pass as a
+    * literal — a codegen'd HOF fold per DISTINCT word, distributed over
+    * the checkpointed histogram — and collects the seed-bounded piece
+    * usage, one job per round. The inventory re-enters the plan as a
+    * local frame; the closing sort stays in Spark for its UTF-8 order. */
   def unigramTok(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val words = Tables.documents(spark, dir)
@@ -2092,39 +2079,34 @@ object CorpusQueries {
       .withColumn("rk", row_number().over(Window.orderBy($"n".desc, $"piece")))
       .filter($"rk" <= UnigramSeedMulti).drop("rk")
     // the seed piece SET is fixed; only counts evolve across rounds
-    var counts = chars.unionByName(multi).localCheckpoint()
-    val wAll = Window.partitionBy()
-    for (_ <- 1 to UnigramIters) {
-      val lp = counts.filter($"n" > 0)
-        .withColumn("tot", sum($"n").over(wAll))
-        .select($"piece",
-          round(log10($"n".cast("double") / $"tot".cast("double")) * 1e6, 0)
-            .cast("long").as("lp"))
-      val varr = lp.agg(sort_array(
-        collect_list(struct($"piece".as("sym"), $"lp".as("lp")))).as("vs"))
-      val used = words.crossJoin(broadcast(varr))
+    var counts = chars.unionByName(multi).collect()
+      .map(r => r.getString(0) -> r.getLong(1))
+    // no seed piece, no word: skip the rounds (an empty `vs` has no type)
+    for (_ <- 1 to UnigramIters if counts.nonEmpty) {
+      val alive = counts.filter(_._2 > 0)
+      val tot = alive.map(_._2).sum
+      // Spark's log10 is StrictMath's; round(x, 0) is HALF_UP
+      val vs = alive.sortBy(_._1).map { case (piece, n) =>
+        struct(lit(piece).as("sym"), lit(SparkRound.round(
+          StrictMath.log10(n.toDouble / tot.toDouble) * 1e6, 0).longValue).as("lp"))
+      }
+      val used = words.withColumn("vs", array(vs: _*))
         .withColumn("dp", expr(UnigramDp))
         .select($"f",
           explode(expr("element_at(dp, length(word) + 1).ps")).as("piece"))
         .groupBy($"piece").agg(sum($"f").as("n"))
-      val prev = counts
-      // r15: `used` is bounded by the fixed seed piece set at every tier,
-      // so broadcast is pinned by hint (guide §3.1)
-      counts = counts.select($"piece")
-        .join(used.hint("broadcast"), Seq("piece"), "left")
-        .select($"piece",
-          when(length($"piece") === 1,
-            greatest(coalesce($"n", lit(0L)), lit(1L)))
-            .otherwise(coalesce($"n", lit(0L))).as("n"))
-        .localCheckpoint()
-      // superseded EM round (r12 #5 cold-pass hygiene)
-      GraftSqlBridge.dropCheckpoint(prev)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      counts = counts.map { case (piece, _) =>
+        val n = used.getOrElse(piece, 0L)
+        piece -> (if (piece.length == 1) math.max(n, 1L) else n)
+      }
     }
-    counts.filter($"n" > 0)
-      .withColumn("tot", sum($"n").over(wAll))
-      .select($"piece", $"n",
-        round($"n".cast("double") / $"tot".cast("double"), 6).as("p"))
-      .orderBy($"n".desc, $"piece")
+    val alive = counts.filter(_._2 > 0)
+    val tot = alive.map(_._2).sum
+    Bounded.localFrame(spark, "piece string, n bigint, p double", alive.map {
+      case (piece, n) =>
+        Row(piece, n, SparkRound.round(n.toDouble / tot.toDouble, 6).doubleValue)
+    }).orderBy($"n".desc, $"piece")
   }
 
   // ---------------------------------------------------------------------

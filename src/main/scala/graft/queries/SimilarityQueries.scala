@@ -314,10 +314,6 @@ object SimilarityQueries {
     }
   }
 
-  /** The (doc_id, component, is_keeper) schema of [[dedupComponents]]. */
-  private val ComponentSchema = new org.apache.spark.sql.types.StructType()
-    .add("doc_id", "long").add("component", "long").add("is_keeper", "boolean")
-
   /** Components of a driver-held pair list as a local frame sorted by
     * doc_id. Min-root union-find: a union links the larger root under the
     * smaller, so every root is its component's least node — the fixpoint
@@ -342,7 +338,7 @@ object SimilarityQueries {
       val c = find(n)
       org.apache.spark.sql.Row(n, c, n == c)
     }
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), ComponentSchema)
+    Bounded.localFrame(spark, "doc_id bigint, component bigint, is_keeper boolean", rows)
   }
 
   /** Components of a (doc_a, doc_b) pair frame on executors: the symmetric
@@ -739,14 +735,10 @@ object SimilarityQueries {
     // inputs (bit-identical across engines), and λ·cos lands exactly on
     // the 7th-decimal .5 whenever cos's 6th digit is odd — rounding it
     // would diverge on shortest-repr vs raw-double tie handling
-    spark.createDataFrame(java.util.Arrays.asList(picks: _*), MmrSchema)
+    Bounded.localFrame(spark,
+      "query_id bigint, rank int, neighbor_id bigint, cosine double, mmr_score double",
+      picks)
   }
-
-  /** The (query_id, rank, neighbor_id, cosine, mmr_score) schema of
-    * [[mmrRerank]]. */
-  private val MmrSchema = new org.apache.spark.sql.types.StructType()
-    .add("query_id", "long").add("rank", "int").add("neighbor_id", "long")
-    .add("cosine", "double").add("mmr_score", "double")
 
   private def nullableDouble(r: org.apache.spark.sql.Row, i: Int): java.lang.Double =
     if (r.isNullAt(i)) null else r.getDouble(i)
@@ -854,15 +846,11 @@ object SimilarityQueries {
   private[graft] final case class LloydFit(metric: Metric, cents: Map[Int, Array[Centroid]]) {
     /** The fit as a local (key, cid, cv, norm) frame: consumers broadcast
       * it with no job. */
-    def frame(spark: SparkSession): DataFrame = {
-      val schema = new org.apache.spark.sql.types.StructType()
-        .add("key", "int").add("cid", "long").add("cv", "array<double>")
-        .add("norm", "double")
-      spark.createDataFrame(java.util.Arrays.asList(
-        (for ((key, cs) <- cents.toSeq.sortBy(_._1); c <- cs.toSeq) yield
+    def frame(spark: SparkSession): DataFrame =
+      Bounded.localFrame(spark, "key int, cid bigint, cv array<double>, norm double",
+        for ((key, cs) <- cents.toSeq.sortBy(_._1); c <- cs.toSeq) yield
           org.apache.spark.sql.Row(key, c.cid, Option(c.cv).map(_.toSeq).orNull,
-            metric.norm(c.cv))): _*), schema)
-    }
+            metric.norm(c.cv)))
 
     /** `(key, v) → (cid, score)`: see [[nearestCentroid]]. */
     def nearest: org.apache.spark.sql.expressions.UserDefinedFunction =

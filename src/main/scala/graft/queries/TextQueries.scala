@@ -300,16 +300,11 @@ object TextQueries {
     val edges = textrankEdges(spark, dir)
     val scores = Bounded.collectUnder(edges, cap) match {
       case Some(held) =>
-        spark.createDataFrame(java.util.Arrays.asList(rankWords(held): _*),
-          TextrankSchema)
+        Bounded.localFrame(spark, "word string, score double", rankWords(held))
       case None => propagatedRanks(edges)
     }
     scores.orderBy($"score".desc, $"word").limit(TrTop)
   }
-
-  /** The (word, score) schema of [[textrank]]. */
-  private val TextrankSchema = new org.apache.spark.sql.types.StructType()
-    .add("word", "string").add("score", "double")
 
   /** [[textrank]]'s rounds over a driver-held (src, dst, ew) edge list, as
     * [[propagatedRanks]] computes them: the out-weight sum (ew is an
@@ -329,9 +324,8 @@ object TextQueries {
     var s = Array.fill(words.length)(1.0)
     for (_ <- 1 to TrIters) {
       val insum = Array.fill(words.length)(java.math.BigDecimal.ZERO)
-      for (e <- held.indices) insum(dst(e)) = insum(dst(e)).add(
-        java.math.BigDecimal.valueOf(s(src(e)) * frac(e))
-          .setScale(6, java.math.RoundingMode.HALF_UP))
+      for (e <- held.indices)
+        insum(dst(e)) = insum(dst(e)).add(SparkRound.round(s(src(e)) * frac(e), 6))
       s = insum.map(x =>
         (1.0 - GraphQueries.Damping) + GraphQueries.Damping * x.doubleValue)
     }

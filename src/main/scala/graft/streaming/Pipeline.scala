@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.{Decay, Sketches, Text}
+import graft.queries.SparkRound
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -315,8 +316,7 @@ object Pipeline {
                     if (j >= Similarity.JaccardThreshold)
                       out += NearDupPair(math.min(m.doc_id, o.doc_id),
                         math.max(m.doc_id, o.doc_id),
-                        BigDecimal(j).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-                          .toDouble)
+                        SparkRound.round(j, 6).doubleValue)
                   }
                 }
                 members = members :+ m
@@ -412,8 +412,7 @@ object Pipeline {
                 (ss.toDouble - s.toDouble * s.toDouble / m.toDouble) / m.toDouble
               if (varp > 0.0) {
                 val z = (n.toDouble - mean) / math.sqrt(varp)
-                val z6 = BigDecimal(z)
-                  .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+                val z6 = SparkRound.round(z, 6).doubleValue
                 BurstAlert(key, hr, n, m, Some(z6), z >= 3.0)
               } else BurstAlert(key, hr, n, m, None, is_burst = false)
             } else BurstAlert(key, hr, n, m, None, is_burst = false)

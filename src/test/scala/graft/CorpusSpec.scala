@@ -2,6 +2,8 @@ package graft
 
 import graft.functions.Sketches
 import graft.queries.{CorpusQueries, RelationalQueries}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** Round-4 operators: HLL sketch laws + accuracy, substring-dedup
   * invariants, skip-gram semantics vs a driver-side reference, quantization
@@ -219,6 +221,70 @@ class CorpusSpec extends SparkSpec {
       java.nio.file.Files.walk(dirPath).iterator().asScala.toSeq
         .sortBy(-_.getNameCount)
         .foreach(java.nio.file.Files.deleteIfExists(_: java.nio.file.Path))
+    }
+  }
+
+  /** The former BPE loop: each round's argmax and re-segmented vocabulary
+    * checkpointed, the argmax row crossJoined back; returns the merge
+    * table and the final (word, seg, f) segmentation. */
+  private def referenceBpe(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val words = graft.sources.Tables.documents(spark, dir)
+      .select(explode(graft.functions.Text.tokenize($"text")).as("word"))
+      .filter($"word".rlike("^[a-z]+$"))
+      .groupBy($"word").agg(count(lit(1)).as("f"))
+    var vocab = words
+      .select($"word",
+        concat_ws("",
+          transform(split($"word", ""), c => concat(lit("<"), c, lit(">")))).as("seg"),
+        $"f")
+      .localCheckpoint()
+    val rounds = (1 to CorpusQueries.BpeMerges).map { it =>
+      val syms = vocab
+        .select($"f",
+          split(expr("substring(seg, 2, length(seg) - 2)"), "><").as("sy"))
+        .filter(size($"sy") >= 2)
+      val best = syms
+        .select($"f", explode(expr(
+          "transform(sequence(1, size(sy) - 1)," +
+            " i -> concat('<', sy[i-1], '><', sy[i], '>'))")).as("pair"))
+        .groupBy($"pair").agg(sum($"f").as("n"))
+        .agg(min_by(struct($"pair", $"n"), struct(-$"n", $"pair")).as("b"))
+        .select($"b.pair".as("pair"),
+          expr("replace(b.pair, '><', '')").as("merged"), $"b.n".as("n"))
+        .localCheckpoint()
+      vocab = vocab.crossJoin(broadcast(best.select($"pair", $"merged")))
+        .select($"word", expr("replace(seg, pair, merged)").as("seg"), $"f")
+        .localCheckpoint()
+      best.withColumn("it", lit(it))
+    }
+    (rounds.reduce(_ unionByName _), vocab)
+  }
+
+  test("bpeTrain: the driver-held merges give the former Spark loop's merge " +
+    "table and segmentation on sf0.001, sf0.01 and a corpus with no pair") {
+    val sql = SparkSpec.spark
+    import sql.implicits._
+    val none = java.nio.file.Files.createTempDirectory("graft-bpe-none").toString
+    Seq((1L, "a b c a 42", "en", "a", 10L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$none/documents.parquet")
+    def table(df: DataFrame) =
+      df.select($"it", $"pair", $"merged", $"n").orderBy($"it").collect().toSeq
+    def segs(df: DataFrame) = df.orderBy($"word").collect().toSeq
+    val sf01 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+    for (dir <- Seq(sf, sf01, none)) {
+      val (merges, vocab) = CorpusQueries.bpeLoop(spark, dir)
+      val (refMerges, refVocab) = referenceBpe(spark, dir)
+      def shape(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+      assert(shape(merges) == shape(refMerges), dir)
+      assert(shape(vocab) == shape(refVocab), dir)
+      val got = table(merges)
+      assert(got.length == CorpusQueries.BpeMerges, dir)
+      assert(got.forall(_.isNullAt(1)) == (dir == none), dir)
+      assert(got == table(refMerges), dir)
+      assert(CorpusQueries.bpeTrain(spark, dir).collect().toSeq == got, dir)
+      assert(segs(vocab) == segs(refVocab), dir)
     }
   }
 

@@ -866,4 +866,41 @@ class FitterRoundsSpec extends SparkSpec {
     // Spark rounds ran 15
     assert(jobs <= 5, s"textrank ran $jobs jobs")
   }
+
+  test("job pin: markovSteady in a fresh session at sf0.01") {
+    val s = spark.newSession()
+    val jobs = jobsOf(s)(graft.queries.AnalyticQueries.markovSteady(s, Sf01).collect())
+    // the transition-count checkpoint (user window and count), the
+    // transition-matrix collect (state distinct, absorbing anti-join, row
+    // totals) and the closing sort over the local steady state; the
+    // 20-round join chain over the tr/states checkpoints ran 74
+    assert(jobs <= 12, s"markovSteady ran $jobs jobs")
+  }
+
+  test("job pin: embedPca in a fresh session at sf0.01") {
+    val s = spark.newSession()
+    val jobs = jobsOf(s)(graft.queries.CorpusQueries.embedPca(s, Sf01).collect())
+    // the Gram aggregate's stages and the collect of its 2080 rows; the
+    // mirrored-matrix checkpoint and the join rounds with their closing
+    // sort ran 16
+    assert(jobs <= 5, s"embedPca ran $jobs jobs")
+  }
+
+  test("job pin: unigramTok in a fresh session at sf0.01") {
+    val s = spark.newSession()
+    val jobs = jobsOf(s)(graft.queries.CorpusQueries.unigramTok(s, Sf01).collect())
+    // the word-histogram checkpoint, the seed collect, per round the
+    // Viterbi usage aggregate's map stage and its collect, and the closing
+    // sort over the local inventory; the per-round counts checkpoints ran 23
+    assert(jobs <= 15, s"unigramTok ran $jobs jobs")
+  }
+
+  test("job pin: bpeTrain in a fresh session at sf0.01") {
+    val s = spark.newSession()
+    val jobs = jobsOf(s)(graft.queries.CorpusQueries.bpeTrain(s, Sf01).collect())
+    // the base segmentation checkpoint, then per merge the pair count's
+    // two aggregate stages and the argmax collect; the per-round best and
+    // vocab checkpoints ran 46
+    assert(jobs <= 27, s"bpeTrain ran $jobs jobs")
+  }
 }

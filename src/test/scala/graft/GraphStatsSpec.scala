@@ -1,6 +1,8 @@
 package graft
 
 import graft.queries.{AnalyticQueries, CorpusQueries, GraphQueries}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-6 operators: weighted PageRank, SCD2 interval compaction, KS
@@ -72,6 +74,72 @@ class GraphStatsSpec extends SparkSpec {
     assert(math.abs(norm - 1.0) < 1e-4, s"loading norm $norm not unit")
     val lambdas = rows.map(_.getDouble(2)).distinct
     assert(lambdas.length == 1 && lambdas(0) > 0.0, "one positive eigenvalue estimate")
+  }
+
+  /** The former embedPca: the rounds as Spark frames over the mirrored
+    * Gram matrix checkpointed once, closed by the same sort. */
+  private def referencePca(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val fx2 = graft.functions.Linalg.GramFxScale * graft.functions.Linalg.GramFxScale
+    val upper = CorpusQueries.embedGram(spark, dir).select($"i", $"j", $"g_fx")
+    val full = upper
+      .union(upper.filter($"i" =!= $"j").select($"j".as("i"), $"i".as("j"), $"g_fx"))
+      .select($"i", $"j", ($"g_fx" / lit(fx2)).as("g"))
+      .localCheckpoint()
+    var v = spark.range(CorpusQueries.GramDims)
+      .select($"id".as("j"), expr("CAST(0.125 AS DECIMAL(18,6))").as("vj"))
+    var last: DataFrame = null
+    for (_ <- 1 to CorpusQueries.PcaIters) {
+      val u = full.join(v.hint("broadcast"), "j")
+        .select($"i", round($"g" * $"vj".cast("double"), 6)
+          .cast("decimal(28,6)").as("t"))
+        .groupBy($"i").agg(sum($"t").as("ui"))
+      last = u
+        .withColumn("n2",
+          sum(round($"ui".cast("double") * $"ui".cast("double"), 6)
+            .cast("decimal(38,6)"))
+            .over(Window.partitionBy()))
+        .select($"i".as("j"), $"n2",
+          round($"ui".cast("double") / sqrt($"n2".cast("double")), 6)
+            .cast("decimal(18,6)").as("vj"))
+      v = last.select($"j", $"vj")
+    }
+    last.select($"j".as("dim"), $"vj".cast("double").as("loading"),
+        round(sqrt($"n2".cast("double")), 6).as("lambda"))
+      .orderBy($"dim")
+  }
+
+  private def bits(df: DataFrame): Seq[(Long, Long, Long)] =
+    df.collect().toSeq.map(r => (r.getLong(0),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(2))))
+
+  test("embedPca: the driver rounds give the former Spark loop's rows, bit " +
+    "for bit, on sf0.001 and sf0.01") {
+    for (dir <- Seq(sf, java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString)) {
+      val local = CorpusQueries.embedPca(spark, dir)
+      assert(local.queryExecution.analyzed.collectFirst {
+        case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r
+      }.nonEmpty, dir)
+      assert(local.schema.map(f => f.name -> f.dataType.simpleString) ==
+        Seq("dim" -> "bigint", "loading" -> "double", "lambda" -> "double"), dir)
+      val got = bits(local)
+      assert(got.length == CorpusQueries.GramDims, dir)
+      assert(got == bits(referencePca(spark, dir)), dir)
+    }
+  }
+
+  test("embedPca: an all-zero embedding table gives zero loadings and a zero " +
+    "eigenvalue, where the former loop divided by zero") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pca-zero").toString
+    graft.sources.Tables.embeddings(spark, sf)
+      .withColumn("embedding", transform($"embedding", x => x - x))
+      .write.parquet(s"$dir/embeddings.parquet")
+    val rows = CorpusQueries.embedPca(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
+    assert(rows == (0 until CorpusQueries.GramDims).map(d => (d.toLong, 0.0, 0.0)))
+    val e = intercept[Exception](referencePca(spark, dir).collect())
+    assert(e.getMessage.contains("DIVIDE_BY_ZERO"), e.getMessage)
   }
 
   test("funnel: stages shrink monotonically, conversions consistent") {

@@ -78,11 +78,11 @@ class PlanAuditSpec extends SparkSpec {
     // final one (what actually ran)
     val p = plan(df).split("== Initial Plan ==").head
     assert(p.contains("isFinalPlan=true"), "expected an executed adaptive plan")
-    // the trainer's corpus-sized token->vocab groupBy and all 8 merge
-    // rounds run BEFORE the localCheckpoint, so the encode plan must not
-    // rescan the training subtree; remaining shuffles: word stream + vocab
-    // (both AQE-localized into the broadcast build), groupBy(doc_id), docs
-    // scan, orderBy range partition
+    // the trainer's corpus-sized token->vocab groupBy runs BEFORE the
+    // localCheckpoint and the merges apply as literal replaces, so the
+    // encode plan must not rescan the training subtree; remaining
+    // shuffles: word stream + vocab (both AQE-localized into the broadcast
+    // build), groupBy(doc_id), docs scan, orderBy range partition
     assert(exchanges(p) <= 5, s"too many shuffles:\n$p")
     assert(p.contains("BroadcastHashJoin"),
       "AQE must broadcast the vocabulary segmentation side at test scale")
@@ -122,21 +122,14 @@ class PlanAuditSpec extends SparkSpec {
     assert(exchanges(p) <= 5, s"too many shuffles:\n$p")
   }
 
-  test("markovSteady: the corpus work stays behind the tr/states " +
-    "checkpoints — the final plan reads no parquet and the per-round " +
-    "shuffle budget is bounded") {
+  test("markovSteady: the rounds run on the driver — the final plan sorts " +
+    "the local steady state") {
     val p = plan(graft.queries.AnalyticQueries.markovSteady(spark, sf))
-    // r15: the 20 power-iteration rounds build ONE job over |types|-row
-    // frames (no per-round localCheckpoint — validated at MarkovIters=20;
-    // plan size grows superlinearly with the constant, re-measure before
-    // raising it). Budget: exactly 1 non-broadcast exchange per round (the
-    // contrib aggregate; the state join rides its broadcast hint) + the
-    // start distinct + the closing sort. Measured 22 at this shape — an
-    // inserted extra shuffle trips this.
     assert(!p.toLowerCase.contains("parquet"),
-      s"corpus scan leaked past the checkpoint:\n$p")
-    val bound = graft.queries.AnalyticQueries.MarkovIters + 2
-    assert(exchanges(p) <= bound, s"too many shuffles (> $bound):\n$p")
+      s"corpus scan leaked past the local steady state:\n$p")
+    assert(!p.contains("Join"), s"post-iteration join:\n$p")
+    // the closing sort only
+    assert(exchanges(p) <= 1, s"too many shuffles:\n$p")
   }
 
   test("mmrRerank: the greedy rounds run on the driver — the final plan " +
@@ -198,14 +191,14 @@ class PlanAuditSpec extends SparkSpec {
       s"only the closing orderBy may range-partition (got $rangeParts):\n$p")
   }
 
-  test("unigramTok: EM rounds stay behind checkpoints — the final plan " +
-    "reads no parquet and re-runs no corpus or Viterbi work") {
+  test("unigramTok: the EM counts live on the driver — the final plan " +
+    "sorts the local inventory") {
     val p = plan(graft.queries.CorpusQueries.unigramTok(spark, sf))
     assert(!p.toLowerCase.contains("parquet"),
-      s"corpus scan leaked past the checkpoint:\n$p")
+      s"corpus scan leaked past the local inventory:\n$p")
     assert(!p.contains("Join"), s"post-EM join:\n$p")
-    // the surviving work: the tot window over the piece frame + closing sort
-    assert(exchanges(p) <= 3, s"too many shuffles:\n$p")
+    // the closing sort only
+    assert(exchanges(p) <= 1, s"too many shuffles:\n$p")
   }
 
   test("wordpieceEncode: segmentation cost stays behind the checkpoint; " +

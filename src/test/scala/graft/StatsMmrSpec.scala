@@ -1,6 +1,8 @@
 package graft
 
 import graft.queries.{AnalyticQueries, SimilarityQueries, TextQueries}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-11 operators: Markov steady state, chi-square independence,
@@ -39,6 +41,84 @@ class StatsMmrSpec extends SparkSpec {
       assert(math.abs(next.getOrElse(st, 0.0) - p) < 1e-3,
         s"state $st not stationary: $p vs ${next.getOrElse(st, 0.0)}")
     }
+  }
+
+  /** The former markovSteady: the rounds as Spark frames over the
+    * checkpointed transition and state frames, closed by the same sort. */
+  private def referenceMarkov(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
+    val art = graft.sources.Tables.events(spark, dir)
+      .select($"user_id", $"event_type", $"ts", $"event_id")
+      .withColumn("to_type", lead($"event_type", 1).over(w))
+      .groupBy($"event_type".as("from_type"), $"to_type")
+      .agg(count(lit(1)).as("n"))
+      .localCheckpoint()
+    val raw = art.filter($"to_type".isNotNull)
+    val states = art.select($"from_type".as("st")).distinct().localCheckpoint()
+    val noOut = states
+      .join(raw.select($"from_type").distinct(),
+        $"st" === $"from_type", "left_anti")
+      .select($"st".as("from_type"), $"st".as("to_type"), lit(1L).as("n"))
+    val tr = raw.unionByName(noOut)
+      .withColumn("tot", sum($"n").over(Window.partitionBy($"from_type")))
+      .select($"from_type", $"to_type",
+        round($"n".cast("double") / $"tot".cast("double"), 6).as("p"))
+      .localCheckpoint()
+    var pi = states
+      .withColumn("pi",
+        round(lit(1.0) / count(lit(1)).over(Window.partitionBy()), 6)
+          .cast("decimal(18,6)"))
+    for (_ <- 1 to AnalyticQueries.MarkovIters) {
+      val next = tr.join(pi.hint("broadcast"), $"st" === $"from_type")
+        .select($"to_type",
+          round($"pi".cast("double") * $"p", 6).cast("decimal(28,6)").as("c"))
+        .groupBy($"to_type").agg(sum($"c").as("m"))
+      pi = states.join(next.hint("broadcast"), $"st" === $"to_type", "left")
+        .select($"st",
+          coalesce($"m", lit(0)).cast("decimal(18,6)").as("pi"))
+    }
+    pi.select($"st".as("event_type"), $"pi".cast("double").as("pi"))
+      .orderBy($"event_type")
+  }
+
+  private def bits(df: DataFrame): Seq[(String, Long)] =
+    df.collect().toSeq.map(r =>
+      (r.getString(0), java.lang.Double.doubleToRawLongBits(r.getDouble(1))))
+
+  private lazy val sf01 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+
+  test("markovSteady: the driver rounds give the former Spark loop's rows, " +
+    "bit for bit, on sf0.001 and sf0.01") {
+    for (dir <- Seq(sf, sf01)) {
+      val local = AnalyticQueries.markovSteady(spark, dir)
+      assert(local.queryExecution.analyzed.collectFirst {
+        case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r
+      }.nonEmpty, dir)
+      assert(local.schema.map(f => f.name -> f.dataType.simpleString) ==
+        Seq("event_type" -> "string", "pi" -> "double"), dir)
+      val got = bits(local)
+      assert(got.length == 5, dir)
+      assert(got == bits(referenceMarkov(spark, dir)), dir)
+    }
+  }
+
+  test("markovSteady: an absorbing state self-loops and takes the mass, as " +
+    "in the former Spark loop") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-markov").toString
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    def at(m: Int) = new java.sql.Timestamp(t0.getTime + m * 60000L)
+    // "z" only ever ends a stream: no observed out-transition
+    Seq((1L, "a", at(0), 1L), (1L, "b", at(1), 2L), (1L, "z", at(2), 3L),
+        (2L, "b", at(0), 4L), (2L, "a", at(1), 5L), (2L, "z", at(2), 6L),
+        (3L, "a", at(0), 7L), (3L, "b", at(1), 8L))
+      .toDF("user_id", "event_type", "ts", "event_id")
+      .coalesce(1).write.parquet(s"$dir/events.parquet")
+    val got = bits(AnalyticQueries.markovSteady(spark, dir))
+    assert(got == bits(referenceMarkov(spark, dir)))
+    val pi = got.map { case (st, b) => st -> java.lang.Double.longBitsToDouble(b) }.toMap
+    assert(pi.keySet == Set("a", "b", "z"))
+    assert(pi("z") > 0.99 && pi("a") < 0.01 && pi("b") < 0.01, s"$pi")
   }
 
   test("chi2Assoc: margin identity — per-lang expected mass equals " +

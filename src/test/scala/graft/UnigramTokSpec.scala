@@ -1,6 +1,8 @@
 package graft
 
 import graft.queries.CorpusQueries
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** q_unigram_tok: hard-EM unigram-LM tokenizer trainer (Kudo 2018). The
@@ -40,8 +42,12 @@ class UnigramTokSpec extends SparkSpec {
     best(L)._2
   }
 
+  /** Spark's `round(log10(n / tot) * 1e6, 0)`: StrictMath's log10 and
+    * HALF_UP, which rounds a negative tie away from zero (`math.round`
+    * rounds it toward +∞). */
   private def microLog(n: Long, tot: Long): Long =
-    math.round(math.log10(n.toDouble / tot.toDouble) * 1e6)
+    BigDecimal(StrictMath.log10(n.toDouble / tot.toDouble) * 1e6)
+      .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
 
   test("unigramTok matches a full plain-Scala EM replay: every piece, " +
     "count and 6-dp relative frequency") {
@@ -127,6 +133,81 @@ class UnigramTokSpec extends SparkSpec {
       "empty-vocab result must keep the contract schema")
     assert(out.collect().isEmpty,
       "no piece can be trained from an empty seed vocabulary")
+  }
+
+  /** The former unigramTok: the EM rounds as Spark frames, the piece
+    * counts checkpointed per round, closed by the same window and sort. */
+  private def referenceUnigram(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val words = graft.sources.Tables.documents(spark, dir)
+      .select(explode(graft.functions.Text.tokenize($"text")).as("word"))
+      .filter($"word".rlike("^[a-z]+$") &&
+        length($"word") <= CorpusQueries.UnigramMaxLen)
+      .groupBy($"word").agg(count(lit(1)).as("f"))
+      .localCheckpoint()
+    val subs = words
+      .select($"f", explode(expr(
+        s"""flatten(transform(sequence(1, length(word)),
+             i -> transform(
+               sequence(1, least(${CorpusQueries.UnigramMaxPiece}, length(word) - i + 1)),
+               l -> substring(word, i, l))))""")).as("piece"))
+      .groupBy($"piece").agg(sum($"f").as("n"))
+    val chars = subs.filter(length($"piece") === 1)
+    val multi = subs.filter(length($"piece") >= 2)
+      .withColumn("rk", row_number().over(Window.orderBy($"n".desc, $"piece")))
+      .filter($"rk" <= CorpusQueries.UnigramSeedMulti).drop("rk")
+    var counts = chars.unionByName(multi).localCheckpoint()
+    val wAll = Window.partitionBy()
+    for (_ <- 1 to CorpusQueries.UnigramIters) {
+      val lp = counts.filter($"n" > 0)
+        .withColumn("tot", sum($"n").over(wAll))
+        .select($"piece",
+          round(log10($"n".cast("double") / $"tot".cast("double")) * 1e6, 0)
+            .cast("long").as("lp"))
+      val varr = lp.agg(sort_array(
+        collect_list(struct($"piece".as("sym"), $"lp".as("lp")))).as("vs"))
+      val used = words.crossJoin(broadcast(varr))
+        .withColumn("dp", expr(CorpusQueries.UnigramDp))
+        .select($"f",
+          explode(expr("element_at(dp, length(word) + 1).ps")).as("piece"))
+        .groupBy($"piece").agg(sum($"f").as("n"))
+      counts = counts.select($"piece")
+        .join(used.hint("broadcast"), Seq("piece"), "left")
+        .select($"piece",
+          when(length($"piece") === 1,
+            greatest(coalesce($"n", lit(0L)), lit(1L)))
+            .otherwise(coalesce($"n", lit(0L))).as("n"))
+        .localCheckpoint()
+    }
+    counts.filter($"n" > 0)
+      .withColumn("tot", sum($"n").over(wAll))
+      .select($"piece", $"n",
+        round($"n".cast("double") / $"tot".cast("double"), 6).as("p"))
+      .orderBy($"n".desc, $"piece")
+  }
+
+  private def bits(df: DataFrame): Seq[(String, Long, Long)] =
+    df.collect().toSeq.map(r => (r.getString(0), r.getLong(1),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(2))))
+
+  test("unigramTok: the driver-held counts give the former Spark loop's " +
+    "rows, bit for bit, on sf0.001, sf0.01 and a corpus with no piece") {
+    val none = java.nio.file.Files.createTempDirectory("graft-unitok0").toString
+    Seq((0L, "123 ABC !!!", "en", "synth", 11L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .coalesce(1).write.parquet(s"$none/documents.parquet")
+    val sf01 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+    for (dir <- Seq(sf, sf01, none)) {
+      val local = CorpusQueries.unigramTok(sql, dir)
+      assert(local.queryExecution.analyzed.collectFirst {
+        case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r
+      }.nonEmpty, dir)
+      assert(local.schema.map(f => f.name -> f.dataType.simpleString) ==
+        Seq("piece" -> "string", "n" -> "bigint", "p" -> "double"), dir)
+      val got = bits(local)
+      assert(got.isEmpty == (dir == none), dir)
+      assert(got == bits(referenceUnigram(sql, dir)), dir)
+    }
   }
 
   test("degenerate: a one-word corpus collapses deterministically to the " +
