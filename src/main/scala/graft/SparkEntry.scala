@@ -1268,7 +1268,8 @@ object SparkEntry {
 
   /** Weighted-HITS oracle: [[graft.queries.GraphQueries.HitsIters]]
     * mutual-reinforcement rounds unrolled, each half-round the same 6-dp
-    * quantize + DECIMAL sum + L2 normalize the engine performs. */
+    * quantize + DECIMAL sum + L2 normalize the engine performs. A zero n²
+    * gives zero scores, as in the engine. */
   private val HitsOracle: String = {
     def half(round: Int, prefix: String, scoreFrom: String, joinKey: String,
         groupKey: String): String =
@@ -1281,8 +1282,9 @@ object SparkEntry {
        ${prefix}n$round AS (SELECT sum(CAST(round(CAST(s AS DOUBLE) * CAST(s AS DOUBLE), 6)
            AS DECIMAL(38,6))) AS n2 FROM ${prefix}r$round),
        $prefix$round AS (SELECT node,
-           CAST(round(CAST(s AS DOUBLE) / sqrt(CAST(n2 AS DOUBLE)), 6)
-             AS DECIMAL(18,6)) AS v
+           CAST(CASE WHEN CAST(n2 AS DOUBLE) > 0.0
+             THEN round(CAST(s AS DOUBLE) / sqrt(CAST(n2 AS DOUBLE)), 6)
+             ELSE 0.0 END AS DECIMAL(18,6)) AS v
            FROM ${prefix}r$round CROSS JOIN ${prefix}n$round)"""
     val rounds = (1 to GraphQueries.HitsIters).map { k =>
       half(k, "a", s"h${k - 1}", "src", "dst") + ",\n       " +

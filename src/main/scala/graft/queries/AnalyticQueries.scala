@@ -716,36 +716,31 @@ object AnalyticQueries {
     * hash-matches bit-for-bit.
     *
     * Scale shape: the corpus-sized work (lead window + count) runs ONCE;
-    * the ≤ |types|² transition frame P is collected, and the [[MarkovIters]]
-    * rounds run on the driver over the |types|-entry π vector in
-    * `java.math.BigDecimal` ([[SparkRound]]), with no job per round. The
-    * result re-enters the plan as a local frame; the closing sort stays
-    * in Spark for its UTF-8 state order. */
+    * its ≤ |types|·(|types|+1) count rows are collected, P is normalized
+    * from them in exact longs, and the [[MarkovIters]] rounds run on the
+    * driver over the |types|-entry π vector in `java.math.BigDecimal`
+    * ([[SparkRound]]), with no job per round. The result re-enters the
+    * plan as a local frame already in Spark's state order
+    * ([[Bounded.StringOrder]]). */
   def markovSteady(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     // ONE memoized corpus pass ([[transitionCounts]]) yields both the
     // transition counts AND the state set: every event appears exactly
     // once as a from_type row (its to_type NULL when it ends a user's
-    // stream), so DISTINCT from_type ≡ DISTINCT event_type over events —
+    // stream), so the from_types are exactly the event types over events —
     // no second corpus scan for states (VERDICT r11 #4)
-    val art = transitionCounts(spark, dir)
-    val raw = art.filter($"to_type".isNotNull)
-    // absorbing states: no observed out-transition → unit self-loop
-    val noOut = art.select($"from_type").distinct()
-      .join(raw.select($"from_type").distinct(), Seq("from_type"), "left_anti")
-      .select($"from_type", $"from_type".as("to_type"), lit(1L).as("n"))
-    val tr = raw.unionByName(noOut)
-      .withColumn("tot", sum($"n").over(Window.partitionBy($"from_type")))
-      .select($"from_type", $"to_type",
-        round($"n".cast("double") / $"tot".cast("double"), 6).as("p"))
-      .collect()
-    // every state is a from_type of P (its own self-loop when absorbing);
+    val art = transitionCounts(spark, dir).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    val states = art.map(_._1).distinct.sorted(Bounded.StringOrder)
     // a null state joins no edge, so it holds no mass after round one
-    val states = tr.map(_.getString(0)).distinct
     val ix = states.zipWithIndex.filter(_._1 != null).toMap
-    val edges = tr.flatMap(r =>
-      for (s <- ix.get(r.getString(0)); t <- ix.get(r.getString(1)))
-        yield (s, t, r.getDouble(2)))
+    val raw = art.filter(t => t._1 != null && t._2 != null)
+    val tot = raw.groupMapReduce(_._1)(_._3)(_ + _)
+    val edges = raw.map { case (s, t, n) =>
+      (ix(s), ix(t), SparkRound.round(n.toDouble / tot(s).toDouble, 6).doubleValue)
+    } ++ ix.collect {
+      // absorbing states: no observed out-transition → unit self-loop
+      case (s, i) if !tot.contains(s) => (i, i, 1.0)
+    }
     var pi = states.map(_ => SparkRound.round(1.0 / states.length, 6))
     for (_ <- 1 to MarkovIters) {
       val next = states.map(_ => java.math.BigDecimal.ZERO)
@@ -755,7 +750,6 @@ object AnalyticQueries {
     }
     Bounded.localFrame(spark, "event_type string, pi double",
       states.indices.map(i => Row(states(i), pi(i).doubleValue)))
-      .orderBy($"event_type")
   }
 
   /** Chi-square test of independence between document language and source

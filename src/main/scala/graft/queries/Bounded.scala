@@ -9,7 +9,10 @@ import org.apache.spark.sql.types.StructType
   * [[TextQueries.textrank]]'s edge list is bounded by the data, not by
   * construction, so each caller names a hard row cap and keeps an executor
   * path for frames above it. Every driver-held result re-enters the plan as
-  * a local frame. */
+  * a local frame: the components, Lloyd, TextRank, GloVe, MMR, PCA,
+  * unigram, BPE and Markov fitters and the four nation-graph fixpoints of
+  * [[GraphQueries]]. A frame whose rows the driver already holds arrives in
+  * its final order ([[StringOrder]]) instead of paying a Spark sort. */
 private[graft] object Bounded {
 
   /** `df`'s rows when it has at most `cap` of them, else None. One action
@@ -24,4 +27,15 @@ private[graft] object Bounded {
   /** `rows` as a local frame of the DDL schema `ddl`, in their order. */
   def localFrame(spark: SparkSession, ddl: String, rows: Iterable[Row]): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), StructType.fromDDL(ddl))
+
+  /** Spark's ascending string order: UTF-8 bytes compared unsigned, nulls
+    * first. Java's `compareTo` compares UTF-16 units instead, which puts a
+    * character above U+FFFF before one in U+E000–U+FFFF. */
+  val StringOrder: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int =
+      if (a == null || b == null) java.lang.Boolean.compare(b == null, a == null)
+      else java.util.Arrays.compareUnsigned(
+        a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
 }

@@ -809,13 +809,12 @@ object CorpusQueries {
       }
       w.step(gw); c.step(gc); bw.step(gbw); bc.step(gbc)
     }
-    val rows = for ((word, i) <- words.toSeq.zipWithIndex; k <- 0 until GloveDim) yield {
-      val e = i * GloveDim + k
+    // already in (word, dim) order
+    val rows = for (word <- words.sorted(Bounded.StringOrder).toSeq; k <- 0 until GloveDim) yield {
+      val e = ix(word) * GloveDim + k
       Row(word, k + 1L, w.x(e).add(c.x(e)).doubleValue)
     }
-    // Spark's sort: strings in UTF-8 byte order, not Java's UTF-16 order
     Bounded.localFrame(spark, "word string, dim bigint, vec double", rows)
-      .orderBy($"word", $"dim")
   }
 
   /** One AdaGrad-trained parameter block of [[gloveEmbed]] on the 6-dp
@@ -2059,7 +2058,7 @@ object CorpusQueries {
     * literal — a codegen'd HOF fold per DISTINCT word, distributed over
     * the checkpointed histogram — and collects the seed-bounded piece
     * usage, one job per round. The inventory re-enters the plan as a
-    * local frame; the closing sort stays in Spark for its UTF-8 order. */
+    * local frame already in its (n desc, piece) order. */
   def unigramTok(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val words = Tables.documents(spark, dir)
@@ -2103,10 +2102,12 @@ object CorpusQueries {
     }
     val alive = counts.filter(_._2 > 0)
     val tot = alive.map(_._2).sum
-    Bounded.localFrame(spark, "piece string, n bigint, p double", alive.map {
-      case (piece, n) =>
+    // already in (n desc, piece) order
+    val byCount = Ordering.Tuple2(Ordering.Long.reverse, Bounded.StringOrder)
+    Bounded.localFrame(spark, "piece string, n bigint, p double",
+      alive.sortBy { case (piece, n) => (n, piece) }(byCount).map { case (piece, n) =>
         Row(piece, n, SparkRound.round(n.toDouble / tot.toDouble, 6).doubleValue)
-    }).orderBy($"n".desc, $"piece")
+      })
   }
 
   // ---------------------------------------------------------------------

@@ -1,20 +1,25 @@
 package graft.queries
 
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.math.BigDecimal
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over relationships the relational tables imply — the
   * link-graph ring of a web-curation pipeline (PageRank-style authority
-  * is a classic document-quality prior: Page et al. 1999; production
-  * curation stacks weight crawl domains by exactly this kind of score).
+  * is a classic document-quality prior: Page et al. 1999).
   *
   * Scale posture: the expensive part is building the edge list (a full
-  * fact-table aggregation — partial+final, one shuffle on the edge key);
-  * the iterations then run on edge-count-sized frames with a
-  * node-count-sized rank frame that AQE broadcast-joins. Nothing is ever
-  * collected to the driver; `localCheckpoint` truncates per-iteration
-  * lineage exactly as the connected-components operator does.
+  * fact-table aggregation — partial+final, one shuffle on the edge key).
+  * The graph it yields is the nation trade graph: 25 nodes and at most 625
+  * edges at every tier, since `nation` is a fixed-size dimension that
+  * `ScaleUp` never replicates. Its size is fixed by the schema, not by the
+  * data, so the four fixpoints over it ([[pagerank]], [[hits]],
+  * [[labelProp]], [[coreness]]) collect the edge list and the nations once
+  * ([[tradeGraph]]) and run their rounds on the driver, with no job per
+  * round; each result re-enters the plan as a local frame already in node
+  * order. [[triangles]] has no rounds and keeps its degree-oriented wedge
+  * join on executors.
   */
 object GraphQueries {
 
@@ -45,6 +50,27 @@ object GraphQueries {
       .select($"src", $"dst", $"w")
   }
 
+  /** The nation trade graph on the driver: the `(node, n_name)` nation rows
+    * in node order, their node ids, and the [[tradeEdges]] rows
+    * `(src, dst, w)`. Two collects — the edge aggregate's fact-table pass
+    * and the 25-row nation scan — are all the Spark work the four fixpoint
+    * faces do. */
+  private def tradeGraph(spark: SparkSession, dir: String)
+      : (Array[Row], Array[Long], Array[(Long, Long, Long)]) = {
+    val nations = Tables.nation(spark, dir).select(col("n_nationkey"), col("n_name"))
+      .collect().sortBy(_.getInt(0))
+    val edges = tradeEdges(spark, dir).collect()
+      .map(r => (r.getInt(0).toLong, r.getInt(1).toLong, r.getLong(2)))
+    (nations, nations.map(_.getInt(0).toLong), edges)
+  }
+
+  /** One row per nation, in node order: `(node, n_name)` and `cols(i)` of
+    * the i-th nation, under the DDL `ddl` of those columns. */
+  private def perNation(spark: SparkSession, nations: Array[Row], ddl: String)
+      (cols: Int => Seq[Any]): DataFrame =
+    Bounded.localFrame(spark, s"node int, n_name string, $ddl",
+      nations.indices.map(i => Row.fromSeq(nations(i).toSeq ++ cols(i))))
+
   /** Weighted PageRank over [[tradeEdges]], [[PrIters]] synchronous
     * iterations from the uniform vector: pr_v ← 0.006 + 0.85 · Σ_u
     * pr_u · w_uv / outw_u (teleport-only mass for dangling nodes — with a
@@ -56,54 +82,35 @@ object GraphQueries {
     * scalars per node in double, identically per engine. The DuckDB oracle
     * replays all [[PrIters]] iterations as unrolled CTEs.
     *
-    * Scale shape: the edge build is the one fact-table shuffle; each
-    * iteration shuffles only the edge frame (≤ 625 rows here; ≤ |E| in
-    * general) and the 25-row rank frame broadcasts. At 100 TB the same
-    * plan holds with |nodes| = crawl domains: the rank frame stays
-    * millions of rows — a hash-shuffle join AQE picks automatically when
-    * broadcast no longer fits. */
+    * Scale shape: the edge build is the one fact-table shuffle; the ≤ 625
+    * edges and the 25 nations are collected once ([[tradeGraph]]) and
+    * [[pagerankOf]] runs the rounds on the driver. */
   def pagerank(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val edges = tradeEdges(spark, dir)
-    // per-edge propagation fraction. outw as a window sum over the edge
-    // frame (r15, guide §2.4): the former groupBy(src)+self-join re-keyed
-    // the edge frame twice (agg exchange + join exchange); the window
-    // rides ONE exchange on src. w is an exact long count, so the window
-    // fold order cannot perturb outw. Checkpointed so the fact-table scan
-    // behind it runs once, not once per iteration.
-    val ew = edges
-      .withColumn("outw", sum($"w").over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"src")))
-      .select($"src", $"dst",
-        ($"w".cast("double") / $"outw".cast("double")).as("frac"))
-      .localCheckpoint()
-    val nodes = Tables.nation(spark, dir)
-      .select($"n_nationkey".as("node"), $"n_name")
-    var ranks = nodes.select($"node",
-      expr("CAST(0.04 AS DECIMAL(18,6))").as("pr"))
+    val (nations, nodes, edges) = tradeGraph(spark, dir)
+    val pr = pagerankOf(nodes, edges)
+    perNation(spark, nations, "pr double")(i => Seq(pr(i)))
+  }
+
+  /** [[PrIters]] PageRank rounds over a directed edge list `(src, dst, w)`:
+    * the rank of each of `nodes`, in their order. `frac` is the IEEE
+    * quotient of `w` by the exact long out-weight; each contribution is
+    * rounded as Spark's `round(double, 6)` ([[SparkRound]]) and summed
+    * exactly. A node with no in-edges keeps the teleport share. Edges with
+    * an end outside `nodes` carry no rank but count in the out-weight. */
+  private[graft] def pagerankOf(nodes: Array[Long],
+                                edges: Array[(Long, Long, Long)]): Array[Double] = {
+    val ix = nodes.zipWithIndex.toMap
+    val outw = edges.groupMapReduce(_._1)(_._3)(_ + _)
+    val ew = for ((s, d, w) <- edges; i <- ix.get(s); j <- ix.get(d))
+      yield (i, j, w.toDouble / outw(s).toDouble)
+    var pr = Array.fill(nodes.length)(new BigDecimal("0.04"))
     for (_ <- 1 to PrIters) {
-      // rank frame is nation-bounded (25 rows at EVERY scale factor —
-      // TPC-H's nation table is fixed-size), so broadcast is pinned by
-      // hint (guide §3.1) instead of waiting for AQE to materialize both
-      // shuffle sides before converting. No per-iteration localCheckpoint
-      // (r15): each rank frame is referenced exactly once by the next
-      // round, so lineage is LINEAR in PrIters — the per-round
-      // materialize-to-blocks job was pure overhead at every scale.
-      val contrib = ew.join(ranks.hint("broadcast"), ew("src") === ranks("node"))
-        .select($"dst",
-          round($"pr".cast("double") * $"frac", 6)
-            .cast("decimal(28,6)").as("c"))
-        .groupBy($"dst").agg(sum($"c").as("insum"))
-      ranks = nodes.select($"node")
-        .join(contrib.hint("broadcast"), $"node" === $"dst", "left")
-        .select($"node",
-          round(lit(Teleport) +
-            lit(Damping) * coalesce($"insum".cast("double"), lit(0.0)), 6)
-            .cast("decimal(18,6)").as("pr"))
+      val insum = Array.fill(nodes.length)(BigDecimal.ZERO)
+      for ((i, j, frac) <- ew)
+        insum(j) = insum(j).add(SparkRound.round(pr(i).doubleValue * frac, 6))
+      pr = insum.map(x => SparkRound.round(Teleport + Damping * x.doubleValue, 6))
     }
-    ranks.join(nodes, "node")
-      .select($"node", $"n_name", $"pr".cast("double").as("pr"))
-      .orderBy($"node")
+    pr.map(_.doubleValue)
   }
 
   /** Mutual-reinforcement rounds of [[hits]]. */
@@ -113,64 +120,51 @@ object GraphQueries {
     * — the complementary graph signal to [[pagerank]]: authority flows
     * along in-edges (a_v ← Σ w_uv·h_u), hub score along out-edges
     * (h_u ← Σ w_uv·a_v), each L2-normalized per half-round from the exact
-    * uniform start (1/√25 = 0.2).
+    * uniform start (1/√25 = 0.2). A half-round whose scores are all zero
+    * (a graph with no edges) normalizes to zero, as embedPca does.
     *
     * Determinism doctrine (same as [[pagerank]] / embedPca): every Σ
     * quantizes its terms to the 6-dp grid and sums in DECIMAL — exact
-    * under any fold order — and each normalize is a per-row double divide
+    * under any fold order — and each normalize is a per-node double divide
     * against the DECIMAL-summed squared norm. The DuckDB oracle unrolls
     * all [[HitsIters]] rounds as CTEs.
     *
-    * Scale shape: identical to [[pagerank]] — per round, two edge-frame
-    * shuffles keyed on dst/src with the node-sized score frame
-    * broadcast-joined (hash join once nodes outgrow broadcast). */
+    * Scale shape: identical to [[pagerank]] — one fact-table shuffle, then
+    * [[hitsOf]] runs the rounds on the driver. */
   def hits(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ew = tradeEdges(spark, dir).localCheckpoint()
-    val nodes = Tables.nation(spark, dir)
-      .select($"n_nationkey".as("node"), $"n_name")
-    // raw: (node, s DECIMAL) -> unit-L2 (node, v DECIMAL(18,6)).
-    // r15: the squared-norm scalar is a window sum over the score frame
-    // instead of a separate agg + crossJoin(broadcast) — the crossJoin
-    // referenced `raw` TWICE, which compounded 2^(2·HitsIters)-fold once
-    // the per-round checkpoints were dropped. The single-partition window
-    // is safe at every tier: the score frame is nation-bounded (25 rows).
-    // The DECIMAL window sum is fold-order exact, bit-identical to the agg.
-    def normalized(raw: DataFrame): DataFrame = raw
-      .withColumn("n2",
-        sum(round($"s".cast("double") * $"s".cast("double"), 6)
-          .cast("decimal(38,6)"))
-          .over(org.apache.spark.sql.expressions.Window.partitionBy()))
-      .select($"node",
-        round($"s".cast("double") / sqrt($"n2".cast("double")), 6)
-          .cast("decimal(18,6)").as("v"))
-    var hub = nodes.select($"node", expr("CAST(0.2 AS DECIMAL(18,6))").as("v"))
-    var auth: DataFrame = null
-    for (_ <- 1 to HitsIters) {
-      // r15: no per-round localCheckpoint — with the window-normalize the
-      // lineage is linear (each score frame read once by the next
-      // half-round), and the node-bounded score frames broadcast by hint
-      // (guide §3.1) instead of via AQE's materialize-then-convert.
-      val araw = ew.join(hub.hint("broadcast"), ew("src") === hub("node"))
-        .select($"dst", round($"w".cast("double") * $"v".cast("double"), 6)
-          .cast("decimal(28,6)").as("c"))
-        .groupBy($"dst").agg(sum($"c").as("cs"))
-      auth = normalized(nodes.select($"node")
-        .join(araw.hint("broadcast"), $"node" === $"dst", "left")
-        .select($"node", coalesce($"cs", lit(0).cast("decimal(28,6)")).as("s")))
-      val hraw = ew.join(auth.hint("broadcast"), ew("dst") === auth("node"))
-        .select($"src", round($"w".cast("double") * $"v".cast("double"), 6)
-          .cast("decimal(28,6)").as("c"))
-        .groupBy($"src").agg(sum($"c").as("cs"))
-      hub = normalized(nodes.select($"node")
-        .join(hraw.hint("broadcast"), $"node" === $"src", "left")
-        .select($"node", coalesce($"cs", lit(0).cast("decimal(28,6)")).as("s")))
+    val (nations, nodes, edges) = tradeGraph(spark, dir)
+    val (hub, auth) = hitsOf(nodes, edges)
+    perNation(spark, nations, "hub double, auth double")(i => Seq(hub(i), auth(i)))
+  }
+
+  /** [[HitsIters]] HITS rounds over a directed edge list `(src, dst, w)`:
+    * the (hub, auth) scores of each of `nodes`, in their order. Each
+    * half-round sums `round(w·v, 6)` exactly per node (zero for a node with
+    * no edges on that side) and normalizes by the exact squared norm. */
+  private[graft] def hitsOf(nodes: Array[Long], edges: Array[(Long, Long, Long)])
+      : (Array[Double], Array[Double]) = {
+    val ix = nodes.zipWithIndex.toMap
+    val ew = for ((s, d, w) <- edges; i <- ix.get(s); j <- ix.get(d))
+      yield (i, j, w.toDouble)
+    val rev = ew.map { case (i, j, w) => (j, i, w) }
+    // the scores `v` flowing along each (from, to, w) edge, normalized
+    def half(v: Array[BigDecimal], es: Array[(Int, Int, Double)]): Array[BigDecimal] = {
+      val s = Array.fill(nodes.length)(BigDecimal.ZERO)
+      for ((i, j, w) <- es) s(j) = s(j).add(SparkRound.round(w * v(i).doubleValue, 6))
+      val n2 = s.map(x => SparkRound.round(x.doubleValue * x.doubleValue, 6))
+        .foldLeft(BigDecimal.ZERO)(_ add _)
+      val norm = math.sqrt(n2.doubleValue)
+      s.map(x =>
+        if (n2.doubleValue > 0.0) SparkRound.round(x.doubleValue / norm, 6)
+        else BigDecimal.ZERO)
     }
-    nodes
-      .join(hub.select($"node", $"v".cast("double").as("hub")), "node")
-      .join(auth.select($"node", $"v".cast("double").as("auth")), "node")
-      .select($"node", $"n_name", $"hub", $"auth")
-      .orderBy($"node")
+    var hub = Array.fill(nodes.length)(new BigDecimal("0.2"))
+    var auth = hub
+    for (_ <- 1 to HitsIters) {
+      auth = half(hub, ew)
+      hub = half(auth, rev)
+    }
+    (hub.map(_.doubleValue), auth.map(_.doubleValue))
   }
 
   /** Degree-oriented edges over a deduplicated undirected edge list
@@ -255,42 +249,48 @@ object GraphQueries {
     * and keeps the unrolled oracle finite, mirroring [[PrIters]]. */
   val CoreIters = 8
 
-  /** k-core decomposition via distributed h-index iteration (Lü, Zhou,
-    * Zhang, Stanley 2016, "The H-index of a network node" — public
-    * method): start every node at its degree and repeatedly replace each
-    * node's value with the h-index of its neighbors' values (the largest h
-    * such that ≥ h neighbors hold ≥ h); the fixpoint is exactly the node's
-    * core number. Coreness is the standard "dense sub-community depth"
-    * signal — a crawl-graph quality prior one tier stronger than raw
-    * degree, which a single hub edge can inflate but a core cannot.
+  /** k-core decomposition via h-index iteration (Lü, Zhou, Zhang, Stanley
+    * 2016, "The H-index of a network node" — public method): start every
+    * node at its degree and repeatedly replace each node's value with the
+    * h-index of its neighbors' values (the largest h such that ≥ h
+    * neighbors hold ≥ h); the fixpoint is exactly the node's core number.
+    * Coreness is the standard "dense sub-community depth" signal — a
+    * crawl-graph quality prior one tier stronger than raw degree, which a
+    * single hub edge can inflate but a core cannot.
     *
     * Chosen over sequential peeling (Batagelj–Zaveršnik) because peeling
     * is inherently serial in k while h-index iteration is a synchronous
-    * per-node update — the same edge-frame-shuffle-per-round shape as
-    * [[pagerank]]. Each round: join the adjacency list to the current
-    * value frame (node-count-sized, AQE broadcast-picks it), then a
-    * row_number window PARTITIONED BY node — per-key state bounded by that
-    * node's degree, never global. `max(least(rn, c))` over the descending
-    * value sequence is the h-index; it depends only on the sorted value
+    * per-node update; the h-index depends only on the sorted value
     * multiset, so tie order among equal values cannot change the result.
     * All values exact longs end-to-end; the DuckDB oracle replays all
-    * [[CoreIters]] rounds as unrolled CTEs. */
+    * [[CoreIters]] rounds as unrolled CTEs.
+    *
+    * Scale shape: identical to [[pagerank]] — one fact-table shuffle, then
+    * [[corenessOf]] runs the rounds on the driver; a nation with no
+    * trade partner has coreness 0. */
   def coreness(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val und = tradeEdges(spark, dir)
-      .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
-      .filter($"a" =!= $"b").distinct()
-    Tables.nation(spark, dir)
-      .select($"n_nationkey".as("node"), $"n_name")
-      .join(corenessOf(und), Seq("node"), "left")
-      .select($"node", $"n_name", coalesce($"c", lit(0L)).as("coreness"))
-      .orderBy($"node")
+    val (nations, nodes, edges) = tradeGraph(spark, dir)
+    val c = corenessOf(edges.map(e => (e._1, e._2)))
+    perNation(spark, nations, "coreness bigint")(i => Seq(c.getOrElse(nodes(i), 0L)))
   }
 
-  /** [[CoreIters]] h-index rounds over a deduplicated undirected edge
-    * list `(a, b)` — the iterative core shared by [[coreness]] and the
-    * synthetic-graph spec. Returns `(node, c)` for every non-isolated
-    * node. */
+  /** [[CoreIters]] h-index rounds over an undirected edge list `(a, b)`
+    * (duplicates and self-loops ignored) — the core shared by
+    * [[coreness]] and the synthetic-graph spec. Returns the value of every
+    * node with a neighbour. */
+  private[graft] def corenessOf(und: Array[(Long, Long)]): Map[Long, Long] = {
+    val nbrs = (und ++ und.map(_.swap)).filter(e => e._1 != e._2).distinct
+      .groupMap(_._1)(_._2)
+    var c = nbrs.map { case (n, ns) => n -> ns.length.toLong }
+    for (_ <- 1 to CoreIters) {
+      c = nbrs.map { case (n, ns) =>
+        val vs = ns.map(c).sorted(Ordering[Long].reverse)
+        n -> vs.indices.map(i => math.min(i + 1L, vs(i))).max
+      }
+    }
+    c
+  }
+
   /** Synchronous rounds for [[labelProp]] — enough to converge the 25-node
     * trade graph while keeping the unrolled oracle finite. */
   val LpaIters = 4
@@ -304,78 +304,37 @@ object GraphQueries {
     * (ties → smallest label; self-loops don't vote). Fixed round count
     * makes the output a well-defined function of the graph — no
     * convergence race — and all state is exact integers (node ids, summed
-    * long weights): nothing to quantize.
+    * long weights): nothing to quantize. The DuckDB oracle unrolls all
+    * rounds as CTEs and must agree on every label.
     *
-    * Scale shape: identical to [[pagerank]] — the edge build is the one
-    * fact-table shuffle; every round shuffles only edge-sized vote frames
-    * against a node-sized label frame that AQE broadcast-joins;
-    * `localCheckpoint` pins each round's plan constant. The DuckDB oracle
-    * unrolls all rounds as CTEs and must agree on every label. */
+    * Scale shape: identical to [[pagerank]] — one fact-table shuffle, then
+    * [[labelPropOf]] runs the rounds on the driver. */
   def labelProp(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val e = tradeEdges(spark, dir)
-    val nodes = Tables.nation(spark, dir)
-      .select($"n_nationkey".as("node"), $"n_name")
-    labelPropOf(e, nodes.select($"node"))
-      .join(nodes, "node")
-      .select($"node", $"n_name", $"lab".as("community"))
-      .orderBy($"node")
+    val (nations, nodes, edges) = tradeGraph(spark, dir)
+    val lab = labelPropOf(nodes, edges)
+    perNation(spark, nations, "community int")(i => Seq(lab(i).toInt))
   }
 
   /** [[LpaIters]] synchronous weighted-LPA rounds over a directed edge list
-    * `(src, dst, w)` (symmetrized and self-loop-stripped here) and a node
-    * frame `(node)`. Returns `(node, lab)` — the iterative core shared by
-    * [[labelProp]] and the synthetic-graph spec. */
-  private[graft] def labelPropOf(e: DataFrame, nodes: DataFrame): DataFrame = {
-    val und = e.select(col("src").as("u"), col("dst").as("v"), col("w"))
-      .unionByName(e.select(col("dst").as("u"), col("src").as("v"), col("w")))
-      .groupBy(col("u"), col("v")).agg(sum(col("w")).as("w"))
-      .filter(col("u") =!= col("v"))
-      .localCheckpoint()
-    var labels = nodes.select(col("node"), col("node").as("lab"))
+    * `(src, dst, w)` (symmetrized and self-loop-stripped here): the label
+    * of each of `nodes`, in their order — the core shared by [[labelProp]]
+    * and the synthetic-graph spec. A node with no votes keeps its own id. */
+  private[graft] def labelPropOf(nodes: Array[Long],
+                                 edges: Array[(Long, Long, Long)]): Array[Long] = {
+    val ix = nodes.zipWithIndex.toMap
+    val und = (edges ++ edges.map(e => (e._2, e._1, e._3)))
+      .collect { case (u, v, w) if u != v => (u, v) -> w }
+      .groupMapReduce(_._1)(_._2)(_ + _).toSeq
+    var lab = nodes
     for (_ <- 1 to LpaIters) {
-      // r15: no per-round localCheckpoint (linear lineage — each label
-      // frame is read once by the next round over a fixed 4 rounds) and
-      // broadcast pinned by hint on the node-bounded label frame
-      // (25 nations at every tier for the registered query; guide §3.1).
-      // The two-level aggregate (u, lab) → (u) collapses vote rows
-      // map-side before its one exchange.
-      val votes = und.join(labels.hint("broadcast"), und("v") === labels("node"))
-        .groupBy(col("u"), col("lab")).agg(sum(col("w")).as("vw"))
-      val next = votes.groupBy(col("u"))
-        .agg(max(struct(col("vw"), (-col("lab")).as("nl"))).as("m"))
-        .select(col("u").as("node"), (-col("m.nl")).as("lab"))
-      labels = nodes.select(col("node"))
-        .join(next.hint("broadcast"), Seq("node"), "left")
-        .select(col("node"), coalesce(col("lab"), col("node")).as("lab"))
+      val votes = und
+        .flatMap { case ((u, v), w) => for (i <- ix.get(u); j <- ix.get(v)) yield (i, lab(j)) -> w }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      // heaviest label, ties to the smallest
+      val best = votes.groupMapReduce(_._1._1) { case ((_, l), vw) => (vw, -l) }(
+        Ordering[(Long, Long)].max)
+      lab = nodes.indices.map(i => best.get(i).fold(nodes(i))(-_._2)).toArray
     }
-    labels
-  }
-
-  private[graft] def corenessOf(und: DataFrame): DataFrame = {
-    val adj = und.select(col("a").as("node"), col("b").as("nbr"))
-      .union(und.select(col("b").as("node"), col("a").as("nbr")))
-      .localCheckpoint()
-    var c = adj.groupBy(col("node")).agg(count(lit(1)).as("c"))
-    val byVal = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("node")).orderBy(col("c").desc)
-    for (_ <- 1 to CoreIters) {
-      // r15: no per-round localCheckpoint — each value frame is consumed
-      // exactly once by the next round (linear lineage over a fixed 8
-      // rounds), so the per-round materialize-to-blocks job was pure
-      // overhead. The value frame is node-bounded (25 nations at every
-      // tier for the registered query), so broadcast is pinned by hint
-      // (guide §3.1); the row_number window and the groupBy share ONE
-      // exchange on `node` (equal keys — the aggregate reuses the
-      // window's hash partitioning).
-      c = adj
-        .join(c.select(col("node").as("nn"), col("c")).hint("broadcast"),
-          col("nbr") === col("nn"))
-        .select(col("node"), col("c"))
-        .withColumn("rn", row_number().over(byVal).cast("long"))
-        .select(col("node"), least(col("rn"), col("c")).as("h"))
-        .groupBy(col("node")).agg(max(col("h")).as("c"))
-    }
-    c
+    lab
   }
 }

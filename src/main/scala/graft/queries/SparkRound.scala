@@ -5,7 +5,8 @@ import java.math.{BigDecimal, RoundingMode}
 /** Spark's rounding rules for the fitters that run their rounds on the
   * driver ([[CorpusQueries.gloveEmbed]], [[CorpusQueries.embedPca]],
   * [[CorpusQueries.unigramTok]], [[AnalyticQueries.markovSteady]],
-  * [[TextQueries.textrank]]) and for the streaming operators that emit the
+  * [[TextQueries.textrank]], [[GraphQueries.pagerank]] and
+  * [[GraphQueries.hits]]) and for the streaming operators that emit the
   * batch operators' rounded values, so a driver value equals the one the
   * former Spark plan computed, bit for bit. */
 private[graft] object SparkRound {

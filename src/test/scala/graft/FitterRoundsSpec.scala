@@ -843,10 +843,10 @@ class FitterRoundsSpec extends SparkSpec {
     val jobs = jobsOf(s)(graft.queries.CorpusQueries.gloveEmbed(s, Sf01).collect())
     // the seed collect and the pair-grid collect, each re-running the
     // co-occurrence aggregate and the vocabulary cut (the pair grid's two
-    // sides share one scan), then the closing sort over the local result;
-    // the per-round checkpoint loop ran 51, and 14 while the pair grid
-    // scanned the corpus twice
-    assert(jobs <= 13, s"gloveEmbed ran $jobs jobs")
+    // sides share one scan); the local result arrives sorted. The
+    // per-round checkpoint loop ran 51, 14 while the pair grid scanned
+    // the corpus twice, and 13 with a closing Spark sort
+    assert(jobs <= 10, s"gloveEmbed ran $jobs jobs")
   }
 
   test("job pin: mmrRerank in a fresh session at sf0.01") {
@@ -870,12 +870,27 @@ class FitterRoundsSpec extends SparkSpec {
   test("job pin: markovSteady in a fresh session at sf0.01") {
     val s = spark.newSession()
     val jobs = jobsOf(s)(graft.queries.AnalyticQueries.markovSteady(s, Sf01).collect())
-    // the transition-count checkpoint (user window and count), the
-    // transition-matrix collect (state distinct, absorbing anti-join, row
-    // totals) and the closing sort over the local steady state; the
-    // 20-round join chain over the tr/states checkpoints ran 74
-    assert(jobs <= 12, s"markovSteady ran $jobs jobs")
+    // the transition-count checkpoint (user window and count) and the
+    // collect of its rows; the transition matrix built in Spark (state
+    // distinct, absorbing anti-join, row totals) and the closing sort ran
+    // 12, the 20-round join chain 74
+    assert(jobs <= 5, s"markovSteady ran $jobs jobs")
   }
+
+  for ((name, face) <- Seq[(String, (SparkSession, String) => DataFrame)](
+      "pagerank" -> graft.queries.GraphQueries.pagerank,
+      "hits" -> graft.queries.GraphQueries.hits,
+      "labelProp" -> graft.queries.GraphQueries.labelProp,
+      "coreness" -> graft.queries.GraphQueries.coreness))
+    test(s"job pin: $name in a fresh session at sf0.01") {
+      val s = spark.newSession()
+      val jobs = jobsOf(s)(face(s, Sf01).collect())
+      // the trade-edge collect (the fact-table joins and aggregate) and
+      // the nation collect; the local result arrives in node order. The
+      // per-round Spark plans over edge checkpoints ran 30 (pagerank), 37
+      // (hits), 31 (labelProp) and 32 (coreness)
+      assert(jobs <= 11, s"$name ran $jobs jobs")
+    }
 
   test("job pin: embedPca in a fresh session at sf0.01") {
     val s = spark.newSession()
@@ -889,10 +904,11 @@ class FitterRoundsSpec extends SparkSpec {
   test("job pin: unigramTok in a fresh session at sf0.01") {
     val s = spark.newSession()
     val jobs = jobsOf(s)(graft.queries.CorpusQueries.unigramTok(s, Sf01).collect())
-    // the word-histogram checkpoint, the seed collect, per round the
-    // Viterbi usage aggregate's map stage and its collect, and the closing
-    // sort over the local inventory; the per-round counts checkpoints ran 23
-    assert(jobs <= 15, s"unigramTok ran $jobs jobs")
+    // the word-histogram checkpoint, the seed collect, and per round the
+    // Viterbi usage aggregate's map stage and its collect; the local
+    // inventory arrives sorted. The per-round counts checkpoints ran 23,
+    // and 15 with a closing Spark sort
+    assert(jobs <= 12, s"unigramTok ran $jobs jobs")
   }
 
   test("job pin: bpeTrain in a fresh session at sf0.01") {

@@ -178,6 +178,161 @@ class GraphStatsSpec extends SparkSpec {
     rows.foreach(r => assert(r.getDouble(2) >= 0.0 && r.getDouble(3) >= 0.0))
   }
 
+  /** The former pagerank: the rounds as Spark frames over the `ew`
+    * checkpoint, the rank frame broadcast by hint, over an `(src, dst, w)`
+    * edge frame and a `(node, n_name)` node frame. */
+  private def referencePagerank(edges: DataFrame, nodes: DataFrame): DataFrame = {
+    val ew = edges
+      .withColumn("outw", sum($"w").over(Window.partitionBy($"src")))
+      .select($"src", $"dst",
+        ($"w".cast("double") / $"outw".cast("double")).as("frac"))
+      .localCheckpoint()
+    var ranks = nodes.select($"node",
+      expr("CAST(0.04 AS DECIMAL(18,6))").as("pr"))
+    for (_ <- 1 to GraphQueries.PrIters) {
+      val contrib = ew.join(ranks.hint("broadcast"), ew("src") === ranks("node"))
+        .select($"dst",
+          round($"pr".cast("double") * $"frac", 6)
+            .cast("decimal(28,6)").as("c"))
+        .groupBy($"dst").agg(sum($"c").as("insum"))
+      ranks = nodes.select($"node")
+        .join(contrib.hint("broadcast"), $"node" === $"dst", "left")
+        .select($"node",
+          round(lit(GraphQueries.Teleport) + lit(GraphQueries.Damping) *
+            coalesce($"insum".cast("double"), lit(0.0)), 6)
+            .cast("decimal(18,6)").as("pr"))
+    }
+    ranks.join(nodes, "node")
+      .select($"node", $"n_name", $"pr".cast("double").as("pr"))
+      .orderBy($"node")
+  }
+
+  /** The former hits: the half-rounds as Spark frames over the edge
+    * checkpoint, each normalized by a window sum of the squared scores. */
+  private def referenceHits(edges: DataFrame, nodes: DataFrame): DataFrame = {
+    val ew = edges.localCheckpoint()
+    def normalized(raw: DataFrame): DataFrame = raw
+      .withColumn("n2",
+        sum(round($"s".cast("double") * $"s".cast("double"), 6)
+          .cast("decimal(38,6)"))
+          .over(Window.partitionBy()))
+      .select($"node",
+        round($"s".cast("double") / sqrt($"n2".cast("double")), 6)
+          .cast("decimal(18,6)").as("v"))
+    var hub = nodes.select($"node", expr("CAST(0.2 AS DECIMAL(18,6))").as("v"))
+    var auth: DataFrame = null
+    for (_ <- 1 to GraphQueries.HitsIters) {
+      val araw = ew.join(hub.hint("broadcast"), ew("src") === hub("node"))
+        .select($"dst", round($"w".cast("double") * $"v".cast("double"), 6)
+          .cast("decimal(28,6)").as("c"))
+        .groupBy($"dst").agg(sum($"c").as("cs"))
+      auth = normalized(nodes.select($"node")
+        .join(araw.hint("broadcast"), $"node" === $"dst", "left")
+        .select($"node", coalesce($"cs", lit(0).cast("decimal(28,6)")).as("s")))
+      val hraw = ew.join(auth.hint("broadcast"), ew("dst") === auth("node"))
+        .select($"src", round($"w".cast("double") * $"v".cast("double"), 6)
+          .cast("decimal(28,6)").as("c"))
+        .groupBy($"src").agg(sum($"c").as("cs"))
+      hub = normalized(nodes.select($"node")
+        .join(hraw.hint("broadcast"), $"node" === $"src", "left")
+        .select($"node", coalesce($"cs", lit(0).cast("decimal(28,6)")).as("s")))
+    }
+    nodes
+      .join(hub.select($"node", $"v".cast("double").as("hub")), "node")
+      .join(auth.select($"node", $"v".cast("double").as("auth")), "node")
+      .select($"node", $"n_name", $"hub", $"auth")
+      .orderBy($"node")
+  }
+
+  /** A frame's rows with every double as its raw bits. */
+  private def rawRows(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case x => x
+    })
+
+  private def nations(dir: String): DataFrame = graft.sources.Tables.nation(spark, dir)
+    .select($"n_nationkey".as("node"), $"n_name")
+
+  test("pagerank and hits: the driver rounds give the former Spark loops' " +
+    "rows, bit for bit, on sf0.001 and sf0.01") {
+    for (dir <- Seq(sf, java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString)) {
+      val edges = GraphQueries.tradeEdges(spark, dir)
+      for ((face, reference) <- Seq(
+          GraphQueries.pagerank(spark, dir) -> referencePagerank(edges, nations(dir)),
+          GraphQueries.hits(spark, dir) -> referenceHits(edges, nations(dir)))) {
+        assert(face.queryExecution.analyzed.collectFirst {
+          case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r
+        }.nonEmpty, dir)
+        assert(face.schema.map(f => f.name -> f.dataType) ==
+          reference.schema.map(f => f.name -> f.dataType), dir)
+        val got = rawRows(face)
+        assert(got.length == 25, dir)
+        assert(got == rawRows(reference), dir)
+      }
+    }
+  }
+
+  /** Nodes 0–4 and 9: node 3 has out-edges only, node 4 has no edge at all,
+    * node 1 has a self-loop, and node 9 lies outside the node set. */
+  private val shapedNodes = Array(0L, 1L, 2L, 3L, 4L)
+  private val shapedEdges = Array((0L, 1L, 3L), (1L, 2L, 5L), (2L, 0L, 2L),
+    (3L, 0L, 4L), (3L, 1L, 1L), (1L, 1L, 2L), (2L, 9L, 1L), (9L, 2L, 7L))
+
+  private def doubleBits(xs: Seq[Double]): Seq[Long] =
+    xs.map(java.lang.Double.doubleToRawLongBits)
+
+  test("pagerankOf and hitsOf: a node with no in-edges, an isolated node, a " +
+    "self-loop and an edge leaving the node set give the former loops' values") {
+    val edges = shapedEdges.toSeq.toDF("src", "dst", "w")
+    val nodes = shapedNodes.toSeq.map(n => (n, s"n$n")).toDF("node", "n_name")
+    val pr = referencePagerank(edges, nodes).collect()
+    assert(doubleBits(GraphQueries.pagerankOf(shapedNodes, shapedEdges).toSeq) ==
+      doubleBits(pr.map(_.getDouble(2)).toSeq))
+    // no in-edges: node 3 keeps the teleport share; so does the isolated node 4
+    assert(pr(3).getDouble(2) == GraphQueries.Teleport && pr(4).getDouble(2) == GraphQueries.Teleport)
+    val (hub, auth) = GraphQueries.hitsOf(shapedNodes, shapedEdges)
+    val ref = referenceHits(edges, nodes).collect()
+    assert(doubleBits(hub.toSeq) == doubleBits(ref.map(_.getDouble(2)).toSeq))
+    assert(doubleBits(auth.toSeq) == doubleBits(ref.map(_.getDouble(3)).toSeq))
+    assert(auth(3) == 0.0 && hub(4) == 0.0 && auth(4) == 0.0)
+  }
+
+  test("hitsOf: with no edges every score is zero, where the former loop " +
+    "divided by zero") {
+    val (hub, auth) = GraphQueries.hitsOf(shapedNodes, Array.empty)
+    assert(hub.toSeq == Seq.fill(5)(0.0) && auth.toSeq == Seq.fill(5)(0.0))
+    val e = intercept[Exception](referenceHits(
+      Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w"),
+      shapedNodes.toSeq.map(n => (n, s"n$n")).toDF("node", "n_name")).collect())
+    assert(e.getMessage.contains("DIVIDE_BY_ZERO"), e.getMessage)
+  }
+
+  test("graph faces: a copy of sf0.001 with no lineitems gives one row per " +
+    "nation — teleport ranks, zero HITS scores, own labels, no cores or " +
+    "triangles") {
+    val src = java.nio.file.Paths.get(sf)
+    val dir = java.nio.file.Files.createTempDirectory("graft-edgeless")
+    for (t <- Seq("nation", "customer", "supplier", "orders"))
+      java.nio.file.Files.createSymbolicLink(dir.resolve(s"$t.parquet"),
+        src.resolve(s"$t.parquet"))
+    graft.sources.Tables.lineitem(spark, sf).limit(0)
+      .write.parquet(dir.resolve("lineitem.parquet").toString)
+    val d = dir.toString
+    val keys = nations(sf).collect().map(_.getInt(0)).sorted.toSeq
+    def values(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq)
+    assert(values(GraphQueries.pagerank(spark, d)).map(r => (r(0), r(2))) ==
+      keys.map(k => (k, GraphQueries.Teleport)))
+    assert(values(GraphQueries.hits(spark, d)).map(r => (r(0), r(2), r(3))) ==
+      keys.map(k => (k, 0.0, 0.0)))
+    assert(values(GraphQueries.labelProp(spark, d)).map(r => (r(0), r(2))) ==
+      keys.map(k => (k, k)))
+    assert(values(GraphQueries.coreness(spark, d)).map(r => (r(0), r(2))) ==
+      keys.map(k => (k, 0L)))
+    assert(values(GraphQueries.triangles(spark, d)).map(r => (r(0), r(2))) ==
+      keys.map(k => (k, 0L)))
+  }
+
   test("triangles: matches a driver-side brute-force count") {
     val rows = GraphQueries.triangles(spark, sf).collect()
     assert(rows.length == 25)

@@ -1,6 +1,9 @@
 package graft
 
 import graft.queries.{CorpusQueries, GraphQueries}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
 /** Round-9 operators: k-core decomposition (h-index iteration) and maximal
   * duplicate-span coalescing. Value-level parity is the DuckDB oracle
@@ -18,28 +21,23 @@ class KcoreDupSpanSpec extends SparkSpec {
     val clique = for (a <- 0 to 4; b <- (a + 1) to 4) yield (a.toLong, b.toLong)
     val cycle = Seq((10L, 11L), (11L, 12L), (12L, 13L), (10L, 13L))
     val extra = Seq((4L, 10L), (13L, 20L))
-    val und = (clique ++ cycle ++ extra).toDF("a", "b")
-    val got = GraphQueries.corenessOf(und).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = GraphQueries.corenessOf((clique ++ cycle ++ extra).toArray)
     val want = Map(0L -> 4L, 1L -> 4L, 2L -> 4L, 3L -> 4L, 4L -> 4L,
       10L -> 2L, 11L -> 2L, 12L -> 2L, 13L -> 2L, 20L -> 1L)
     assert(got == want, s"coreness mismatch: $got")
   }
 
   test("corenessOf: bounded by degree and monotone under edge removal") {
-    val und = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L), (3L, 4L),
-      (4L, 2L)).toDF("a", "b")
+    val und = Array((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L), (3L, 4L), (4L, 2L))
     val deg = (Seq(0L -> 2, 1L -> 2, 2L -> 4, 3L -> 2, 4L -> 2)).toMap
-    val c = GraphQueries.corenessOf(und).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val c = GraphQueries.corenessOf(und)
     c.foreach { case (n, k) =>
       assert(k <= deg(n), s"node $n: coreness $k exceeds degree ${deg(n)}")
       assert(k >= 1, s"node $n: non-isolated node below 1-core")
     }
     // both triangles are 2-cores; the shared vertex cannot exceed 2
     assert(c(2L) == 2L, "shared vertex of two triangles is exactly 2-core")
-    val fewer = GraphQueries.corenessOf(und.filter($"a" =!= 2L && $"b" =!= 2L))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val fewer = GraphQueries.corenessOf(und.filter { case (a, b) => a != 2L && b != 2L })
     fewer.foreach { case (n, k) =>
       assert(k <= c(n), s"node $n: coreness rose after removing edges")
     }
@@ -50,6 +48,60 @@ class KcoreDupSpanSpec extends SparkSpec {
     assert(rows.length == 25, "one coreness row per nation")
     rows.foreach(r => assert(r.getLong(2) >= 0))
     assert(rows.map(_.getLong(2)).max >= 1, "trade graph has a non-trivial core")
+  }
+
+  /** The former coreness: the h-index rounds as Spark frames over the
+    * adjacency checkpoint, the value frame broadcast by hint, over an
+    * `(src, dst)` edge frame and a `(node, n_name)` node frame. */
+  private def referenceCoreness(e: DataFrame, nodes: DataFrame): DataFrame = {
+    val und = e.select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .filter(col("a") =!= col("b")).distinct()
+    val adj = und.select(col("a").as("node"), col("b").as("nbr"))
+      .union(und.select(col("b").as("node"), col("a").as("nbr")))
+      .localCheckpoint()
+    var c = adj.groupBy(col("node")).agg(count(lit(1)).as("c"))
+    val byVal = Window.partitionBy(col("node")).orderBy(col("c").desc)
+    for (_ <- 1 to GraphQueries.CoreIters) {
+      c = adj
+        .join(c.select(col("node").as("nn"), col("c")).hint("broadcast"),
+          col("nbr") === col("nn"))
+        .select(col("node"), col("c"))
+        .withColumn("rn", row_number().over(byVal).cast("long"))
+        .select(col("node"), least(col("rn"), col("c")).as("h"))
+        .groupBy(col("node")).agg(max(col("h")).as("c"))
+    }
+    nodes.join(c, Seq("node"), "left")
+      .select(col("node"), col("n_name"), coalesce(col("c"), lit(0L)).as("coreness"))
+      .orderBy(col("node"))
+  }
+
+  test("coreness: the driver rounds give the former Spark loop's rows on " +
+    "sf0.001 and sf0.01") {
+    for (dir <- Seq(sf, java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString)) {
+      val face = GraphQueries.coreness(spark, dir)
+      val reference = referenceCoreness(GraphQueries.tradeEdges(spark, dir),
+        graft.sources.Tables.nation(spark, dir)
+          .select(col("n_nationkey").as("node"), col("n_name")))
+      assert(face.schema.map(f => f.name -> f.dataType) ==
+        reference.schema.map(f => f.name -> f.dataType), dir)
+      val got = face.collect().toSeq
+      assert(got.length == 25, dir)
+      assert(got == reference.collect().toSeq, dir)
+    }
+  }
+
+  test("corenessOf: an isolated node, duplicate and reversed edges and a " +
+    "self-loop give the former loop's values") {
+    val e = Seq((0L, 1L), (1L, 0L), (1L, 2L), (2L, 0L), (2L, 3L), (3L, 3L),
+      (3L, 4L), (4L, 2L), (0L, 1L), (5L, 6L))
+    val nodes = Seq(0L, 1L, 2L, 3L, 4L, 5L, 6L, 7L)
+    val want = referenceCoreness(e.toDF("src", "dst"),
+      nodes.map(n => (n, s"n$n")).toDF("node", "n_name")).collect()
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val c = GraphQueries.corenessOf(e.toArray)
+    assert(nodes.map(n => n -> c.getOrElse(n, 0L)).toMap == want)
+    assert(want(7L) == 0L && want(2L) == 2L)
   }
 
   test("dupSpans: shared passage coalesces into one maximal span per doc") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.queries.{CorpusQueries, GraphQueries}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-9 additions: weighted label-propagation communities and the
@@ -12,31 +13,29 @@ class LpaKnSpec extends SparkSpec {
   private val sql = SparkSpec.spark
   import sql.implicits._
 
+  private def labels(nodes: Seq[Long], e: Seq[(Long, Long, Long)]): Map[Long, Long] =
+    nodes.zip(GraphQueries.labelPropOf(nodes.toArray, e.toArray)).toMap
+
   test("labelPropOf: two cliques with a weak bridge resolve to two " +
     "communities labeled by their smallest member") {
     // cliques {0,1,2} and {10,11,12} at weight 10, bridge 2-10 at weight 1
     val cl = for {
       base <- Seq(0L, 10L); a <- 0 to 2; b <- (a + 1) to 2
     } yield (base + a, base + b, 10L)
-    val e = (cl :+ ((2L, 10L, 1L))).toDF("src", "dst", "w")
-    val nodes = (Seq(0L, 1L, 2L) ++ Seq(10L, 11L, 12L)).toDF("node")
-    val got = GraphQueries.labelPropOf(e, nodes).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = labels(Seq(0L, 1L, 2L, 10L, 11L, 12L), cl :+ ((2L, 10L, 1L)))
     assert(got == Map(0L -> 0L, 1L -> 0L, 2L -> 0L,
       10L -> 10L, 11L -> 10L, 12L -> 10L), s"got $got")
   }
 
+  /** Node 5 bridges two label-anchoring triangles {1,3,4} and {2,6,7}
+    * (bare leaf pairs would oscillate under synchronous updates — the
+    * triangles stabilize to their min label by round 2) with equal weight. */
+  private val tieEdges = Seq((1L, 3L, 10L), (1L, 4L, 10L), (3L, 4L, 10L),
+    (2L, 6L, 10L), (2L, 7L, 10L), (6L, 7L, 10L), (1L, 5L, 3L), (2L, 5L, 3L))
+
   test("labelPropOf: tie on vote weight breaks to the smallest label") {
-    // node 5 bridges two label-anchoring triangles {1,3,4} and {2,6,7}
-    // (bare leaf pairs would oscillate under synchronous updates — the
-    // triangles stabilize to their min label by round 2); 5's equal-weight
-    // view of labels 1 and 2 must resolve to 1
-    val tri = Seq((1L, 3L, 10L), (1L, 4L, 10L), (3L, 4L, 10L),
-      (2L, 6L, 10L), (2L, 7L, 10L), (6L, 7L, 10L))
-    val e = (tri ++ Seq((1L, 5L, 3L), (2L, 5L, 3L))).toDF("src", "dst", "w")
-    val nodes = Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L).toDF("node")
-    val got = GraphQueries.labelPropOf(e, nodes).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // 5's equal-weight view of labels 1 and 2 must resolve to 1
+    val got = labels(Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L), tieEdges)
     assert(got(5L) == 1L, s"got $got")
     assert(Seq(1L, 3L, 4L).forall(got(_) == 1L) &&
       Seq(2L, 6L, 7L).forall(got(_) == 2L), s"got $got")
@@ -48,6 +47,61 @@ class LpaKnSpec extends SparkSpec {
     assert(rows.length == 25)
     val keys = rows.map(_.getInt(0)).toSet
     rows.foreach(r => assert(keys.contains(r.getInt(2))))
+  }
+
+  /** The former labelProp: the rounds as Spark frames over the symmetrized
+    * vote-weight checkpoint, the label frame broadcast by hint, over an
+    * `(src, dst, w)` edge frame and a `(node, n_name)` node frame. */
+  private def referenceLabelProp(e: DataFrame, nodes: DataFrame): DataFrame = {
+    val und = e.select(col("src").as("u"), col("dst").as("v"), col("w"))
+      .unionByName(e.select(col("dst").as("u"), col("src").as("v"), col("w")))
+      .groupBy(col("u"), col("v")).agg(sum(col("w")).as("w"))
+      .filter(col("u") =!= col("v"))
+      .localCheckpoint()
+    var labels = nodes.select(col("node"), col("node").as("lab"))
+    for (_ <- 1 to GraphQueries.LpaIters) {
+      val votes = und.join(labels.hint("broadcast"), und("v") === labels("node"))
+        .groupBy(col("u"), col("lab")).agg(sum(col("w")).as("vw"))
+      val next = votes.groupBy(col("u"))
+        .agg(max(struct(col("vw"), (-col("lab")).as("nl"))).as("m"))
+        .select(col("u").as("node"), (-col("m.nl")).as("lab"))
+      labels = nodes.select(col("node"))
+        .join(next.hint("broadcast"), Seq("node"), "left")
+        .select(col("node"), coalesce(col("lab"), col("node")).as("lab"))
+    }
+    labels.join(nodes, "node")
+      .select(col("node"), col("n_name"), col("lab").as("community"))
+      .orderBy(col("node"))
+  }
+
+  test("labelProp: the driver rounds give the former Spark loop's rows on " +
+    "sf0.001 and sf0.01") {
+    for (dir <- Seq(sf, java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString)) {
+      val face = GraphQueries.labelProp(spark, dir)
+      val reference = referenceLabelProp(GraphQueries.tradeEdges(spark, dir),
+        graft.sources.Tables.nation(spark, dir)
+          .select(col("n_nationkey").as("node"), col("n_name")))
+      assert(face.schema.map(f => f.name -> f.dataType) ==
+        reference.schema.map(f => f.name -> f.dataType), dir)
+      val got = face.collect().toSeq
+      assert(got.length == 25, dir)
+      assert(got == reference.collect().toSeq, dir)
+    }
+  }
+
+  test("labelPropOf: the vote tie, the bridged cliques, an isolated node and " +
+    "a self-loop give the former loop's labels") {
+    val bridged = (for {
+      base <- Seq(0L, 10L); a <- 0 to 2; b <- (a + 1) to 2
+    } yield (base + a, base + b, 10L)) :+ ((2L, 10L, 1L)) :+ ((11L, 11L, 50L))
+    for ((nodes, e) <- Seq(
+        Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L) -> tieEdges,
+        Seq(0L, 1L, 2L, 10L, 11L, 12L, 20L) -> bridged)) {
+      val want = referenceLabelProp(e.toDF("src", "dst", "w"),
+        nodes.map(n => (n, s"n$n")).toDF("node", "n_name")).collect()
+        .map(r => r.getLong(0) -> r.getLong(2)).toMap
+      assert(labels(nodes, e) == want, s"$nodes")
+    }
   }
 
   test("knBigram: driver-side Kneser-Ney replay on a constructed corpus") {

@@ -122,14 +122,13 @@ class PlanAuditSpec extends SparkSpec {
     assert(exchanges(p) <= 5, s"too many shuffles:\n$p")
   }
 
-  test("markovSteady: the rounds run on the driver — the final plan sorts " +
-    "the local steady state") {
+  test("markovSteady: the rounds run on the driver — the final plan reads " +
+    "the local steady state, already sorted") {
     val p = plan(graft.queries.AnalyticQueries.markovSteady(spark, sf))
     assert(!p.toLowerCase.contains("parquet"),
       s"corpus scan leaked past the local steady state:\n$p")
     assert(!p.contains("Join"), s"post-iteration join:\n$p")
-    // the closing sort only
-    assert(exchanges(p) <= 1, s"too many shuffles:\n$p")
+    assert(exchanges(p) == 0, s"shuffle over the local steady state:\n$p")
   }
 
   test("mmrRerank: the greedy rounds run on the driver — the final plan " +
@@ -192,13 +191,12 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("unigramTok: the EM counts live on the driver — the final plan " +
-    "sorts the local inventory") {
+    "reads the local inventory, already sorted") {
     val p = plan(graft.queries.CorpusQueries.unigramTok(spark, sf))
     assert(!p.toLowerCase.contains("parquet"),
       s"corpus scan leaked past the local inventory:\n$p")
     assert(!p.contains("Join"), s"post-EM join:\n$p")
-    // the closing sort only
-    assert(exchanges(p) <= 1, s"too many shuffles:\n$p")
+    assert(exchanges(p) == 0, s"shuffle over the local inventory:\n$p")
   }
 
   test("wordpieceEncode: segmentation cost stays behind the checkpoint; " +

@@ -121,6 +121,18 @@ class StatsMmrSpec extends SparkSpec {
     assert(pi("z") > 0.99 && pi("a") < 0.01 && pi("b") < 0.01, s"$pi")
   }
 
+  test("Bounded.StringOrder: the driver sorts strings as Spark's ascending " +
+    "order does — UTF-8 bytes, nulls first") {
+    // U+E000 and U+FFFD sort before a supplementary character in UTF-16
+    // (surrogates are 0xD800..0xDFFF) but after it in UTF-8
+    val xs = Seq("b", null, "", "a", "\uE000", "\uD83D\uDE00", "\uFFFD", "Z",
+      "\u00e9", "ab", "a\u0000", null)
+    val viaSpark = xs.toDF("s").orderBy($"s").collect().map(_.getString(0)).toSeq
+    assert(xs.sorted(graft.queries.Bounded.StringOrder) == viaSpark)
+    assert(xs.filter(_ != null).sorted != viaSpark.filter(_ != null),
+      "the cases must tell UTF-8 from UTF-16 order")
+  }
+
   test("chi2Assoc: margin identity — per-lang expected mass equals " +
     "observed lang totals; contributions are nonnegative") {
     val rows = AnalyticQueries.chi2Assoc(spark, sf).collect()
