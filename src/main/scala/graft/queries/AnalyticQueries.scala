@@ -124,16 +124,19 @@ object AnalyticQueries {
       .orderBy($"event_type")
   }
 
+  /** The event-type domain of `events`: the pivot's fixed columns, and the
+    * most states [[transitionCounts]] holds on the driver. */
+  val EventTypes: Seq[String] = Seq("click", "error", "purchase", "signup", "view")
+
   /** Day × event_type pivot of event counts (explicit value list so the
     * output schema is fixed; absent cells are 0). */
   def pivotDaily(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val types = Seq("click", "error", "purchase", "signup", "view")
     val pivoted = Tables.events(spark, dir)
       .groupBy(date_trunc("day", $"ts").as("day"))
-      .pivot("event_type", types)
+      .pivot("event_type", EventTypes)
       .agg(count(lit(1)))
-    types.foldLeft(pivoted)((df, t) =>
+    EventTypes.foldLeft(pivoted)((df, t) =>
         df.withColumn(t, coalesce(col(t), lit(0L))))
       .orderBy($"day")
   }
@@ -142,9 +145,8 @@ object AnalyticQueries {
     * the inverse transform, zeros preserved. */
   def unpivotDaily(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val types = Seq("click", "error", "purchase", "signup", "view")
     pivotDaily(spark, dir)
-      .unpivot(Array(col("day")), types.map(col).toArray, "event_type", "n")
+      .unpivot(Array(col("day")), EventTypes.map(col).toArray, "event_type", "n")
       .orderBy($"day", $"event_type")
   }
 
@@ -660,46 +662,52 @@ object AnalyticQueries {
     *
     * Scale shape: ONE hash partition by user_id + in-partition sort for
     * the lead() — the sessionization/SCD2 shape, no global sort; the
-    * transition count then collapses map-side onto ≤ |types|² keys and
-    * the per-source totals frame (≤ |types| rows) broadcasts back.
-    * Counts exact longs; p is two longs per divide, 6-dp-rounded. */
-  def eventTransitions(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val counts = transitionCounts(spark, dir).filter($"to_type".isNotNull)
-    // per-source totals as a window over the ≤|types|² count frame — NOT a
-    // groupBy joined back, which would re-run the corpus scan + lead sort
-    // a second time (the count frame is tiny; the corpus pipeline is not)
-    val wTot = Window.partitionBy($"from_type")
-    counts.withColumn("tot", sum($"n").over(wTot))
-      .select($"from_type", $"to_type", $"n",
-        round($"n".cast("double") / $"tot".cast("double"), 6).as("p"))
-      .orderBy($"from_type", $"to_type")
-  }
+    * transition count then collapses map-side onto the held
+    * [[transitionCounts]]. P is normalized from them on the driver
+    * ([[transitionProbs]]) and returned as a local frame already in
+    * (from_type, to_type) order. Counts exact longs; p is two longs per
+    * divide, 6-dp-rounded. */
+  def eventTransitions(spark: SparkSession, dir: String): DataFrame =
+    Bounded.localFrame(spark, "from_type string, to_type string, n bigint not null, p double",
+      transitionProbs(transitionCounts(spark, dir)).map(Row.fromTuple))
 
   /** Power-iteration rounds for [[markovSteady]]. */
   val MarkovIters = 20
 
-  /** The (from_type, to_type, n) lead-window count artifact, memoized per
-    * (session, events-tier) — ONE corpus scan + user-window sort serves
-    * both [[eventTransitions]] and [[markovSteady]] (VERDICT r11 #4;
-    * previously the two queries paid the corpus pipeline three times
-    * between them). Rows where to_type IS NULL are each user's final
-    * event — kept in the artifact so the DISTINCT from_type set is
-    * exactly the corpus state set (a type observed only as a stream tail
-    * is still a state markovSteady must self-loop); consumers filter.
-    * The frame is ≤ |types|·(|types|+1) rows, localCheckpoint'ed. */
-  private def transitionCounts(spark: SparkSession, dir: String): DataFrame =
+  /** The (from_type, to_type, n) lead-window counts, held on the driver
+    * once per (session, events-tier) — ONE corpus scan + user-window sort
+    * serves both [[eventTransitions]] and [[markovSteady]]. Rows where
+    * to_type IS NULL are each user's final event — kept so the from_type
+    * set is exactly the corpus state set (a type observed only as a
+    * stream tail is still a state markovSteady must self-loop). Each side
+    * is one of the [[EventTypes]] or null (a null to_type also marks the
+    * stream end), so there are at most (|types| + 1)² rows. */
+  private def transitionCounts(spark: SparkSession, dir: String)
+      : Array[(String, String, Long)] =
     SessionMemo.cached(spark,
       "evtransitions:" + SessionMemo.tableTag(dir, "events")) {
       import spark.implicits._
       val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-      Tables.events(spark, dir)
+      val counts = Tables.events(spark, dir)
         .select($"user_id", $"event_type", $"ts", $"event_id")
         .withColumn("to_type", lead($"event_type", 1).over(w))
         .groupBy($"event_type".as("from_type"), $"to_type")
         .agg(count(lit(1)).as("n"))
-        .localCheckpoint()
+      val sides = EventTypes.length + 1
+      Bounded.rows(counts, sides * sides, "event transitions")
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     }
+
+  /** P: each transition with a to_type, as (from_type, to_type, n, p) with
+    * p = round(n / tot, 6) over the exact long total of its from_type
+    * ([[SparkRound]]), in Spark's (from_type, to_type) order. */
+  private def transitionProbs(counts: Array[(String, String, Long)])
+      : Array[(String, String, Long, Double)] = {
+    val raw = counts.filter(_._2 != null)
+    val tot = raw.groupMapReduce(_._1)(_._3)(_ + _)
+    raw.sortBy(t => (t._1, t._2))(Ordering.Tuple2(Bounded.StringOrder, Bounded.StringOrder))
+      .map { case (s, t, n) => (s, t, n, SparkRound.round(n.toDouble / tot(s).toDouble, 6).doubleValue) }
+  }
 
   /** Stationary distribution of the event-type Markov chain — the
     * long-run fraction of time a user spends in each state, the summary
@@ -715,31 +723,26 @@ object AnalyticQueries {
     * fold order — so the DuckDB oracle unrolls all rounds as CTEs and
     * hash-matches bit-for-bit.
     *
-    * Scale shape: the corpus-sized work (lead window + count) runs ONCE;
-    * its ≤ |types|·(|types|+1) count rows are collected, P is normalized
-    * from them in exact longs, and the [[MarkovIters]] rounds run on the
-    * driver over the |types|-entry π vector in `java.math.BigDecimal`
+    * Scale shape: the corpus-sized work (lead window + count) runs ONCE
+    * per session ([[transitionCounts]]); P is normalized from the held
+    * counts ([[transitionProbs]]), and the [[MarkovIters]] rounds run on
+    * the driver over the |types|-entry π vector in `java.math.BigDecimal`
     * ([[SparkRound]]), with no job per round. The result re-enters the
     * plan as a local frame already in Spark's state order
     * ([[Bounded.StringOrder]]). */
   def markovSteady(spark: SparkSession, dir: String): DataFrame = {
-    // ONE memoized corpus pass ([[transitionCounts]]) yields both the
-    // transition counts AND the state set: every event appears exactly
-    // once as a from_type row (its to_type NULL when it ends a user's
-    // stream), so the from_types are exactly the event types over events —
-    // no second corpus scan for states (VERDICT r11 #4)
-    val art = transitionCounts(spark, dir).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    // every event appears exactly once as a from_type row (its to_type
+    // NULL when it ends a user's stream), so the from_types are exactly
+    // the event types over events — no second corpus scan for states
+    val art = transitionCounts(spark, dir)
     val states = art.map(_._1).distinct.sorted(Bounded.StringOrder)
     // a null state joins no edge, so it holds no mass after round one
     val ix = states.zipWithIndex.filter(_._1 != null).toMap
-    val raw = art.filter(t => t._1 != null && t._2 != null)
-    val tot = raw.groupMapReduce(_._1)(_._3)(_ + _)
-    val edges = raw.map { case (s, t, n) =>
-      (ix(s), ix(t), SparkRound.round(n.toDouble / tot(s).toDouble, 6).doubleValue)
-    } ++ ix.collect {
+    val p = transitionProbs(art).filter(_._1 != null)
+    val sources = p.map(_._1).toSet
+    val edges = p.map { case (s, t, _, pst) => (ix(s), ix(t), pst) } ++ ix.collect {
       // absorbing states: no observed out-transition → unit self-loop
-      case (s, i) if !tot.contains(s) => (i, i, 1.0)
+      case (s, i) if !sources.contains(s) => (i, i, 1.0)
     }
     var pi = states.map(_ => SparkRound.round(1.0 / states.length, 6))
     for (_ <- 1 to MarkovIters) {

@@ -235,8 +235,8 @@ object CorpusQueries {
       // runs split across tasks; a prefix group stays contiguous in the
       // global range order, so group adjacency survives partition
       // boundaries — stitch by handing each partition the first row of
-      // the next non-empty partition (numPartitions tiny rows via
-      // collect, the standard distributed adjacent-difference recipe).
+      // the next non-empty partition (at most numPartitions tiny rows on
+      // the driver, the standard distributed adjacent-difference recipe).
       // Boundary pairs are emitted by the left partition; the appended
       // row's own in-partition pairs re-emit it, and the downstream
       // groupBy(doc_id, pos).max(lcp) absorbs the duplicate.
@@ -245,11 +245,10 @@ object CorpusQueries {
         .sortWithinPartitions($"sufkey", $"doc_id", $"pos")
         .select($"doc_id", $"pos", $"sufkey")
         .as[(Long, Int, String)].rdd
-      val firsts = hotSorted
+      val firsts = Bounded.rows(spark.createDataset(hotSorted
         .mapPartitionsWithIndex { (i, it) =>
           if (it.hasNext) Iterator((i, it.next())) else Iterator.empty
-        }
-        .collect().sortBy(_._1)
+        }), hotSorted.getNumPartitions, "suffix partition firsts").sortBy(_._1)
       val firstsBc = spark.sparkContext.broadcast(firsts)
       val hotCover = hotSorted.mapPartitionsWithIndex { (i, it) =>
         val nextFirst = firstsBc.value.find(_._1 > i).map(_._2)
@@ -773,9 +772,8 @@ object CorpusQueries {
       ((conv(substring(md5(concat($"w", lit(salt), $"k".cast("string"))), 1, 8),
         16, 10).cast("long") % 10 + 1).cast("double") / lit(20.0))
         .cast("decimal(18,6)")
-    val seeds = vocab.crossJoin(broadcast(spark.range(1, GloveDim + 1).toDF("k")))
-      .select($"w", $"k", seed(":w"), seed(":c"))
-      .collect()
+    val seeds = Bounded.rows(vocab.crossJoin(broadcast(spark.range(1, GloveDim + 1).toDF("k")))
+      .select($"w", $"k", seed(":w"), seed(":c")), GloveVocab * GloveDim, "GloVe seeds")
     val words = seeds.map(_.getString(0)).distinct
     val ix = words.zipWithIndex.toMap
     // factors at word·GloveDim + (k − 1); biases at word
@@ -788,7 +786,7 @@ object CorpusQueries {
       w.x(e) = r.getDecimal(2)
       c.x(e) = r.getDecimal(3)
     }
-    val grid = pairs.collect().map(r =>
+    val grid = Bounded.rows(pairs, GloveVocab * GloveVocab, "GloVe pair grid").map(r =>
       (ix(r.getString(0)), ix(r.getString(1)), r.getDecimal(2), r.getDecimal(3)))
     for (_ <- 1 to GloveIters) {
       val (gw, gc) = (w.zeros, c.zeros)
@@ -1132,7 +1130,8 @@ object CorpusQueries {
   def embedPca(spark: SparkSession, dir: String): DataFrame = {
     val fx2 = graft.functions.Linalg.GramFxScale * graft.functions.Linalg.GramFxScale
     // mirror to the full symmetric matrix, rescaled to the double view
-    val full = gramUpperFx(spark, dir).collect().flatMap { r =>
+    val full = Bounded.rows(gramUpperFx(spark, dir), GramDims * (GramDims + 1) / 2,
+        "PCA Gram").flatMap { r =>
       val (i, j, g) = (r.getLong(0).toInt, r.getLong(1).toInt, r.getLong(2) / fx2)
       if (i == j) Seq((i, j, g)) else Seq((i, j, g), (j, i, g))
     }
@@ -1485,7 +1484,7 @@ object CorpusQueries {
       .localCheckpoint()
     var seg: Column = $"seg"
     val merges = (1 to BpeMerges).map { it =>
-      val best = base.select($"f", seg.as("seg"))
+      val argmax = base.select($"f", seg.as("seg"))
         .select($"f",
           split(expr("substring(seg, 2, length(seg) - 2)"), "><").as("sy"))
         .filter(size($"sy") >= 2)
@@ -1496,7 +1495,7 @@ object CorpusQueries {
         .agg(min_by(struct($"pair", $"n"), struct(-$"n", $"pair")).as("b"))
         .select($"b.pair".as("pair"),
           expr("replace(b.pair, '><', '')").as("merged"), $"b.n".as("n"))
-        .head()
+      val best = Bounded.rows(argmax, 1, "BPE argmax").head
       // a corpus with no pair left merges null: every segmentation turns
       // null, as the former crossJoin with the null argmax row did
       seg = replace(seg, lit(best.getString(0)).cast("string"),
@@ -2075,10 +2074,11 @@ object CorpusQueries {
       .groupBy($"piece").agg(sum($"f").as("n"))
     val chars = subs.filter(length($"piece") === 1)
     val multi = subs.filter(length($"piece") >= 2)
-      .withColumn("rk", row_number().over(Window.orderBy($"n".desc, $"piece")))
-      .filter($"rk" <= UnigramSeedMulti).drop("rk")
-    // the seed piece SET is fixed; only counts evolve across rounds
-    var counts = chars.unionByName(multi).collect()
+      .orderBy($"n".desc, $"piece").limit(UnigramSeedMulti)
+    // the seed piece SET is fixed; only counts evolve across rounds. Words
+    // are lowercase ASCII, so there are at most 26 single characters
+    val seedBound = 26 + UnigramSeedMulti
+    var counts = Bounded.rows(chars.unionByName(multi), seedBound, "unigram seeds")
       .map(r => r.getString(0) -> r.getLong(1))
     // no seed piece, no word: skip the rounds (an empty `vs` has no type)
     for (_ <- 1 to UnigramIters if counts.nonEmpty) {
@@ -2089,12 +2089,12 @@ object CorpusQueries {
         struct(lit(piece).as("sym"), lit(SparkRound.round(
           StrictMath.log10(n.toDouble / tot.toDouble) * 1e6, 0).longValue).as("lp"))
       }
-      val used = words.withColumn("vs", array(vs: _*))
+      val used = Bounded.rows(words.withColumn("vs", array(vs: _*))
         .withColumn("dp", expr(UnigramDp))
         .select($"f",
           explode(expr("element_at(dp, length(word) + 1).ps")).as("piece"))
-        .groupBy($"piece").agg(sum($"f").as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        .groupBy($"piece").agg(sum($"f").as("n")), seedBound, "unigram piece usage")
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
       counts = counts.map { case (piece, _) =>
         val n = used.getOrElse(piece, 0L)
         piece -> (if (piece.length == 1) math.max(n, 1L) else n)

@@ -14,12 +14,12 @@ import org.apache.spark.sql.functions._
   * The graph it yields is the nation trade graph: 25 nodes and at most 625
   * edges at every tier, since `nation` is a fixed-size dimension that
   * `ScaleUp` never replicates. Its size is fixed by the schema, not by the
-  * data, so the four fixpoints over it ([[pagerank]], [[hits]],
-  * [[labelProp]], [[coreness]]) collect the edge list and the nations once
-  * ([[tradeGraph]]) and run their rounds on the driver, with no job per
-  * round; each result re-enters the plan as a local frame already in node
-  * order. [[triangles]] has no rounds and keeps its degree-oriented wedge
-  * join on executors.
+  * data, so the edge list and the nations are held on the driver once per
+  * session ([[tradeGraph]]). The four fixpoints over it ([[pagerank]],
+  * [[hits]], [[labelProp]], [[coreness]]) run their rounds there, with no
+  * job per round; each result re-enters the plan as a local frame already
+  * in node order. [[triangles]] has no rounds and keeps its
+  * degree-oriented wedge join on executors, over the held edges.
   */
 object GraphQueries {
 
@@ -50,19 +50,28 @@ object GraphQueries {
       .select($"src", $"dst", $"w")
   }
 
+  /** Rows of `nation`, a fixed-size TPC-H dimension that `ScaleUp` never
+    * replicates: the trade graph's node bound. */
+  val Nations = 25
+
   /** The nation trade graph on the driver: the `(node, n_name)` nation rows
     * in node order, their node ids, and the [[tradeEdges]] rows
-    * `(src, dst, w)`. Two collects — the edge aggregate's fact-table pass
-    * and the 25-row nation scan — are all the Spark work the four fixpoint
-    * faces do. */
+    * `(src, dst, w)`, at most [[Nations]]² of them. Held once per session
+    * and tier (keyed by the [[SessionMemo.tableTag]] of every table it
+    * reads): the edge aggregate's fact-table pass and the nation scan are
+    * all the Spark work the four fixpoint faces do, paid by the first of
+    * the five graph faces a session runs. */
   private def tradeGraph(spark: SparkSession, dir: String)
-      : (Array[Row], Array[Long], Array[(Long, Long, Long)]) = {
-    val nations = Tables.nation(spark, dir).select(col("n_nationkey"), col("n_name"))
-      .collect().sortBy(_.getInt(0))
-    val edges = tradeEdges(spark, dir).collect()
-      .map(r => (r.getInt(0).toLong, r.getInt(1).toLong, r.getLong(2)))
-    (nations, nations.map(_.getInt(0).toLong), edges)
-  }
+      : (Array[Row], Array[Long], Array[(Long, Long, Long)]) =
+    SessionMemo.cached(spark, "tradegraph:" + Seq("lineitem", "orders", "customer",
+        "supplier", "nation").map(SessionMemo.tableTag(dir, _)).mkString(":")) {
+      val nations = Bounded.rows(
+        Tables.nation(spark, dir).select(col("n_nationkey"), col("n_name")),
+        Nations, "trade graph nations").sortBy(_.getInt(0))
+      val edges = Bounded.rows(tradeEdges(spark, dir), Nations * Nations,
+        "trade graph edges").map(r => (r.getInt(0).toLong, r.getInt(1).toLong, r.getLong(2)))
+      (nations, nations.map(_.getInt(0).toLong), edges)
+    }
 
   /** One row per nation, in node order: `(node, n_name)` and `cols(i)` of
     * the i-th nation, under the DDL `ddl` of those columns. */
@@ -82,9 +91,9 @@ object GraphQueries {
     * scalars per node in double, identically per engine. The DuckDB oracle
     * replays all [[PrIters]] iterations as unrolled CTEs.
     *
-    * Scale shape: the edge build is the one fact-table shuffle; the ≤ 625
-    * edges and the 25 nations are collected once ([[tradeGraph]]) and
-    * [[pagerankOf]] runs the rounds on the driver. */
+    * Scale shape: the edge build is the one fact-table shuffle, paid once
+    * per session ([[tradeGraph]]); [[pagerankOf]] runs the rounds on the
+    * driver. */
   def pagerank(spark: SparkSession, dir: String): DataFrame = {
     val (nations, nodes, edges) = tradeGraph(spark, dir)
     val pr = pagerankOf(nodes, edges)
@@ -129,7 +138,7 @@ object GraphQueries {
     * against the DECIMAL-summed squared norm. The DuckDB oracle unrolls
     * all [[HitsIters]] rounds as CTEs.
     *
-    * Scale shape: identical to [[pagerank]] — one fact-table shuffle, then
+    * Scale shape: as in [[pagerank]], the session's [[tradeGraph]], then
     * [[hitsOf]] runs the rounds on the driver. */
   def hits(spark: SparkSession, dir: String): DataFrame = {
     val (nations, nodes, edges) = tradeGraph(spark, dir)
@@ -223,19 +232,21 @@ object GraphQueries {
     * the clustering signal (a node in many triangles sits in a densely
     * interconnected trading cluster; zero triangles marks a pure spoke).
     *
-    * Scale shape: two shuffle joins over the DEDUPLICATED undirected
-    * edge list, wedge fan-out bounded by DEGREE orientation (see
-    * [[orientEdges]]) — the plan survives power-law skew, where the
-    * previous id-oriented wedge join was quadratic in a hub's degree.
-    * All counts exact longs; nations in no triangle surface with 0. */
+    * Scale shape: the deduplicated undirected edge list and the nations
+    * are local frames of the session's [[tradeGraph]], so a session that
+    * already ran a graph face pays no fact-table pass here. The count stays
+    * the distributed algorithm: two shuffle joins over the edge list, wedge
+    * fan-out bounded by DEGREE orientation (see [[orientEdges]]) — the plan
+    * survives power-law skew, where an id-oriented wedge join is quadratic
+    * in a hub's degree. All counts exact longs; nations in no triangle
+    * surface with 0. */
   def triangles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val und = tradeEdges(spark, dir)
-      .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
-      .filter($"a" =!= $"b").distinct()
+    val (nations, _, edges) = tradeGraph(spark, dir)
+    val und = Bounded.localFrame(spark, "a int, b int", edges.collect {
+      case (s, d, _) if s != d => Row(math.min(s, d).toInt, math.max(s, d).toInt) }.distinct)
     val perNode = triangleCounts(und)
-    Tables.nation(spark, dir)
-      .select($"n_nationkey".as("node"), $"n_name")
+    Bounded.localFrame(spark, "node int, n_name string", nations)
       .join(perNode, Seq("node"), "left")
       .select($"node", $"n_name",
         coalesce($"n_triangles", lit(0L)).as("n_triangles"))
@@ -265,7 +276,7 @@ object GraphQueries {
     * All values exact longs end-to-end; the DuckDB oracle replays all
     * [[CoreIters]] rounds as unrolled CTEs.
     *
-    * Scale shape: identical to [[pagerank]] — one fact-table shuffle, then
+    * Scale shape: as in [[pagerank]], the session's [[tradeGraph]], then
     * [[corenessOf]] runs the rounds on the driver; a nation with no
     * trade partner has coreness 0. */
   def coreness(spark: SparkSession, dir: String): DataFrame = {
@@ -307,7 +318,7 @@ object GraphQueries {
     * long weights): nothing to quantize. The DuckDB oracle unrolls all
     * rounds as CTEs and must agree on every label.
     *
-    * Scale shape: identical to [[pagerank]] — one fact-table shuffle, then
+    * Scale shape: as in [[pagerank]], the session's [[tradeGraph]], then
     * [[labelPropOf]] runs the rounds on the driver. */
   def labelProp(spark: SparkSession, dir: String): DataFrame = {
     val (nations, nodes, edges) = tradeGraph(spark, dir)

@@ -343,23 +343,12 @@ object RelationalQueries {
     * exposed so the plan test can assert the join stage is Exchange-free. */
   def bucketedOrdersCustomer(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // content-addressed cache tag (ADVICE r4): the tag folds in the source
-    // parquet file listing (name, size, mtime), not just the directory
-    // path — regenerating the tier at `dir` mid-session changes the tag
-    // and forces a fresh materialization instead of silently serving stale
-    // buckets. The base dir is per-process so two concurrent JVMs can
-    // never overwrite each other's bucket files mid-read.
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(dir.getBytes("UTF-8"))
-    for (t <- Seq("orders.parquet", "customer.parquet")) {
-      val f = new java.io.File(dir, t)
-      val files =
-        if (f.isDirectory) f.listFiles().sortBy(_.getName) else Array(f)
-      files.filter(_.exists).foreach { p =>
-        md.update(s"${p.getName}:${p.length}:${p.lastModified}".getBytes("UTF-8"))
-      }
-    }
-    val tag = md.digest().map("%02x".format(_)).mkString.take(12)
+    // content-addressed cache tag: the source tables' file listings, so
+    // regenerating the tier at `dir` mid-session forces a fresh
+    // materialization instead of silently serving stale buckets. The base
+    // dir is per-process so two concurrent JVMs can never overwrite each
+    // other's bucket files mid-read.
+    val tag = SessionMemo.tableTag(dir, "orders") + SessionMemo.tableTag(dir, "customer")
     val base = s"${System.getProperty("java.io.tmpdir")}/" +
       s"graft_bucketed_${ProcessHandle.current().pid()}/$tag"
     def materialize(name: String, df: DataFrame, key: String): String = {

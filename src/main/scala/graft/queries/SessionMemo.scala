@@ -20,10 +20,12 @@ import org.apache.spark.sql.SparkSession
   * so cached frames are not pinned past their session. Caller keys fold in
   * a [[tableTag]] — the source table's recursive parquet file listing
   * (name, size, mtime) — so regenerating a tier mid-session forces a fresh
-  * fit instead of serving a stale one. Values are expected to be
-  * localCheckpoint'ed DataFrames (executor-resident blocks, constant-size
-  * plans) or driver-local frames, so a memo hit costs a block read or
-  * nothing, not a recomputation.
+  * fit instead of serving a stale one. A value is one of: rows the driver
+  * holds under their [[Bounded.rows]] bound (the trade graph, the event
+  * transition counts, the OPQ allocation), a driver-local frame built from
+  * such rows, or a localCheckpoint'ed DataFrame (executor-resident blocks,
+  * constant-size plans) for an artifact too large for the driver. A memo
+  * hit costs nothing or a block read, not a recomputation.
   */
 private[graft] object SessionMemo {
   private val memo = TrieMap[(String, String), AnyRef]()

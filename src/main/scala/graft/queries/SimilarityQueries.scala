@@ -680,6 +680,8 @@ object SimilarityQueries {
   val MmrCandidates = 20
   /** Diversified results selected per query by [[mmrRerank]]. */
   val MmrK = 5
+  /** [[mmrRerank]]'s queries: the catalog's vec_ids below this. */
+  val MmrQueries = 10
 
   /** Maximal Marginal Relevance re-ranking (Carbonell & Goldstein 1998) —
     * the diversified-retrieval complement of [[knnCosine]]: from each
@@ -695,15 +697,16 @@ object SimilarityQueries {
     * CTEs, the Lloyd-round pattern) hash-matches exactly.
     *
     * Scale shape: the candidate pool is a broadcast-query scan + per-query
-    * top-k window (the [[knnCosine]] plan), collected with its vectors;
-    * the Q×20×19 pairwise cosines are computed by Spark over a local frame
-    * of that pool and collected too. Both are Q×[[MmrCandidates]]-bounded
-    * at any tier, so the [[MmrK]] greedy rounds run on the driver
-    * ([[mmrGreedy]]) and the selection is returned as a local frame. */
+    * top-k window (the [[knnCosine]] plan), collected with its vectors —
+    * [[MmrQueries]]×[[MmrCandidates]] rows at any tier. The [[MmrK]]
+    * greedy rounds run on the driver ([[mmrGreedy]]), taking each pairwise
+    * cosine from the held vectors with the [[Similarity.cosine]] column's
+    * arithmetic ([[Cosine]]), and the selection is returned as a local
+    * frame. */
   def mmrRerank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val emb = catalog(spark, dir).withColumn("nrm", Similarity.l2norm($"v"))
-    val queries = emb.filter($"vec_id" < 10)
+    val queries = emb.filter($"vec_id" < MmrQueries)
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"))
     val scored = emb.crossJoin(broadcast(queries))
       .filter($"vec_id" =!= $"query_id")
@@ -713,20 +716,17 @@ object SimilarityQueries {
     val pool = scored.withColumn("rn", row_number().over(wq))
       .filter($"rn" <= MmrCandidates)
       .select($"query_id", $"cid", $"v", $"nrm", $"cos")
-    val held = pool.collect()
-    val cand = spark.createDataFrame(java.util.Arrays.asList(held: _*), pool.schema)
-    // directed pairwise candidate cosines: Q × 20 × 19 rows
-    val pc = cand.as("x")
-      .join(cand.as("y"),
-        $"x.query_id" === $"y.query_id" && $"x.cid" =!= $"y.cid")
-      .select($"x.query_id", $"x.cid", $"y.cid",
-        round(Similarity.cosine($"x.v", $"y.v", $"x.nrm", $"y.nrm"), 6))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> nullableDouble(r, 3))
-      .toMap
+    val held = Bounded.rows(pool, MmrQueries * MmrCandidates, "MMR candidate pool")
+    val vecs = held.map(r => (r.getLong(0), r.getLong(1)) ->
+      (boxed(r.getSeq[java.lang.Double](2)), nullableDouble(r, 3))).toMap
+    // round(Similarity.cosine(a.v, b.v, a.nrm, b.nrm), 6), to the bit
+    def pcos(q: Long)(a: Long, b: Long): java.lang.Double = {
+      val ((av, an), (bv, bn)) = (vecs((q, a)), vecs((q, b)))
+      val c = Cosine.score(av, an, bv, bn)
+      if (c == null || c.isNaN || c.isInfinite) c else SparkRound.round(c, 6).doubleValue
+    }
     val picks = held.toSeq.groupBy(_.getLong(0)).toSeq.sortBy(_._1).flatMap { case (q, rs) =>
-      mmrGreedy(rs.map(r => (r.getLong(1), nullableDouble(r, 4))),
-        (a, b) => pc((q, a, b)))
+      mmrGreedy(rs.map(r => (r.getLong(1), nullableDouble(r, 4))), pcos(q))
         .zipWithIndex.map { case ((cid, cos, score), i) =>
           org.apache.spark.sql.Row(q, i + 1, cid, cos, score)
         }
@@ -879,8 +879,9 @@ object SimilarityQueries {
     * PQ oracles replay the Lloyd rounds as unrolled DuckDB CTEs. */
   private[graft] def lloyd(rows: DataFrame, k: Int, iters: Int, metric: Metric): LloydFit = {
     import rows.sparkSession.implicits._
-    val seeds = rows.filter($"vec_id" < k)
-      .select($"key", $"vec_id".cast("long"), $"v").collect()
+    // at most PqSub keys (the PQ codebooks), k seeds each
+    val seeds = Bounded.rows(rows.filter($"vec_id" < k)
+        .select($"key", $"vec_id".cast("long"), $"v"), PqSub * k, "Lloyd seeds")
       .groupBy(_.getInt(0))
       .map { case (key, rs) =>
         key -> rs.map(r => Centroid(r.getLong(1), boxed(r.getSeq[java.lang.Double](2))))
@@ -888,7 +889,8 @@ object SimilarityQueries {
       }
     var fit = LloydFit(metric, seeds)
     for (_ <- 0 until iters if seeds.nonEmpty) {
-      val means = roundMeans(rows, fit).collect()
+      // a mean per seed cell and dimension of the PqSub · PqSubDim width
+      val means = Bounded.rows(roundMeans(rows, fit), PqSub * k * PqSub * PqSubDim, "Lloyd means")
         .groupBy(r => (r.getInt(0), r.getLong(1)))
         .map { case (cell, rs) =>
           cell -> rs.sortBy(_.getInt(2))
@@ -1406,7 +1408,8 @@ object SimilarityQueries {
   private[graft] def rnnSplitFrames(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     import spark.implicits._
-    val k = semDedupK(embCatalogCount(spark, dir))
+    val n = embCatalogCount(spark, dir)
+    val k = semDedupK(n)
     // eager checkpoint: the assignment feeds the occupancy count, the seed
     // draw AND both sides of the split frame's pair join — each scan
     // would otherwise pay the n·k dot products again
@@ -1422,10 +1425,13 @@ object SimilarityQueries {
     // hot members only (n log n, never quadratic)
     val wSeed = Window.partitionBy($"cid")
       .orderBy(md5($"vec_id".cast("string")), $"vec_id")
-    val seeds = assigned.join(broadcast(hot), Seq("cid"))
-      .withColumn("srk", row_number().over(wSeed))
-      .filter($"srk" <= $"nsub")
-      .select($"cid", $"srk", $"v").collect()
+    // Σ ⌈occ / target⌉ over the hot cells is at most n / target + #hot,
+    // and each hot cell holds more than RnnSplitBudget vectors
+    val seeds = Bounded.rows(assigned.join(broadcast(hot), Seq("cid"))
+        .withColumn("srk", row_number().over(wSeed))
+        .filter($"srk" <= $"nsub")
+        .select($"cid", $"srk", $"v"),
+      (n / SemDedupCellTarget + n / RnnSplitBudget).toInt, "RNN split seeds")
     // each hot member takes its max-cosine seed (tie → lowest seed rank);
     // a cold cell is no key of the fit, so its members keep sub = 0
     val subFit = LloydFit(Cosine, seeds.groupBy(_.getLong(0).toInt).map { case (cid, rs) =>
@@ -1875,12 +1881,12 @@ object SimilarityQueries {
       "opqalloc:" + SessionMemo.tableTag(dir, "embeddings")) {
       import spark.implicits._
       val emb = catalog(spark, dir)
-      val vars = emb.select(posexplode($"v").as(Seq("dim0", "x")))
+      val perDim = emb.select(posexplode($"v").as(Seq("dim0", "x")))
         .groupBy($"dim0")
         .agg(round(avg($"x" * $"x") - avg($"x") * avg($"x"), 6)
           .cast("decimal(18,6)").as("vr"))
         .select(($"dim0" + 1).as("dim"), $"vr")
-        .collect()
+      val vars = Bounded.rows(perDim, PqSub * PqSubDim, "OPQ variances")
         .map(r => (r.getInt(0), BigDecimal(r.getDecimal(1))))
       opqGreedy(vars.toIndexedSeq)
     }

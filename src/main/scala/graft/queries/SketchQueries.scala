@@ -82,8 +82,8 @@ object SketchQueries {
     // the sketch is one aggregate scalar (128 KB): collect it once and ship
     // it as a broadcast closed over by the probe UDF — probing via a column
     // would re-deserialize the bit array from Catalyst format per row
-    val bits = purchasers.agg(Sketches.bloom($"uid").as("bits"))
-      .head().getSeq[Long](0).toArray
+    val bits = Bounded.rows(purchasers.agg(Sketches.bloom($"uid").as("bits")), 1,
+      "bloom sketch").head.getSeq[Long](0).toArray
     val bcast = spark.sparkContext.broadcast(bits)
     val containsUdf = udf((uid: String) => Sketches.bloomContains(bcast.value, uid))
     val probed = signups

@@ -852,10 +852,10 @@ class FitterRoundsSpec extends SparkSpec {
   test("job pin: mmrRerank in a fresh session at sf0.01") {
     val s = spark.newSession()
     val jobs = jobsOf(s)(SimilarityQueries.mmrRerank(s, Sf01).collect())
-    // the candidate-pool collect and the pairwise-cosine collect over its
-    // local frame; the greedy rounds with their state and pick checkpoints
-    // ran 32
-    assert(jobs <= 6, s"mmrRerank ran $jobs jobs")
+    // the candidate-pool collect; the pairwise-cosine collect over its
+    // local frame ran 6, the greedy rounds with their state and pick
+    // checkpoints 32
+    assert(jobs <= 4, s"mmrRerank ran $jobs jobs")
   }
 
   test("job pin: textrank in a fresh session at sf0.01") {
@@ -870,11 +870,11 @@ class FitterRoundsSpec extends SparkSpec {
   test("job pin: markovSteady in a fresh session at sf0.01") {
     val s = spark.newSession()
     val jobs = jobsOf(s)(graft.queries.AnalyticQueries.markovSteady(s, Sf01).collect())
-    // the transition-count checkpoint (user window and count) and the
-    // collect of its rows; the transition matrix built in Spark (state
-    // distinct, absorbing anti-join, row totals) and the closing sort ran
-    // 12, the 20-round join chain 74
-    assert(jobs <= 5, s"markovSteady ran $jobs jobs")
+    // the held transition counts (user window and count); checkpointing
+    // them and collecting the checkpoint ran 5, the transition matrix
+    // built in Spark (state distinct, absorbing anti-join, row totals) and
+    // the closing sort 12, the 20-round join chain 74
+    assert(jobs <= 4, s"markovSteady ran $jobs jobs")
   }
 
   for ((name, face) <- Seq[(String, (SparkSession, String) => DataFrame)](
@@ -891,6 +891,39 @@ class FitterRoundsSpec extends SparkSpec {
       // (hits), 31 (labelProp) and 32 (coreness)
       assert(jobs <= 11, s"$name ran $jobs jobs")
     }
+
+  test("job pin: a session that holds the trade graph builds and collects " +
+    "each fixpoint graph face with no job") {
+    val s = spark.newSession()
+    graft.queries.GraphQueries.triangles(s, Sf01)
+    for ((name, face) <- Seq[(String, (SparkSession, String) => DataFrame)](
+        "pagerank" -> graft.queries.GraphQueries.pagerank,
+        "hits" -> graft.queries.GraphQueries.hits,
+        "labelProp" -> graft.queries.GraphQueries.labelProp,
+        "coreness" -> graft.queries.GraphQueries.coreness)) {
+      val jobs = jobsOf(s)(face(s, Sf01).collect())
+      // each re-ran the fact-table join and aggregate: 11 jobs apiece
+      assert(jobs == 0, s"$name ran $jobs jobs")
+    }
+  }
+
+  test("job pin: triangles after a graph face at sf0.01") {
+    val s = spark.newSession()
+    graft.queries.GraphQueries.pagerank(s, Sf01)
+    val jobs = jobsOf(s)(graft.queries.GraphQueries.triangles(s, Sf01).collect())
+    // the oriented-edge checkpoint, the wedge join and count, the nation
+    // join and the closing sort over the held local frames; re-running the
+    // fact join and the nation scan ran 23
+    assert(jobs <= 12, s"triangles ran $jobs jobs")
+  }
+
+  test("job pin: eventTransitions in a fresh session at sf0.01") {
+    val s = spark.newSession()
+    val jobs = jobsOf(s)(graft.queries.AnalyticQueries.eventTransitions(s, Sf01).collect())
+    // the user window and count behind the held transition counts; the
+    // checkpointed frame with its per-source window and closing sort ran 8
+    assert(jobs <= 4, s"eventTransitions ran $jobs jobs")
+  }
 
   test("job pin: embedPca in a fresh session at sf0.01") {
     val s = spark.newSession()

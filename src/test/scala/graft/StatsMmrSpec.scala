@@ -43,17 +43,33 @@ class StatsMmrSpec extends SparkSpec {
     }
   }
 
-  /** The former markovSteady: the rounds as Spark frames over the
-    * checkpointed transition and state frames, closed by the same sort. */
-  private def referenceMarkov(spark: SparkSession, dir: String): DataFrame = {
+  /** The former transition-count artifact: the user lead window and count. */
+  private def referenceCounts(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-    val art = graft.sources.Tables.events(spark, dir)
+    graft.sources.Tables.events(spark, dir)
       .select($"user_id", $"event_type", $"ts", $"event_id")
       .withColumn("to_type", lead($"event_type", 1).over(w))
       .groupBy($"event_type".as("from_type"), $"to_type")
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+  }
+
+  /** The former eventTransitions: a per-source window total over the
+    * counts, closed by a Spark sort. */
+  private def referenceTransitions(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    referenceCounts(spark, dir).filter($"to_type".isNotNull)
+      .withColumn("tot", sum($"n").over(Window.partitionBy($"from_type")))
+      .select($"from_type", $"to_type", $"n",
+        round($"n".cast("double") / $"tot".cast("double"), 6).as("p"))
+      .orderBy($"from_type", $"to_type")
+  }
+
+  /** The former markovSteady: the rounds as Spark frames over the
+    * checkpointed transition and state frames, closed by the same sort. */
+  private def referenceMarkov(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val art = referenceCounts(spark, dir).localCheckpoint()
     val raw = art.filter($"to_type".isNotNull)
     val states = art.select($"from_type".as("st")).distinct().localCheckpoint()
     val noOut = states
@@ -119,6 +135,52 @@ class StatsMmrSpec extends SparkSpec {
     val pi = got.map { case (st, b) => st -> java.lang.Double.longBitsToDouble(b) }.toMap
     assert(pi.keySet == Set("a", "b", "z"))
     assert(pi("z") > 0.99 && pi("a") < 0.01 && pi("b") < 0.01, s"$pi")
+  }
+
+  /** An events table of `streams`, each user's event types in time order. */
+  private def eventsDir(streams: Seq[Seq[String]]): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-events").toString
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    streams.zipWithIndex.flatMap { case (types, u) =>
+      types.zipWithIndex.map { case (t, i) =>
+        (u.toLong, t, new java.sql.Timestamp(t0 + i * 60000L), u * 100L + i)
+      }
+    }.toDF("user_id", "event_type", "ts", "event_id")
+      .coalesce(1).write.parquet(s"$dir/events.parquet")
+    dir
+  }
+
+  test("eventTransitions: P built on the driver gives the former window " +
+    "plan's rows in its order, bit for bit — sf0.001, sf0.01 and a null " +
+    "event type") {
+    val nulls = eventsDir(Seq(Seq("a", null, "b", "a"), Seq(null, "a", null), Seq("b")))
+    for (dir <- Seq(sf, sf01, nulls)) {
+      val local = AnalyticQueries.eventTransitions(spark, dir)
+      assert(local.queryExecution.analyzed.collectFirst {
+        case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r
+      }.nonEmpty, dir)
+      val reference = referenceTransitions(spark, dir)
+      assert(local.schema.map(f => f.name -> f.dataType) ==
+        reference.schema.map(f => f.name -> f.dataType), dir)
+      val got = local.collect().toSeq.map(r =>
+        (r.getString(0), r.getString(1), r.getLong(2), java.lang.Double.doubleToRawLongBits(r.getDouble(3))))
+      assert(got == reference.collect().toSeq.map(r =>
+        (r.getString(0), r.getString(1), r.getLong(2), java.lang.Double.doubleToRawLongBits(r.getDouble(3)))), dir)
+      if (dir == nulls) assert(got.count(_._1 == null) == 2, got)
+    }
+  }
+
+  test("eventTransitions and markovSteady: more transitions than the event " +
+    "types bound fail with an error that names the site") {
+    // every ordered pair of 8 types, plus each stream's end: 72 count rows
+    val types = ('a' to 'h').map(_.toString)
+    val dir = eventsDir(for (x <- types; y <- types) yield Seq(x, y))
+    val bound = (AnalyticQueries.EventTypes.length + 1) * (AnalyticQueries.EventTypes.length + 1)
+    for (face <- Seq[(SparkSession, String) => DataFrame](
+        AnalyticQueries.eventTransitions, AnalyticQueries.markovSteady)) {
+      val e = intercept[IllegalStateException](face(spark, dir))
+      assert(e.getMessage.startsWith(s"event transitions: more than $bound rows"), e.getMessage)
+    }
   }
 
   test("Bounded.StringOrder: the driver sorts strings as Spark's ascending " +
